@@ -10,12 +10,12 @@ order (ordered-dict dedup realestate_index_scraper.py:474; drop_duplicates
                 host_bucket with the bucket's state SEGMENT rows.
                 host_bucket is a pure function of url_id, so every duplicate
                 of a url lands in the same group. A bucket's seen set is the
-                UNION of its live segments; each segment row is an IMMUTABLE
+                UNION of its live segments; each segment is an IMMUTABLE
                 sorted run — blocked-Bloom + cuckoo filter bytes (sized to
                 the run) PLUS the run's sorted exact key arrays (60-bit sha1
                 url_id + independent 64-bit xxhash64, packed int64 binary —
-                16 bytes/url, no row materialization). Inside (numpy/pandas,
-                vectorized):
+                16 bytes/url, no row materialization). Inside (numpy over
+                Arrow, vectorized):
                 (a) keep-first: np.lexsort on (url_id, depth, seed, page,
                     link_order, parent) + first-occurrence mask — the
                     group-local keep-first IS the global keep-first;
@@ -50,34 +50,23 @@ order (ordered-dict dedup realestate_index_scraper.py:474; drop_duplicates
   tracking the binary-counter bound).
 
 Per epoch that is ONE shuffle and ONE JVM<->Python crossing, no join and no
-aggregation. Crucially the per-epoch ARROW cost is O(batch) rows + the
-bucket's state BYTES: the previous design unioned the whole seen set into
-the cogroup input as zero-padded rows (~60 bytes/row through Arrow + a
-pandas MultiIndex probe per epoch — the r2 verdict's #1 scale-killer); the
-packed key arrays cross as single binary cells at memcpy speed (16
-bytes/url) and probe via searchsorted, so per-epoch dedup time is dominated
-by the batch, not the crawl's history (bench.py --growth evidences the
-near-flat epoch time as the seen set grows).
-
-SEGMENT-STORE BACKEND (store_root=..., the engine default): even the
-touched buckets' state bytes leave the dataflow entirely. Payloads live in
-content-addressed write-once files (operators/segstore.py — the same shape
-as Structured Streaming's per-partition state-store files); the cogroup's
-state side carries METADATA rows only (bucket, seg, lo, n_items, epoch,
-file), the probing worker loads payloads through a process-level LRU that
-immutable segments keep trivially coherent (spark.python.worker.reuse makes
-it survive across epochs), and a new run is written to the store by the
-worker that built it — so per-epoch Arrow/shuffle traffic is O(batch rows +
-touched-bucket metadata) in, O(admitted rows + one metadata row per changed
-bucket) out, regardless of the seen set's size. Payload I/O is lazy at PART
-granularity: a probe loads only a segment's FILTERS (bloom + cuckoo, ~0.6
-B/key — ~3% of a run's bytes) on first touch; the packed key arrays (16
-B/key) load only when a bloom positive needs exact resolve or a tier merge
-absorbs the run — so a fresh-heavy epoch's read cost tracks the batch's
-hit count, not the history's size. New-run writes are O(new keys),
-LSM-amortized. The inline variant (store_root=None)
-keeps payloads in the rows — self-contained parquet, no side files — for
-store-less callers and as the differential-testing oracle for the store.
+aggregation, and the state bytes leave the dataflow entirely. Payloads live
+in content-addressed write-once files (operators/segstore.py — the same
+shape as Structured Streaming's per-partition state-store files); the
+cogroup's state side carries METADATA rows only (bucket, seg, lo, n_items,
+epoch, file), the probing worker loads payloads through a process-level LRU
+that immutable segments keep trivially coherent (spark.python.worker.reuse
+makes it survive across epochs), and a new run is written to the store by
+the worker that built it — so per-epoch Arrow/shuffle traffic is O(batch
+rows + touched-bucket metadata) in, O(admitted rows + one metadata row per
+changed bucket) out, regardless of the seen set's size (bench.py --growth
+evidences the near-flat epoch time as the seen set grows). Payload I/O is
+lazy at PART granularity: a probe loads only a segment's FILTERS (bloom +
+cuckoo, ~0.6 B/key — ~3% of a run's bytes) on first touch; the packed key
+arrays (16 B/key) load only when a bloom positive needs exact resolve or a
+tier merge absorbs the run — so a fresh-heavy epoch's read cost tracks the
+batch's hit count, not the history's size. New-run writes are O(new keys),
+LSM-amortized.
 
 At 10^10 urls the state is ~160 GB across 4096 buckets (~40 MB/bucket —
 fine per task). Storage-bucketing seen_state by host_bucket removes the
@@ -127,7 +116,6 @@ reads it at all.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -154,21 +142,20 @@ _FLAT_SCHEMA = (
     "co_seed_id long, co_page int, co_link_order int, co_depth int, "
     "lin_parent long"
 )
+# seen_state metadata rows (operators/segstore.py): the payload lives in a
+# content-addressed write-once file; only these rows ride the Spark plan.
 # seg: the segment's id within its bucket (newer = higher); lo: the row
 # supersedes segments in [lo, seg) — lo == seg for a pure append, lo == 0
 # for a full rewrite. A bucket's LIVE segments are the latest row per
 # (bucket, seg) minus every seg covered by a higher row's interval.
-_STATE_SCHEMA = (
-    "host_bucket int, seg int, lo int, bloom binary, cuckoo binary, "
-    "ids binary, hs binary, n_items long, epoch int"
-)
-_STATE_COLS = ["host_bucket", "seg", "lo", "bloom", "cuckoo", "ids", "hs", "n_items", "epoch"]
-# store-backed metadata shape (operators/segstore.py): the payload lives in
-# a content-addressed write-once file; only these rows ride the Spark plan
-_META_STATE_SCHEMA = (
+_META_SCHEMA = (
     "host_bucket int, seg int, lo int, n_items long, epoch int, file string"
 )
-_META_COLS = ["host_bucket", "seg", "lo", "n_items", "epoch", "file"]
+_PA_META = pa.schema(
+    [("host_bucket", pa.int32()), ("seg", pa.int32()), ("lo", pa.int32()),
+     ("n_items", pa.int64()), ("epoch", pa.int32()), ("file", pa.string())]
+)
+_META_COLS = _PA_META.names
 
 # probe fan-out bound: a candidate checks at most this many segment blooms.
 # The binary-counter merge rule keeps the live count at ~log2(|seen|/batch)
@@ -231,11 +218,6 @@ _PAYLOAD_COLS = [
     "url_id", "url", "host_bucket", "priority",
     "co_seed_id", "co_page", "co_link_order", "co_depth", "lin_parent",
 ]
-_OUT_SCHEMA = (
-    _FLAT_SCHEMA
-    + ", seg int, lo int, bloom binary, cuckoo binary, ids binary, hs binary, "
-    "n_items long, epoch int"
-)
 _OUT_META_SCHEMA = (
     _FLAT_SCHEMA + ", seg int, lo int, n_items long, epoch int, file string"
 )
@@ -256,12 +238,10 @@ def probe_sorted_keys(
     return found
 
 
-def _live_segments(right: pd.DataFrame, store_root: str | None = None) -> list[dict]:
-    """Parse a bucket's state rows into live segments, seg-ascending.
-
-    With `store_root`, rows are METADATA (file column) and each live
-    segment's payload is loaded from the store through the worker-process
-    LRU (segstore.read_segment) — dead rows never touch the store at all.
+def _live_segments(right: pa.Table, store_root: str) -> list[dict]:
+    """Parse a bucket's METADATA rows into live segments, seg-ascending;
+    each live segment's filters load from the store through the
+    worker-process LRU — dead rows never touch the store at all.
 
     Engine paths hand this function live rows only (the snapshot carry drops
     superseded rows eagerly), but storage reads between compactions can
@@ -272,52 +252,37 @@ def _live_segments(right: pd.DataFrame, store_root: str | None = None) -> list[d
     coverage is transitive (a dead row's keys, and the keys of everything
     ITS interval covered, live on inside whichever row absorbed it, even
     though the absorber's own interval need not reach that far down)."""
-    order = np.lexsort((-right["epoch"].to_numpy(), -right["seg"].to_numpy()))
+    seg_a, lo_a = right["seg"].to_numpy(), right["lo"].to_numpy()
+    n_a, files = right["n_items"].to_numpy(), right["file"].to_pylist()
+    order = np.lexsort((-right["epoch"].to_numpy(), -seg_a))
     segs: list[dict] = []
     min_lo = None
     prev_seg = None
     for i in order:
-        seg = int(right["seg"].iloc[i])
-        lo = int(right["lo"].iloc[i])
+        seg, lo = int(seg_a[i]), int(lo_a[i])
         covered = (min_lo is not None and min_lo <= seg) or seg == prev_seg
         prev_seg = seg
         min_lo = lo if min_lo is None else min(min_lo, lo)
         if covered:
             continue  # superseded: same seg at an older epoch, or inside
             #           a newer row's (transitive) [lo, seg) coverage
-        if store_root is None:
-            ids = np.frombuffer(bytes(right["ids"].iloc[i]), dtype=np.int64)
-            segs.append(
-                {
-                    "seg": seg,
-                    "lo": lo,
-                    "bloom_b": bytes(right["bloom"].iloc[i]),
-                    "cuckoo_b": bytes(right["cuckoo"].iloc[i]),
-                    "ids": ids,
-                    "hs": np.frombuffer(bytes(right["hs"].iloc[i]), dtype=np.int64),
-                    "n": len(ids),
-                }
-            )
-        else:
-            # LAZY keys: only the probe prefilters (bloom + cuckoo, ~3% of
-            # a run's bytes) load here; the packed key arrays load through
-            # seg_keys() the first time something actually needs them —
-            # exact resolve of a bloom positive, a tier merge, revocation.
-            # A fresh-heavy epoch therefore reads O(filters), not O(|seen|).
-            fname = right["file"].iloc[i]
-            bloom_b, cuckoo_b, _ = segstore.read_segment_filters(store_root, fname)
-            segs.append(
-                {"seg": seg, "lo": lo, "bloom_b": bloom_b, "cuckoo_b": cuckoo_b,
-                 "n": int(right["n_items"].iloc[i]),
-                 "_keys_from": (store_root, fname)}
-            )
+        # LAZY keys: only the probe prefilters (bloom + cuckoo, ~3% of a
+        # run's bytes) load here; the packed key arrays load through
+        # seg_keys() the first time something actually needs them — exact
+        # resolve of a bloom positive, a tier merge, revocation. A
+        # fresh-heavy epoch therefore reads O(filters), not O(|seen|).
+        bloom_b, cuckoo_b, _ = segstore.read_segment_filters(store_root, files[i])
+        segs.append(
+            {"seg": seg, "lo": lo, "bloom_b": bloom_b, "cuckoo_b": cuckoo_b,
+             "n": int(n_a[i]), "_keys_from": (store_root, files[i])}
+        )
     segs.reverse()  # seg-ascending (oldest first)
     return segs
 
 
 def seg_keys(s: dict) -> tuple[np.ndarray, np.ndarray]:
     """A segment's packed sorted key arrays, loading (and memoizing) them
-    from the store on first need — see _live_segments' lazy store branch."""
+    from the store on first need — see _live_segments' lazy key load."""
     if "ids" not in s:
         s["ids"], s["hs"] = segstore.read_segment_keys(*s["_keys_from"])
     return s["ids"], s["hs"]
@@ -430,7 +395,7 @@ def emit_run(
     (id, h) ordering, the tier_absorb decision, merge of any absorbed
     segments' keys, and filter construction. ONE implementation shared by
     the batch cogroup (_fused_fn) and the streaming state operator
-    (streaming/stateful._dedup_group_store) so the two backends can never
+    (streaming/stateful._dedup_group_store) so the two operators can never
     desynchronize on seg_id/lo/absorb semantics. Returns
     (run_ids, run_hs, seg_id, lo, bloom_bytes, cuckoo_bytes); lo is the
     run's coverage floor (== seg_id for a pure append, the lowest absorbed
@@ -456,23 +421,7 @@ def emit_run(
     return run_ids, run_hs, seg_id, lo, bloom_b, cuckoo_b
 
 
-def _empty_state(store: bool = False) -> pd.DataFrame:
-    cols = {
-        "host_bucket": pd.Series([], dtype="int32"),
-        "seg": pd.Series([], dtype="int32"),
-        "lo": pd.Series([], dtype="int32"),
-    }
-    if not store:
-        for c in ("bloom", "cuckoo", "ids", "hs"):
-            cols[c] = pd.Series([], dtype="object")
-    cols["n_items"] = pd.Series([], dtype="int64")
-    cols["epoch"] = pd.Series([], dtype="int32")
-    if store:
-        cols["file"] = pd.Series([], dtype="object")
-    return pd.DataFrame(cols)
-
-
-# arrow output field layout — must mirror _OUT_SCHEMA / _OUT_META_SCHEMA
+# arrow output field layout — must mirror _OUT_META_SCHEMA
 _PA_PAYLOAD_FIELDS = [
     ("url_id", pa.int64()), ("url", pa.string()), ("host_bucket", pa.int32()),
     ("priority", pa.float64()), ("co_seed_id", pa.int64()), ("co_page", pa.int32()),
@@ -482,40 +431,33 @@ _PA_PAYLOAD_FIELDS = [
 # value-identical to the previous pandas implementation)
 _PA_STATE_ZEROS = [0, "", 0, 0.0, 0, 0, 0, 0, 0]
 _PA_OUT_META = pa.schema(
-    _PA_PAYLOAD_FIELDS
-    + [("seg", pa.int32()), ("lo", pa.int32()), ("n_items", pa.int64()),
-       ("epoch", pa.int32()), ("file", pa.string())]
+    _PA_PAYLOAD_FIELDS + [f for f in _PA_META if f.name != "host_bucket"]
 )
-_PA_OUT_INLINE = pa.schema(
-    _PA_PAYLOAD_FIELDS
-    + [("seg", pa.int32()), ("lo", pa.int32()), ("bloom", pa.binary()),
-       ("cuckoo", pa.binary()), ("ids", pa.binary()), ("hs", pa.binary()),
-       ("n_items", pa.int64()), ("epoch", pa.int32())]
-)
+
+
+def _meta_table(rows: list[tuple]) -> pa.Table:
+    """(host_bucket, seg, lo, n_items, epoch, file) tuples -> metadata rows
+    (the one place the revoke/merge/split UDF outputs get their types)."""
+    return pa.Table.from_pylist([dict(zip(_META_COLS, r)) for r in rows], schema=_PA_META)
 
 
 def _pa_col(arr) -> pa.Array:
     return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
 
 
-def _fused_fn(epoch: int, capacity: int, store_root: str | None = None):
+def _fused_fn(epoch: int, store_root: str):
     """Cogroup body: keep-first + per-segment probe + new-run emission
     (size-tiered absorb). left = flattened candidate rows (full payload +
-    url_h); right = the bucket's live segment rows (immutable sorted runs:
-    filters + packed key arrays; an absent group means an empty seen set —
-    no seen-ids-without-state desync is possible by construction). Returns
-    the kept-first NEW candidate rows (state columns NULL) plus AT MOST ONE
-    new segment row (bloom non-NULL): an all-dup bucket emits no state row,
-    an admitting bucket emits only its new run plus whatever the tiering
-    absorbed — un-absorbed segments never re-cross Arrow outbound (the
-    caller carries them forward JVM-side, bit-identical). `capacity` is
-    kept for signature compatibility; runs size their own filters.
-
-    With `store_root` (the segment-store backend, operators/segstore.py),
-    `right` carries METADATA rows; payloads are read through the worker's
-    segment cache and the new run is WRITTEN to the store from here — the
-    emitted state row is metadata only (file non-NULL marks it), so no
-    payload bytes cross Arrow in either direction.
+    url_h); right = the bucket's live segment METADATA rows (an absent group
+    means an empty seen set — no seen-ids-without-state desync is possible
+    by construction). Payloads are read through the worker's segment cache
+    (operators/segstore.py) and the new run is WRITTEN to the store from
+    here. Returns the kept-first NEW candidate rows (state columns NULL)
+    plus AT MOST ONE new segment metadata row (file non-NULL): an all-dup
+    bucket emits no state row, an admitting bucket emits only its new run
+    plus whatever the tiering absorbed — un-absorbed segments never
+    re-cross Arrow outbound (the caller carries them forward JVM-side,
+    bit-identical), and no payload bytes cross Arrow in either direction.
 
     ARROW-NATIVE (applyInArrow): the decisions need only the int64 key/
     order columns (zero-copy numpy views of the Arrow buffers); the url
@@ -524,16 +466,14 @@ def _fused_fn(epoch: int, capacity: int, store_root: str | None = None):
     objects. The former pandas path built ~24M Python str objects per
     bench epoch on the way in and again on the way out — measured ~12% of
     the whole dedup epoch at sf-bench scale."""
-    out_schema = _PA_OUT_META if store_root is not None else _PA_OUT_INLINE
-    payload_names = [f[0] for f in _PA_PAYLOAD_FIELDS]
 
     def fn(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0:
             # no candidates touched this bucket: nothing admitted, nothing
             # changed — emit nothing (prior segments are carried JVM-side)
-            return out_schema.empty_table()
+            return _PA_OUT_META.empty_table()
         left = left.combine_chunks()
-        segs = [] if right.num_rows == 0 else _live_segments(right.to_pandas(), store_root)
+        segs = _live_segments(right, store_root) if right.num_rows else []
         bucket = left["host_bucket"][0].as_py()
 
         ids = left["url_id"].to_numpy()
@@ -583,7 +523,7 @@ def _fused_fn(epoch: int, capacity: int, store_root: str | None = None):
         # caller reuses the prior rows JVM-side, and the bucket's state
         # bytes never cross Arrow outbound
         if not n:
-            return out_schema.empty_table()
+            return _PA_OUT_META.empty_table()
 
         # (d) canonical ordering + size-tiered absorb + filter build — the
         # shared run-emission rule (state bytes must not depend on
@@ -608,22 +548,16 @@ def _fused_fn(epoch: int, capacity: int, store_root: str | None = None):
         # epoch — the engine's delta write (filter epoch == current) writes
         # exactly these rows and the read side keeps the latest per bucket
         ep_a = np.zeros(n + 1, dtype=np.int32); ep_a[-1] = epoch
-        arrays += [pa.array(seg_a), pa.array(lo_a)]
-        if store_root is None:
-            for payload in (bloom_b, cuckoo_b, run_ids.tobytes(), run_hs.tobytes()):
-                arrays.append(pa.array([None] * n + [payload], type=pa.binary()))
-            arrays += [pa.array(ni_a), pa.array(ep_a)]
-        else:
-            # write-once, content-addressed: retries/replays converge on the
-            # same name; only this metadata row crosses Arrow outbound
-            fname = segstore.write_segment(
-                store_root, bucket, seg_id, bloom_b, cuckoo_b, run_ids, run_hs
-            )
-            arrays += [
-                pa.array(ni_a), pa.array(ep_a),
-                pa.array([None] * n + [fname], type=pa.string()),
-            ]
-        return pa.Table.from_arrays(arrays, schema=out_schema)
+        # write-once, content-addressed: retries/replays converge on the
+        # same name; only this metadata row crosses Arrow outbound
+        fname = segstore.write_segment(
+            store_root, bucket, seg_id, bloom_b, cuckoo_b, run_ids, run_hs
+        )
+        arrays += [
+            pa.array(seg_a), pa.array(lo_a), pa.array(ni_a), pa.array(ep_a),
+            pa.array([None] * n + [fname], type=pa.string()),
+        ]
+        return pa.Table.from_arrays(arrays, schema=_PA_OUT_META)
 
     return fn
 
@@ -632,7 +566,8 @@ def revoke_seen(
     seen_state: DataFrame,
     revoked: DataFrame,
     epoch: int,
-    store_root: str | None = None,
+    *,
+    store_root: str,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Recrawl revocation (north_star deletion capability): remove urls from
     the seen set so the next discovery re-admits them. Reference analog:
@@ -656,14 +591,14 @@ def revoke_seen(
     buckets = [int(r[0]) for r in rev.select("host_bucket").distinct().collect()]
     state_src = seen_state.filter(F.col("host_bucket").isin(buckets))
 
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if right.empty or left.empty:
+    def fn(left: pa.Table, right: pa.Table) -> pa.Table:
+        if right.num_rows == 0 or left.num_rows == 0:
             # nothing seen here / nothing requested
-            return _empty_state(store=store_root is not None)
+            return _PA_META.empty_table()
         segs = _live_segments(right, store_root)
-        bucket = int(right["host_bucket"].iloc[0])
-        q_ids = left["url_id"].to_numpy(dtype="int64")
-        q_hs = left["url_h"].to_numpy(dtype="int64")
+        bucket = right["host_bucket"][0].as_py()
+        q_ids = left["url_id"].to_numpy()
+        q_hs = left["url_h"].to_numpy()
         # canonical (id, h) processing order: deterministic state bytes
         o = np.lexsort((q_hs, q_ids))
         q_ids, q_hs = q_ids[o], q_hs[o]
@@ -703,39 +638,19 @@ def revoke_seen(
             bloom.n_items = len(seen_ids2)
             cuckoo = seenset.CuckooFilter.from_bytes(s["cuckoo_b"])
             cuckoo.delete(removed_ids.view(np.uint64))
-            if store_root is not None:
-                # new content -> new name; the row supersedes per
-                # (bucket, seg) and the old file becomes a GC orphan
-                fname = segstore.write_segment(
-                    store_root, bucket, s["seg"], bloom.to_bytes(),
-                    cuckoo.to_bytes(), seen_ids2, seen_hs2,
-                )
-                outs.append(
-                    (bucket, s["seg"], s["lo"], len(seen_ids2), epoch, fname)
-                )
-            else:
-                outs.append(
-                    (bucket, s["seg"], s["lo"], bloom.to_bytes(), cuckoo.to_bytes(),
-                     seen_ids2.tobytes(), seen_hs2.tobytes(), len(seen_ids2), epoch)
-                )
-        if not outs:
-            return _empty_state(store=store_root is not None)
-        out = pd.DataFrame(
-            outs, columns=_META_COLS if store_root is not None else _STATE_COLS
-        )
-        out["host_bucket"] = out["host_bucket"].astype("int32")
-        out["seg"] = out["seg"].astype("int32")
-        out["lo"] = out["lo"].astype("int32")
-        out["n_items"] = out["n_items"].astype("int64")
-        out["epoch"] = out["epoch"].astype("int32")
-        return out
+            # new content -> new name; the row supersedes per (bucket, seg)
+            # and the old file becomes a GC orphan
+            fname = segstore.write_segment(
+                store_root, bucket, s["seg"], bloom.to_bytes(),
+                cuckoo.to_bytes(), seen_ids2, seen_hs2,
+            )
+            outs.append((bucket, s["seg"], s["lo"], len(seen_ids2), epoch, fname))
+        return _meta_table(outs)
 
     out = (
         rev.groupBy("host_bucket")
         .cogroup(state_src.groupBy("host_bucket"))
-        .applyInPandas(
-            fn, _META_STATE_SCHEMA if store_root is not None else _STATE_SCHEMA
-        )
+        .applyInArrow(fn, _META_SCHEMA)
         .persist()
     )
     carried = seen_state.join(
@@ -746,24 +661,21 @@ def revoke_seen(
     return out.unionByName(carried), [out]
 
 
-def merge_segments(seen_state: DataFrame, store_root: str | None = None) -> DataFrame:
+def merge_segments(seen_state: DataFrame, *, store_root: str) -> DataFrame:
     """Fold each bucket's live segment rows into ONE run (seg = the max live
     seg id, lo = 0, epoch = the bucket's newest row epoch — all
-    deterministic). For INLINE state the engine runs this as its seen_state
-    compaction transform: that compaction rewrites the payload-carrying
-    parquet rows anyway, so the fold rides along at no extra I/O. For the
-    SEGMENT-STORE backend the engine's compaction folds metadata only —
-    running this fold on a cadence there would add an O(|seen|) payload
-    rewrite per cadence (linear write amplification, which the
-    binary-counter tier rule exists to avoid) — so with a store this is an
-    EXPLICIT maintenance op (pre-export, read-amplification floor resets).
-    Input rows must already be live (CrawlEngine._latest_state_rows).
-    With `store_root` the fold reads/writes segment-store files and emits
-    metadata rows; retired filenames become orphans for gc_segments."""
+    deterministic). The engine's compaction folds metadata only — running
+    this fold on a cadence would add an O(|seen|) payload rewrite per
+    cadence (linear write amplification, which the binary-counter tier
+    rule exists to avoid) — so this is an EXPLICIT maintenance op
+    (pre-export, read-amplification floor resets). Input rows must already
+    be live (CrawlEngine._latest_state_rows). The fold reads/writes
+    segment-store files and emits metadata rows; retired filenames become
+    orphans for gc_segments."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        segs = _live_segments(pdf, store_root)
-        bucket = int(pdf["host_bucket"].iloc[0])
+    def fn(rows: pa.Table) -> pa.Table:
+        segs = _live_segments(rows, store_root)
+        bucket = rows["host_bucket"][0].as_py()
         if segs:
             all_keys = [seg_keys(s) for s in segs]
             ids = np.concatenate([k[0] for k in all_keys])
@@ -776,60 +688,34 @@ def merge_segments(seen_state: DataFrame, store_root: str | None = None) -> Data
             hs = np.zeros(0, dtype=np.int64)
             seg_id = 0
         bloom_b, cuckoo_b = _build_run(ids, hs)
-        epoch = int(pdf["epoch"].max())
-        if store_root is not None:
-            fname = segstore.write_segment(
-                store_root, bucket, seg_id, bloom_b, cuckoo_b, ids, hs
-            )
-            out = pd.DataFrame(
-                [(bucket, seg_id, 0, len(ids), epoch, fname)], columns=_META_COLS
-            )
-        else:
-            out = pd.DataFrame(
-                [(bucket, seg_id, 0, bloom_b, cuckoo_b, ids.tobytes(), hs.tobytes(),
-                  len(ids), epoch)],
-                columns=_STATE_COLS,
-            )
-        out["host_bucket"] = out["host_bucket"].astype("int32")
-        out["seg"] = out["seg"].astype("int32")
-        out["lo"] = out["lo"].astype("int32")
-        out["n_items"] = out["n_items"].astype("int64")
-        out["epoch"] = out["epoch"].astype("int32")
-        return out
+        epoch = int(rows["epoch"].to_numpy().max())
+        fname = segstore.write_segment(
+            store_root, bucket, seg_id, bloom_b, cuckoo_b, ids, hs
+        )
+        return _meta_table([(bucket, seg_id, 0, len(ids), epoch, fname)])
 
-    return seen_state.groupBy("host_bucket").applyInPandas(
-        fn, _META_STATE_SCHEMA if store_root is not None else _STATE_SCHEMA
-    )
+    return seen_state.groupBy("host_bucket").applyInArrow(fn, _META_SCHEMA)
 
 
 def split_seen_state(
-    seen_state: DataFrame,
-    n_old: int,
-    n_new: int,
-    capacity: int = seenset.DEFAULT_PARTITION_CAPACITY,
-    store_root: str | None = None,
+    seen_state: DataFrame, n_old: int, n_new: int, *, store_root: str
 ) -> DataFrame:
     """Raise the host-bucket fan-out n_old -> n_new (SURVEY §4.1 hot-bucket
     splitting): because host_bucket = url_id % n, doubling (or any 2^k
     multiple) is CONSISTENT — bucket b's keys land only in buckets
     {b + j*n_old}, so each state row splits locally. Filters are rebuilt per
-    new bucket from the key arrays the row already carries (no seen_exact
-    scan, no shuffle — mapInPandas over the state rows, embarrassingly
-    parallel). The sorted key arrays stay sorted under the mask, so split
-    state bytes remain partition-layout-independent."""
+    new bucket from the row's segment keys (no seen_exact scan, no shuffle
+    — mapInArrow over the state rows, embarrassingly parallel). The sorted
+    key arrays stay sorted under the mask, so split state bytes remain
+    partition-layout-independent."""
     assert n_new > n_old and n_new % n_old == 0, (n_old, n_new)
 
-    def fn(it):
-        for pdf in it:
+    def fn(batches):
+        for batch in batches:
             outs = []
-            for i in range(len(pdf)):
-                row = pdf.iloc[i]
-                if store_root is not None:
-                    _bb, _cb, ids, hs = segstore.read_segment(store_root, row["file"])
-                else:
-                    ids = np.frombuffer(bytes(row["ids"]), dtype=np.int64)
-                    hs = np.frombuffer(bytes(row["hs"]), dtype=np.int64)
-                for nb in range(int(row["host_bucket"]), n_new, n_old):
+            for row in batch.to_pylist():
+                _bb, _cb, ids, hs = segstore.read_segment(store_root, row["file"])
+                for nb in range(row["host_bucket"], n_new, n_old):
                     sel = (ids % n_new) == nb
                     sids, shs = ids[sel], hs[sel]
                     bloom_b, cuckoo_b = _build_run(sids, shs)
@@ -837,57 +723,34 @@ def split_seen_state(
                     # parent's segment history (coverage intervals stay
                     # valid — each sibling got the same seg-id set), and
                     # later appends continue from the shared max seg
-                    if store_root is not None:
-                        fname = segstore.write_segment(
-                            store_root, nb, int(row["seg"]), bloom_b, cuckoo_b,
-                            sids, shs,
-                        )
-                        outs.append(
-                            (nb, int(row["seg"]), int(row["lo"]), len(sids),
-                             int(row["epoch"]), fname)
-                        )
-                    else:
-                        outs.append(
-                            (nb, int(row["seg"]), int(row["lo"]), bloom_b, cuckoo_b,
-                             sids.tobytes(), shs.tobytes(), len(sids), int(row["epoch"]))
-                        )
-            out = pd.DataFrame(
-                outs, columns=_META_COLS if store_root is not None else _STATE_COLS
-            )
-            if len(out):
-                out["host_bucket"] = out["host_bucket"].astype("int32")
-                out["seg"] = out["seg"].astype("int32")
-                out["lo"] = out["lo"].astype("int32")
-                out["n_items"] = out["n_items"].astype("int64")
-                out["epoch"] = out["epoch"].astype("int32")
-            yield out
+                    fname = segstore.write_segment(
+                        store_root, nb, row["seg"], bloom_b, cuckoo_b, sids, shs
+                    )
+                    outs.append(
+                        (nb, row["seg"], row["lo"], len(sids), row["epoch"], fname)
+                    )
+            yield from _meta_table(outs).to_batches()
 
-    return seen_state.mapInPandas(
-        fn, _META_STATE_SCHEMA if store_root is not None else _STATE_SCHEMA
-    )
+    return seen_state.mapInArrow(fn, _META_SCHEMA)
 
 
 def dedup_candidates(
     candidates: DataFrame,
     seen_state: DataFrame | None,
     epoch: int,
-    capacity: int = seenset.DEFAULT_PARTITION_CAPACITY,
+    *,
+    store_root: str,
     prune_state: bool = False,
-    store_root: str | None = None,
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """Returns (new_rows, full_seen_state_snapshot_for_epoch, persisted).
 
-    With `store_root` the SEGMENT-STORE backend is used (segstore module):
-    `seen_state` is the metadata table (_META_STATE_SCHEMA), payload bytes
-    live in write-once files the Python workers read through a process
-    cache and write directly — state payload crosses neither Arrow
-    direction nor any shuffle, so per-epoch dataflow is O(batch rows +
-    touched-bucket metadata). Without it, payloads ride inline in the
-    state rows (_STATE_SCHEMA) — self-contained, used by tests and
-    store-less callers.
-
-    `candidates` is FRONTIER-shaped. `seen_state` is SEEN_STATE-shaped
-    (None on the first epoch) and carries the whole seen set per bucket.
+    `candidates` is FRONTIER-shaped. `seen_state` is the segment metadata
+    table (_META_SCHEMA; None on the first epoch) and names the whole
+    seen set per bucket; the payload bytes live in write-once files under
+    `store_root` that the Python workers read through a process cache and
+    write directly (operators/segstore.py) — state payload crosses neither
+    Arrow direction nor any shuffle, so per-epoch dataflow is O(batch rows
+    + touched-bucket metadata).
     `persisted` are the frames this call cached internally — callers MUST
     unpersist them once new_rows/state have been consumed (the engine does;
     never clear the session-wide cache, other users' frames live there too).
@@ -915,10 +778,8 @@ def dedup_candidates(
         "lin_parent", F.coalesce(F.col("lin_parent"), F.lit(-1).cast("long"))
     )
     cand_side = flat.select(*_PAYLOAD_COLS, F.xxhash64("url").alias("url_h"))
-    state_schema = _META_STATE_SCHEMA if store_root is not None else _STATE_SCHEMA
-    state_cols = _META_COLS if store_root is not None else _STATE_COLS
     if seen_state is None:
-        state_src = spark.createDataFrame([], state_schema)
+        state_src = spark.createDataFrame([], _META_SCHEMA)
     elif prune_state:
         # state-input pruning: only the buckets this batch touches enter the
         # cogroup. The distinct-bucket collect is BOUNDED (<= fan-out ints,
@@ -940,14 +801,10 @@ def dedup_candidates(
     out = (
         cand_side.groupBy("host_bucket")
         .cogroup(state_src.groupBy("host_bucket"))
-        .applyInArrow(
-            _fused_fn(epoch, capacity, store_root),
-            _OUT_META_SCHEMA if store_root is not None else _OUT_SCHEMA,
-        )
+        .applyInArrow(_fused_fn(epoch, store_root), _OUT_META_SCHEMA)
         .persist()
     )
-    state_marker = "file" if store_root is not None else "bloom"
-    changed = out.filter(F.col(state_marker).isNotNull()).select(*state_cols)
+    changed = out.filter(F.col("file").isNotNull()).select(*_META_COLS)
     if seen_state is None:
         updated_state = changed
     else:
@@ -972,7 +829,7 @@ def dedup_candidates(
             "left_anti",
         )
         updated_state = changed.unionByName(carried)
-    new_flat = out.filter(F.col(state_marker).isNull()).select(*_PAYLOAD_COLS).withColumn(
+    new_flat = out.filter(F.col("file").isNull()).select(*_PAYLOAD_COLS).withColumn(
         "lin_parent",
         F.when(F.col("lin_parent") == -1, F.lit(None).cast("long")).otherwise(
             F.col("lin_parent")

@@ -12,9 +12,10 @@ probe. Design (north_star):
   - **Cuckoo filter** — 16-bit fingerprints, 4 slots/bucket, 2 candidate
     buckets; supports deletion (re-crawl revocation), bulk insert is
     vectorized with a per-item kick-loop fallback for overflow.
-  - Both serialize to bytes; one row per host_bucket in the `seen_state`
-    table (alongside the bucket's packed exact key arrays), carried
-    epoch -> epoch (explicit state, SURVEY T2).
+  - Both serialize to bytes, stored per immutable seen-set segment
+    (operators/segstore.py) alongside the run's packed exact key arrays;
+    the `seen_state` table carries the segments' metadata epoch -> epoch
+    (explicit state, SURVEY T2).
 
 Membership protocol (exact, not probabilistic): bloom-negative => definitely
 new (no resolve needed); bloom-positive => resolved exactly against the
@@ -289,18 +290,3 @@ class CuckooFilter:
         n_buckets, n_items = cls.HEADER.unpack_from(b)
         return cls(int(n_buckets), table.reshape(int(n_buckets), cls.SLOTS),
                    int(n_items))
-
-
-# Per-host_bucket filter capacity. At 10^10 urls / 4096 buckets this would be
-# ~2.4M per bucket (sized at table-creation time); the sandbox default covers
-# the bench's ~190k/bucket. NOTE: filters do not self-resize — a bucket
-# overflowing its capacity degrades bloom fpr (more exact-join work, still
-# correct); resizing needs a rebuild from the bucket's seen_exact partition.
-DEFAULT_PARTITION_CAPACITY = 1 << 18  # 256k urls per host_bucket
-
-
-def new_state_bytes(capacity: int = DEFAULT_PARTITION_CAPACITY) -> tuple[bytes, bytes]:
-    return (
-        BlockedBloom.for_capacity(capacity).to_bytes(),
-        CuckooFilter.for_capacity(capacity).to_bytes(),
-    )

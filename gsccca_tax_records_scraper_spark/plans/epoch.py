@@ -21,9 +21,10 @@ Shuffle budget per epoch (the 100-TB story):
     shuffle on host over <= budget*n_buckets survivor rows (skew-safe).
   - fetch: no shuffle (narrow mapInPandas over granted).
   - dedup: 1 shuffle (the cogroup on host_bucket = url_id hash — balanced,
-    no host skew); the bucket's whole seen set rides IN its state row as
-    filters + packed sorted key arrays, so no seen-side join or aggregation
-    exists. The state input is pruned to the batch's distinct buckets (one
+    no host skew); the bucket's whole seen set is named by its segment
+    metadata rows (filters + packed sorted key arrays live in the segment
+    store), so no seen-side join or aggregation exists. The state input is
+    pruned to the batch's distinct buckets (one
     bounded <= fan-out collect) and unchanged buckets emit no state row, so
     per-epoch Arrow AND parquet state traffic is O(touched buckets), with
     the probe/merge work O(batch).
@@ -152,32 +153,28 @@ class CrawlEngine:
         robots_rules: dict[str, RobotsRule] | None = None,
         compact_every: int = 8,
         split_threshold: int | None = None,
-        state_backend: str = "store",
     ):
         self.spark = spark
         self.store = CheckpointStore(workdir, spark)
         self.epoch_seconds = epoch_seconds
         self.robots_rules = robots_rules if robots_rules is not None else default_robots()
         self.compact_every = compact_every
-        # seen-set state backend (operators/dedup.py, operators/segstore.py):
-        #   "store"  — segment payloads in write-once content-addressed files
-        #              under <workdir>/segments, read/written by the Python
-        #              workers through a process-level cache; only metadata
-        #              rows ride the plan/checkpoint (the scale default —
-        #              state bytes cross no shuffle and no Arrow channel);
-        #   "inline" — payloads inline in the seen_state rows
-        #              (self-contained parquet; no side files).
-        # A workdir remembers its backend in the manifest meta — resuming
-        # adopts the committed value, so mixed-schema state is impossible.
+        # seen-set segment store (operators/dedup.py, operators/segstore.py):
+        # payloads in write-once content-addressed files under
+        # <workdir>/segments, read/written by the Python workers through a
+        # process-level cache; only metadata rows ride the plan/checkpoint.
+        # A workdir records its backend in the manifest meta; one committed
+        # with any other (payload rows, no `file` column) is refused rather
+        # than misread.
         if self.store.last_epoch() is not None:
-            state_backend = self.store.meta("state_backend", "inline")
-        assert state_backend in ("store", "inline"), state_backend
-        self.state_backend = state_backend
-        if state_backend == "store":
-            wd = self.store.workdir
-            self._seg_root = f"{wd}/segments" if isinstance(wd, str) else str(wd / "segments")
-        else:
-            self._seg_root = None
+            backend = self.store.meta("state_backend", "inline")
+            if backend != "store":
+                raise ValueError(
+                    f"workdir {self.store.workdir} holds seen-set state committed"
+                    f" by the {backend!r} backend; only the segment-store backend"
+                    " ('store') is supported — start a fresh workdir"
+                )
+        self._seg_root = f"{self.store.workdir}/segments"
         # hot-bucket splitting (SURVEY §4.1): when any bucket's seen count
         # exceeds this, the fan-out DOUBLES at that epoch's commit (state
         # rows split locally, frontier re-bucketed; the committed fan-out
@@ -320,8 +317,8 @@ class CrawlEngine:
     ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
         """Junk filter + robots gate + dedup; returns (new_rows, seen_state',
         persisted handles to unpersist after the epoch's writes commit).
-        The seen_state snapshot carries the whole seen set (filters + packed
-        exact keys per bucket), so the hot path reads ONE snapshot — the
+        The seen_state snapshot names the whole seen set (segment metadata
+        per bucket), so the hot path reads ONE snapshot — the
         seen_exact delta table is write-only here (export/lineage).
 
         `n_cand_bound` is the caller's upper bound on the candidate count
@@ -347,8 +344,8 @@ class CrawlEngine:
         self, seen_state: DataFrame, frontier: DataFrame, epoch: int
     ) -> tuple[DataFrame, DataFrame, int | None]:
         """Double the bucket fan-out when any bucket's seen count crosses
-        split_threshold. State rows split locally from the key arrays they
-        carry; the frontier is re-bucketed JVM-side (a pure column rewrite).
+        split_threshold. State rows split locally from their segments' key
+        arrays; the frontier is re-bucketed JVM-side (a pure column rewrite).
         Returns (state', frontier', n_new | None). The new fan-out is staged
         as manifest meta and becomes visible at this epoch's commit — a
         crash before commit leaves the old fan-out and old snapshots, so
@@ -449,27 +446,14 @@ class CrawlEngine:
                     "host_bucket", urltools.host_bucket_col(F.col("url_id"), nb)
                 ),
             )
-            # seen_state compaction: live-row filter always (delta-dir
-            # count back to O(1)). Folding the LSM stack to one run per
-            # bucket is backend-dependent: INLINE state carries payload
-            # bytes in the rows, so the compaction parquet rewrite is
-            # O(|seen|) regardless and merge_segments rides along free;
-            # with the SEGMENT STORE the metadata rewrite is O(live rows)
-            # and a payload fold would ADD an O(|seen|) rewrite every
-            # cadence — linear amplification the binary-counter merge rule
-            # exists to avoid — so store payloads are left to the tier rule
-            # (fold_segments() below is the explicit maintenance op).
+            # seen_state compaction: live-row filter (delta-dir count back
+            # to O(1)). The metadata rewrite is O(live rows); a payload fold
+            # would ADD an O(|seen|) rewrite every cadence — linear
+            # amplification the binary-counter merge rule exists to avoid —
+            # so payloads are left to the tier rule (fold_segments() below
+            # is the explicit maintenance op).
             st.compact_deltas(
-                self.spark,
-                "seen_state",
-                epoch,
-                transform=(
-                    self._latest_state_rows
-                    if self._seg_root is not None
-                    else lambda df: dedup.merge_segments(
-                        self._latest_state_rows(df), store_root=None
-                    )
-                ),
+                self.spark, "seen_state", epoch, transform=self._latest_state_rows
             )
             compacted = True
         else:
@@ -479,7 +463,7 @@ class CrawlEngine:
         # that retired the old metadata: files the committed metadata no
         # longer names (absorbed runs, pre-revocation rewrites, crash
         # orphans) are reclaimed; a crash before this point only delays GC
-        if compacted and self._seg_root is not None:
+        if compacted:
             self._gc_segments()
 
     def _gc_segments(self) -> int:
@@ -551,9 +535,9 @@ class CrawlEngine:
         """Epoch 0: search phase. seeds -> SERP pages -> initial frontier."""
         assert self.store.last_epoch() is None, "workdir already bootstrapped"
         self.store.clean_epoch(0)  # phantom-delta guard (see step())
-        # pin the backend in the manifest so resume adopts it (commits with
-        # epoch 0)
-        self.store.set_meta("state_backend", self.state_backend)
+        # pin the backend in the manifest so resume can verify it (commits
+        # with epoch 0)
+        self.store.set_meta("state_backend", "store")
         raw = self._serp_raw_candidates(seed_ids)
         new_rows, state, handles = self._admit(raw, 0)
         new_rows = new_rows.cache()

@@ -17,13 +17,11 @@ manifest exists). Readers pick the highest READABLE version (a torn or
 corrupt higher version falls back to the previous one); superseded
 versions are pruned best-effort after the new one lands, keeping one
 predecessor. A killed job therefore always resumes from the last committed
-epoch; partially-written epoch K+1 dirs are ignored and overwritten. A
-legacy single-file MANIFEST.json (pre-versioning layout) is still read
-when no versioned manifest exists. Snapshot tables (frontier/host_state)
-are read at exactly one epoch; delta tables (seen_exact/seen_state/
-records/documents/metrics/revoked) are read as the union of epochs <= K
-(seen_state additionally keeps only the latest row per bucket — see
-DELTA_TABLES note).
+epoch; partially-written epoch K+1 dirs are ignored and overwritten.
+Snapshot tables (frontier/host_state) are read at exactly one epoch; delta
+tables (seen_exact/seen_state/records/documents/metrics/revoked) are read
+as the union of epochs <= K (seen_state additionally keeps only the latest
+row per bucket — see DELTA_TABLES note).
 
 Filesystem abstraction: plain paths use the local POSIX fast path; URI
 workdirs (hdfs://, s3a://, file://, ...) route the manifest/_SUCCESS/rename
@@ -165,10 +163,6 @@ class CheckpointStore:
     def manifest_path(self, version: int) -> str:
         return f"{self.workdir}/MANIFEST-{version}.json"
 
-    @property
-    def legacy_manifest_path(self) -> str:
-        return f"{self.workdir}/MANIFEST.json"
-
     def _manifest_versions(self) -> list[int]:
         """Committed manifest versions, newest first."""
         out = []
@@ -194,32 +188,30 @@ class CheckpointStore:
         """Highest READABLE versioned manifest; a torn/corrupt higher
         version (crash mid-create on a store without atomic rename) falls
         back to its predecessor, so no crash window leaves the store
-        without a manifest. Legacy single-file MANIFEST.json is read only
-        when no versioned manifest exists (pre-versioning workdirs)."""
+        without a manifest. A pre-versioning workdir (single-file
+        MANIFEST.json only) is refused: reading it as empty would silently
+        start a fresh crawl over the old one."""
         for v in self._manifest_versions():
             m = self._read_manifest_file(self.manifest_path(v))
             if m is not None:
                 return m
-        if self.fs.exists(self.legacy_manifest_path):
-            m = self._read_manifest_file(self.legacy_manifest_path)
-            if m is not None:
-                return m
+        if self.fs.exists(f"{self.workdir}/MANIFEST.json"):
+            raise ValueError(
+                f"{self.workdir} has only a pre-versioning MANIFEST.json; this"
+                " store reads MANIFEST-<v>.json manifests only — start a fresh"
+                " workdir"
+            )
         return {"epochs": [], "compacted": {}, "meta": {}}
 
     def manifests(self) -> list[dict]:
         """Every READABLE retained manifest, newest first: the current
         version plus the predecessor commit() keeps for torn-write
-        fallback (legacy single-file when no versioned manifest exists).
-        Segment GC unions referenced files over ALL of these so a reader
-        that falls back to the predecessor never dangles on a reclaimed
-        payload file."""
+        fallback. Segment GC unions referenced files over ALL of these so a
+        reader that falls back to the predecessor never dangles on a
+        reclaimed payload file."""
         out = []
         for v in self._manifest_versions():
             m = self._read_manifest_file(self.manifest_path(v))
-            if m is not None:
-                out.append(m)
-        if not out and self.fs.exists(self.legacy_manifest_path):
-            m = self._read_manifest_file(self.legacy_manifest_path)
             if m is not None:
                 out.append(m)
         return out
@@ -344,6 +336,3 @@ class CheckpointStore:
         for v in versions:
             if v <= v_new - 2:
                 self.fs.delete(self.manifest_path(v))
-        # a versioned manifest supersedes the legacy single file entirely
-        if self.fs.exists(self.legacy_manifest_path):
-            self.fs.delete(self.legacy_manifest_path)

@@ -3,24 +3,18 @@
 The batch engine carries the blocked-Bloom + cuckoo seen set through epoch
 checkpoint tables. This module is the same operator as a CUSTOM STATEFUL
 STREAMING operator (north_star asks for Structured Streaming equivalents):
-candidate URLs arrive on a stream, state is the per-host_bucket filter pair
-kept in the streaming state store, and the output stream is the admitted
-(first-ever-seen) URLs. Late/duplicate re-deliveries are absorbed exactly
-like the batch path (T3): a URL already in the bucket's exact set is
-dropped, a bloom false positive is resolved against the exact ids held in
-state.
+candidate URLs arrive on a stream, state is the per-host_bucket live
+segment list kept in the streaming state store, and the output stream is
+the admitted (first-ever-seen) URLs. Late/duplicate re-deliveries are
+absorbed exactly like the batch path (T3): a URL already in the bucket's
+exact key set is dropped, a bloom false positive is resolved against the
+segment's exact 128-bit keys.
 
-Two state layouts:
-  - INLINE (default): state carries the bucket's exact id array — ids are
-    8 bytes each, 2M urls/bucket is 16 MB, within state-store practice at
-    the documented 4096-bucket layout; hard-capped per bucket because the
-    whole array re-enters the state store every micro-batch commit.
-  - SEGMENT-STORE (store_root=...): the batch engine's LSM backend
-    (operators/segstore.py) — state rows hold live segment metadata only,
-    payloads are immutable content-addressed files probed through the
-    worker cache and appended O(new keys) per micro-batch, so state
-    commits stay O(MAX_SEGS) at any seen-set size and no cap is needed.
-  - output mode is append in both (admitted urls are immutable facts).
+State layout: the batch engine's LSM backend (operators/segstore.py) —
+state rows hold live segment metadata only, payloads are immutable
+content-addressed files probed through the worker cache and appended
+O(new keys) per micro-batch, so state commits stay O(MAX_SEGS) at any
+seen-set size. Output mode is append (admitted urls are immutable facts).
 
 GroupStateTimeout: none — the seen set never expires (a crawl's visited set
 is permanent for the run's lifetime).
@@ -34,92 +28,15 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators import dedup, seenset, segstore
+from ..operators import dedup, segstore
 
-# state: one row per host_bucket
-_STATE_SCHEMA = "bloom binary, cuckoo binary, ids binary, n_items long"
-# store-backed state: LIVE segment metadata only (JSON [[seg, lo, n, file]]
-# — <= MAX_SEGS entries); payloads live in the segment store
-_STORE_STATE_SCHEMA = "meta string, n_items long"
+# state: one row per host_bucket — LIVE segment metadata only (JSON
+# [[seg, lo, n, file]] — <= MAX_SEGS entries); payloads live in the store
+_SEGMENT_LIST_SCHEMA = "meta string, n_items long"
 _OUTPUT_SCHEMA = "host_bucket int, url_id long, url string"
-
-
-def _dedup_group(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    max_ids: int,
-) -> Iterator[pd.DataFrame]:
-    """One host_bucket's micro-batch: probe -> exact resolve -> admit ->
-    insert, all against the bucket's state-store row."""
-    if state.exists:
-        bloom_b, cuckoo_b, ids_b, _n = state.get
-        bloom = seenset.BlockedBloom.from_bytes(bytes(bloom_b))
-        cuckoo = seenset.CuckooFilter.from_bytes(bytes(cuckoo_b))
-        seen_ids = np.frombuffer(bytes(ids_b), dtype=np.int64)
-    else:
-        bloom = seenset.BlockedBloom.for_capacity(seenset.DEFAULT_PARTITION_CAPACITY)
-        cuckoo = seenset.CuckooFilter.for_capacity(seenset.DEFAULT_PARTITION_CAPACITY)
-        seen_ids = np.zeros(0, dtype=np.int64)
-
-    admitted = []
-    for pdf in pdfs:
-        if pdf.empty:
-            continue
-        # in-batch keep-first (urls may repeat within one micro-batch)
-        pdf = pdf.drop_duplicates("url_id", keep="first")
-        ids = pdf["url_id"].to_numpy(dtype="int64")
-        maybe = bloom.contains(ids.view(np.uint64))
-        new_mask = ~maybe
-        if maybe.any() and len(seen_ids):
-            # exact resolve: bloom positives not in the exact id set are fp
-            fp = ~np.isin(ids[maybe], seen_ids)
-            new_mask = new_mask.copy()
-            new_mask[np.flatnonzero(maybe)[fp]] = True
-        elif maybe.any():
-            new_mask = np.ones(len(ids), dtype=bool)
-        new = pdf[new_mask]
-        if len(new):
-            new_ids = np.sort(new["url_id"].to_numpy(dtype="int64"))
-            bloom.insert(new_ids.view(np.uint64))
-            cuckoo.insert(new_ids.view(np.uint64))
-            seen_ids = np.concatenate([seen_ids, new_ids])
-            admitted.append(new[["host_bucket", "url_id", "url"]])
-
-    if len(seen_ids) > max_ids:
-        # hard state-row capacity (r2 verdict #8): the streaming state store
-        # must not grow one row without bound. Crossing the cap fails LOUDLY
-        # with the remediation (more buckets = smaller rows) instead of
-        # silently ballooning every micro-batch commit. NOTE (r3 ADVICE #2):
-        # unlike the batch engine's split_seen_state, applyInPandasWithState
-        # state is keyed by the OLD bucket ids — a plain restart with a
-        # larger fan-out would find empty state under the new keys and
-        # re-admit seen urls. The fan-out change needs a FRESH checkpoint
-        # location plus a state rebuild: replay the seen urls (e.g. the
-        # batch lineage table seen_exact, or this stream's own admitted
-        # output) through the new-fan-out stream FIRST — reseed_frame()
-        # builds that replay input — then attach the live candidate source.
-        raise RuntimeError(
-            f"streaming seen-set bucket {key[0]} holds {len(seen_ids)} ids, over"
-            f" max_ids_per_bucket={max_ids}: re-shard to a larger host-bucket"
-            " fan-out. This requires a FRESH streaming checkpoint + state"
-            " rebuild (state is keyed by the old bucket ids): replay the"
-            " seen urls through the new-fan-out stream first (see"
-            " reseed_frame), THEN attach the live source. A plain restart"
-            " with more buckets would re-admit already-seen urls."
-        )
-    state.update(
-        (
-            bloom.to_bytes(),
-            cuckoo.to_bytes(),
-            np.sort(seen_ids).tobytes(),
-            int(len(seen_ids)),
-        )
-    )
-    if admitted:
-        yield pd.concat(admitted, ignore_index=True)
 
 
 def _dedup_group_store(
@@ -128,13 +45,12 @@ def _dedup_group_store(
     state: GroupState,
     store_root: str,
 ) -> Iterator[pd.DataFrame]:
-    """Store-backed variant: the state-store row holds LIVE segment metadata
-    only; payload bytes live in the segment store, read through the worker
-    cache and written once per micro-batch (the LSM absorb rule bounds both
-    the probe fan-out and the amortized rewrite). The per-micro-batch state
-    commit is therefore O(MAX_SEGS metadata), however large the seen set —
-    the inline variant's hard cap exists because its whole exact-id array
-    re-enters the state store every commit; here it is structurally moot.
+    """One host_bucket's micro-batch: the state-store row holds LIVE segment
+    metadata only; payload bytes live in the segment store, read through
+    the worker cache and written once per micro-batch (the LSM absorb rule
+    bounds both the probe fan-out and the amortized rewrite). The
+    per-micro-batch state commit is therefore O(MAX_SEGS metadata),
+    however large the seen set.
 
     Exactly-once under micro-batch REPLAY (post-crash re-execution against
     rolled-back state): the replayed batch re-derives the same new-key run,
@@ -177,7 +93,7 @@ def _dedup_group_store(
             admitted.append(new[["host_bucket", "url_id", "url"]])
     if len(batch_ids):
         # shared run-emission rule (ordering + absorb + filters): one
-        # implementation with the batch cogroup, so the backends can't
+        # implementation with the batch cogroup, so the operators can't
         # desynchronize on seg_id/lo/absorb semantics
         run_ids, run_hs, seg_id, lo, bloom_b, cuckoo_b = dedup.emit_run(
             segs, batch_ids, batch_hs
@@ -194,66 +110,41 @@ def _dedup_group_store(
         yield pd.concat(admitted, ignore_index=True)
 
 
-# default cap: 4M ids = 32 MB exact array per state row (plus ~2 MB filters)
-# — at the documented 4096-bucket layout that bounds lifetime capacity at
-# ~1.6*10^10 urls while keeping every state-row rewrite micro-batch-friendly
-DEFAULT_MAX_IDS_PER_BUCKET = 4_000_000
-
-
-def streaming_dedup(
-    candidates: DataFrame,
-    max_ids_per_bucket: int = DEFAULT_MAX_IDS_PER_BUCKET,
-    store_root: str | None = None,
-) -> DataFrame:
+def streaming_dedup(candidates: DataFrame, *, store_root: str) -> DataFrame:
     """candidates: a STREAMING DataFrame with (host_bucket int, url_id long,
     url string). Returns the admitted-urls stream (append mode): each url
     appears exactly once across the stream's lifetime, first delivery wins.
 
-    Default (inline) state: per-bucket state is hard-capped at
-    `max_ids_per_bucket` exact ids (the documented sizing invariant:
-    n_buckets * cap >= crawl lifetime urls); crossing it raises instead of
-    growing without bound.
-
-    With `store_root` the batch engine's segment-store backend carries the
+    The batch engine's segment store under `store_root` carries the
     payloads (operators/segstore.py): state rows hold live segment METADATA
-    only, micro-batch state commits are O(metadata) however large the seen
-    set, and the cap is structurally unnecessary (no argument). The 128-bit
-    identity (url_id + xxhash64(url)) matches the batch path. The fan-out
-    note on the inline cap error applies to BOTH variants: state is keyed
-    by host_bucket, so a fan-out change needs a fresh checkpoint plus a
-    reseed_frame replay."""
-    if store_root is not None:
-        from pyspark.sql import functions as F
-
-        def fn_store(key, pdfs, state):
-            return _dedup_group_store(key, pdfs, state, store_root)
-
-        return (
-            candidates.withColumn("url_h", F.xxhash64("url"))
-            .groupBy("host_bucket")
-            .applyInPandasWithState(
-                fn_store,
-                outputStructType=_OUTPUT_SCHEMA,
-                stateStructType=_STORE_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
+    only, so micro-batch state commits are O(metadata) however large the
+    seen set. The 128-bit identity (url_id + xxhash64(url)) matches the
+    batch path. State is keyed by host_bucket, so a fan-out change needs a
+    FRESH streaming checkpoint plus a state rebuild: replay the seen urls
+    (the batch lineage table seen_exact, or this stream's own admitted
+    output) through the new-fan-out stream first — reseed_frame builds that
+    replay input — then attach the live candidate source. A plain restart
+    with more buckets would find empty state under the new keys and
+    re-admit already-seen urls."""
 
     def fn(key, pdfs, state):
-        return _dedup_group(key, pdfs, state, max_ids_per_bucket)
+        return _dedup_group_store(key, pdfs, state, store_root)
 
-    return candidates.groupBy("host_bucket").applyInPandasWithState(
-        fn,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        candidates.withColumn("url_h", F.xxhash64("url"))
+        .groupBy("host_bucket")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=_OUTPUT_SCHEMA,
+            stateStructType=_SEGMENT_LIST_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
 
 
 def reseed_frame(seen_urls: DataFrame, n_buckets: int) -> DataFrame:
-    """State-rebuild input for a fan-out change (see the over-cap error):
+    """State-rebuild input for a fan-out change (see streaming_dedup):
     relabel already-seen urls — the batch lineage table seen_exact, or this
     stream's own admitted output — to the NEW bucket fan-out. Write this
     frame to the new stream's source (e.g. its file/Kafka ingest dir) and
@@ -262,8 +153,6 @@ def reseed_frame(seen_urls: DataFrame, n_buckets: int) -> DataFrame:
     Replay order does not matter (first delivery wins and these are all
     firsts); duplicates across replay+live are absorbed like any late
     re-delivery (T3)."""
-    from pyspark.sql import functions as F
-
     from ..functions.urltools import host_bucket_col
 
     return seen_urls.select(

@@ -46,7 +46,8 @@ def test_manifest_atomicity_over_uri(spark, tmp_path):
 def test_manifest_versioning_crash_windows(tmp_path):
     """No crash window leaves the store without a readable manifest:
     a corrupt (torn) higher version falls back to its predecessor, and a
-    pre-versioning workdir with a legacy MANIFEST.json still resumes."""
+    pre-versioning workdir (only a single-file MANIFEST.json) is refused
+    instead of being read as a fresh, empty store."""
     import json
 
     st = CheckpointStore(tmp_path / "v")
@@ -71,12 +72,11 @@ def test_manifest_versioning_crash_windows(tmp_path):
         json.dumps({"epochs": [0, 1, 2], "compacted": {}, "meta": {"n_buckets": 256}})
     )
     st3 = CheckpointStore(legacy)
-    assert st3.committed_epochs() == [0, 1, 2]
-    assert st3.meta("n_buckets") == 256
-    # first commit migrates to the versioned protocol and removes the relic
-    st3.commit(3)
-    assert not (legacy / "MANIFEST.json").exists()
-    assert CheckpointStore(legacy).committed_epochs() == [0, 1, 2, 3]
+    with pytest.raises(ValueError, match="MANIFEST.json"):
+        st3.committed_epochs()
+    with pytest.raises(ValueError, match="MANIFEST.json"):
+        st3.commit(3)
+    assert not list(legacy.glob("MANIFEST-*.json"))
 
 
 def test_meta_visible_only_after_commit(tmp_path):

@@ -19,7 +19,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 import bench
-from gsccca_tax_records_scraper_spark.operators import dedup
+from gsccca_tax_records_scraper_spark.operators import dedup, segstore
 from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
 
 # equal-sized epochs: under the binary-counter merge rule the live run
@@ -29,14 +29,16 @@ N_EPOCHS = 10
 PER_EPOCH = 2_500
 
 
-def _drive(spark, tmp_path):
+def _drive(spark, tmp_path, store_root):
     """N_EPOCHS of fresh candidates; returns (snapshot, delta_paths)."""
     state = None
     paths = []
     handles: list = []
     for e in range(N_EPOCHS):
         cands = bench._synth_candidates(spark, PER_EPOCH, start=e * PER_EPOCH)
-        _new, state_new, h = dedup.dedup_candidates(cands, state, e)
+        _new, state_new, h = dedup.dedup_candidates(
+            cands, state, e, store_root=store_root
+        )
         p = str(tmp_path / f"delta_{e}")
         state_new.filter(F.col("epoch") == e).write.parquet(p)
         paths.append(p)
@@ -49,8 +51,8 @@ def _drive(spark, tmp_path):
     return state, paths
 
 
-def test_tiering_bounds_and_storage_reconstruction(spark, tmp_path):
-    snapshot, paths = _drive(spark, tmp_path)
+def test_tiering_bounds_and_storage_reconstruction(spark, tmp_path, store_root):
+    snapshot, paths = _drive(spark, tmp_path, store_root)
     rows = snapshot.collect()
 
     # (1) live segment count per bucket bounded; both behaviors occurred
@@ -67,7 +69,7 @@ def test_tiering_bounds_and_storage_reconstruction(spark, tmp_path):
     total = 0
     for rs in by_bucket.values():
         ids = np.concatenate(
-            [np.frombuffer(bytes(r.ids), dtype=np.int64) for r in rs]
+            [segstore.read_segment_keys(store_root, r.file)[0] for r in rs]
         )
         assert len(ids) == len(np.unique(ids))
         total += len(ids)
@@ -77,13 +79,9 @@ def test_tiering_bounds_and_storage_reconstruction(spark, tmp_path):
     # the in-memory snapshot row-for-row (superseded rows are dropped)
     live = CrawlEngine._latest_state_rows(all_deltas)
     live_rows = {
-        (r.host_bucket, r.seg): (bytes(r.ids), bytes(r.hs), r.lo, r.epoch)
-        for r in live.collect()
+        (r.host_bucket, r.seg): (r.file, r.lo, r.epoch) for r in live.collect()
     }
-    snap_rows = {
-        (r.host_bucket, r.seg): (bytes(r.ids), bytes(r.hs), r.lo, r.epoch)
-        for r in rows
-    }
+    snap_rows = {(r.host_bucket, r.seg): (r.file, r.lo, r.epoch) for r in rows}
     assert live_rows == snap_rows
     # storage really held superseded rows for the filter to drop (absorbs
     # happened, so the raw union must be strictly larger than the live set)
@@ -92,52 +90,54 @@ def test_tiering_bounds_and_storage_reconstruction(spark, tmp_path):
     # (4) the reconstructed state dedups exactly: everything ever admitted
     # is a dup, a fresh batch is fully admitted
     replay = bench._synth_candidates(spark, N_EPOCHS * PER_EPOCH)
-    new, _, h = dedup.dedup_candidates(replay, live.localCheckpoint(), N_EPOCHS)
+    new, _, h = dedup.dedup_candidates(
+        replay, live.localCheckpoint(), N_EPOCHS, store_root=store_root
+    )
     assert new.count() == 0
     for hh in h:
         hh.unpersist()
     fresh = bench._synth_candidates(
         spark, 2_000, start=N_EPOCHS * PER_EPOCH
     )
-    new2, _, h2 = dedup.dedup_candidates(fresh, live, N_EPOCHS)
+    new2, _, h2 = dedup.dedup_candidates(fresh, live, N_EPOCHS, store_root=store_root)
     assert new2.count() == 2_000
     for hh in h2:
         hh.unpersist()
 
 
-def test_merge_segments_folds_to_one_run(spark, tmp_path):
+def test_merge_segments_folds_to_one_run(spark, tmp_path, store_root):
     """The compaction fold: every bucket collapses to a single lo=0 run
     holding exactly the union of its live segment keys."""
-    snapshot, _ = _drive(spark, tmp_path)
-    folded = dedup.merge_segments(snapshot).localCheckpoint()
+    snapshot, _ = _drive(spark, tmp_path, store_root)
+    folded = dedup.merge_segments(snapshot, store_root=store_root).localCheckpoint()
     rows = folded.collect()
     per_bucket = {}
     for r in rows:
         assert r.lo == 0
         assert r.host_bucket not in per_bucket
-        per_bucket[r.host_bucket] = np.frombuffer(bytes(r.ids), dtype=np.int64)
+        per_bucket[r.host_bucket] = segstore.read_segment_keys(store_root, r.file)[0]
         assert (np.diff(per_bucket[r.host_bucket]) >= 0).all()
     assert sum(len(v) for v in per_bucket.values()) == N_EPOCHS * PER_EPOCH
     # folded state still dedups exactly and admits fresh urls
     replay = bench._synth_candidates(spark, N_EPOCHS * PER_EPOCH)
-    new, _, h = dedup.dedup_candidates(replay, folded, N_EPOCHS + 1)
+    new, _, h = dedup.dedup_candidates(replay, folded, N_EPOCHS + 1, store_root=store_root)
     assert new.count() == 0
     for hh in h:
         hh.unpersist()
 
 
-def test_live_segments_transitive_coverage():
-    """Pure-pandas check of the defensive storage-read filter: a chain of
+def test_live_segments_transitive_coverage(store_root):
+    """Spark-free check of the defensive storage-read filter: a chain of
     merges (A absorbed 1-4, B later absorbed A without covering [1,4))
     must still kill rows 1-4 — dead rows' lo feeds the running min — and
     same-seg replacements resolve by newest epoch."""
-    import pandas as pd
 
     def row(seg, lo, epoch, tag):
         ids = np.array([tag], dtype=np.int64)
-        return (0, seg, lo, b"", b"", ids.tobytes(), ids.tobytes(), 1, epoch)
+        bloom_b, cuckoo_b = dedup._build_run(ids, ids)
+        fname = segstore.write_segment(store_root, 0, seg, bloom_b, cuckoo_b, ids, ids)
+        return (0, seg, lo, 1, epoch, fname)
 
-    cols = ["host_bucket", "seg", "lo", "bloom", "cuckoo", "ids", "hs", "n_items", "epoch"]
     rows = [
         row(0, 0, 0, 100),   # live (below every interval)
         row(1, 1, 1, 101),   # dead: absorbed by A
@@ -149,18 +149,18 @@ def test_live_segments_transitive_coverage():
         row(7, 5, 7, 107),   # B = merge of [5,7) -> live
         row(7, 5, 9, 108),   # B' = revoke replacement of B (same seg) -> wins
     ]
-    pdf = pd.DataFrame(rows, columns=cols)
-    segs = dedup._live_segments(pdf.sample(frac=1.0, random_state=7))  # order-proof
+    shuffled = [rows[i] for i in np.random.default_rng(7).permutation(len(rows))]
+    segs = dedup._live_segments(dedup._meta_table(shuffled), store_root)  # order-proof
     assert [(s["seg"], s["lo"]) for s in segs] == [(0, 0), (7, 5)]
     # the replacement epoch won the same-seg tie
-    assert int(segs[1]["ids"][0]) == 108
+    assert int(dedup.seg_keys(segs[1])[0][0]) == 108
 
 
-def test_revoke_replaces_only_touched_segments(spark, tmp_path):
+def test_revoke_replaces_only_touched_segments(spark, tmp_path, store_root):
     """Revocation on a multi-segment bucket must re-serialize ONLY the
     segment rows that lost a key (same seg, same lo, new epoch); untouched
     segments carry through bit-identical, and the revoked urls re-admit."""
-    snapshot, _ = _drive(spark, tmp_path)
+    snapshot, _ = _drive(spark, tmp_path, store_root)
     snapshot = snapshot.localCheckpoint()
     # urls from the THIRD epoch: after the epoch-8 cascade they live in a
     # specific segment of each bucket
@@ -169,7 +169,7 @@ def test_revoke_replaces_only_touched_segments(spark, tmp_path):
     ).withColumn("url_h", F.xxhash64("url"))
     n_victims = victims.count()
 
-    snap2, handles = dedup.revoke_seen(snapshot, victims, epoch=99)
+    snap2, handles = dedup.revoke_seen(snapshot, victims, epoch=99, store_root=store_root)
     snap2 = snap2.localCheckpoint()
     for h in handles:
         h.unpersist()
@@ -182,18 +182,18 @@ def test_revoke_replaces_only_touched_segments(spark, tmp_path):
     removed = 0
     for k in prior:
         if k in changed:
-            a = np.frombuffer(bytes(prior[k].ids), dtype=np.int64)
-            b = np.frombuffer(bytes(now[k].ids), dtype=np.int64)
+            a = segstore.read_segment_keys(store_root, prior[k].file)[0]
+            b = segstore.read_segment_keys(store_root, now[k].file)[0]
             assert len(b) < len(a) and set(b) <= set(a)
             assert now[k].lo == prior[k].lo
             removed += len(a) - len(b)
         else:
-            assert bytes(now[k].ids) == bytes(prior[k].ids)
+            assert now[k].file == prior[k].file
             assert now[k].epoch == prior[k].epoch
     assert removed == n_victims
     # the revoked urls are re-admitted; everything else stays a dup
     replay = bench._synth_candidates(spark, N_EPOCHS * PER_EPOCH)
-    new, _, h = dedup.dedup_candidates(replay, snap2, 100)
+    new, _, h = dedup.dedup_candidates(replay, snap2, 100, store_root=store_root)
     assert new.count() == n_victims
     for hh in h:
         hh.unpersist()

@@ -20,19 +20,21 @@ def robots(spark):
     )
 
 
-def test_dedup_idempotent(spark, tmp_path):
+def test_dedup_idempotent(spark, tmp_path, store_root):
     """Re-presenting already-admitted candidates yields zero new rows."""
     cands = bench._synth_candidates(spark, 20_000)
-    new1, state1, _h1 = dedup.dedup_candidates(cands, None, 0)
+    new1, state1, _h1 = dedup.dedup_candidates(cands, None, 0, store_root=store_root)
     ss = str(tmp_path / "ss")
     state1.write.parquet(ss)
     n1 = new1.count()
     assert n1 == 20_000
-    new2, _, _h2 = dedup.dedup_candidates(cands, spark.read.parquet(ss), 1)
+    new2, _, _h2 = dedup.dedup_candidates(
+        cands, spark.read.parquet(ss), 1, store_root=store_root
+    )
     assert new2.count() == 0
 
 
-def test_dedup_keep_first_picks_crawl_order_min(spark):
+def test_dedup_keep_first_picks_crawl_order_min(spark, store_root):
     """Duplicate url_ids collapse to the min crawl-order row."""
     base = bench._synth_candidates(spark, 1000)
     # clone with strictly later crawl order (higher depth)
@@ -45,7 +47,9 @@ def test_dedup_keep_first_picks_crawl_order_min(spark):
             (F.col("crawl_order.depth") + 5).alias("depth"),
         ),
     )
-    new_rows, _, _h = dedup.dedup_candidates(base.unionByName(later), None, 0)
+    new_rows, _, _h = dedup.dedup_candidates(
+        base.unionByName(later), None, 0, store_root=store_root
+    )
     rows = new_rows.collect()
     assert len(rows) == 1000
     assert all(r.crawl_order.depth == 1 for r in rows)
@@ -82,7 +86,7 @@ def test_grant_order_is_global_min_prefix(spark, robots):
     assert [key(r) for r in got] == [key(r) for r in all_sorted[: len(got)]]
 
 
-def test_dedup_keepfirst_fast_and_slow_paths_agree(spark):
+def test_dedup_keepfirst_fast_and_slow_paths_agree(spark, store_root):
     """Optimization-round guard for the keep-first fast path: buckets whose
     url_ids are unique take a single argsort, dup-carrying buckets take the
     full 6-key lexsort (operators/dedup._fused_fn). Build a batch where
@@ -100,7 +104,7 @@ def test_dedup_keepfirst_fast_and_slow_paths_agree(spark):
         ),
     )
     cands = base.unionByName(later)
-    new_rows, _, handles = dedup.dedup_candidates(cands, None, 0)
+    new_rows, _, handles = dedup.dedup_candidates(cands, None, 0, store_root=store_root)
     got = {(r.url_id, r.crawl_order.depth) for r in new_rows.collect()}
     want = {
         (r.url_id, r.crawl_order.depth)

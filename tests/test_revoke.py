@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 import bench
 from gsccca_tax_records_scraper_spark import simulator
 from gsccca_tax_records_scraper_spark.functions import urltools
-from gsccca_tax_records_scraper_spark.operators import dedup, seenset
+from gsccca_tax_records_scraper_spark.operators import dedup, seenset, segstore
 from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
 
 
@@ -26,19 +26,19 @@ def _rev_df(spark, urls, n_buckets=urltools.N_HOST_BUCKETS):
     )
 
 
-def test_revoke_seen_operator(spark):
+def test_revoke_seen_operator(spark, store_root):
     """Unit level: revoke N of M seen urls -> exactly those become
     re-admittable, all other urls stay seen, untouched buckets carry
     verbatim, cuckoo fingerprints of the removed keys are gone."""
     c1 = bench._synth_candidates(spark, 10_000)
-    new1, state1, h1 = dedup.dedup_candidates(c1, None, 0)
+    new1, state1, h1 = dedup.dedup_candidates(c1, None, 0, store_root=store_root)
     state1 = state1.localCheckpoint()
     for h in h1:
         h.unpersist()
 
     victims = [r.url for r in c1.orderBy("url_id").limit(40).collect()]
     rev = _rev_df(spark, victims)
-    snap, h2 = dedup.revoke_seen(state1, rev, 1)
+    snap, h2 = dedup.revoke_seen(state1, rev, 1, store_root=store_root)
     snap = snap.localCheckpoint()
     for h in h2:
         h.unpersist()
@@ -49,7 +49,7 @@ def test_revoke_seen_operator(spark):
     }
     assert changed <= victim_buckets and changed
     # membership: victims re-admit, everything else still dedups away
-    new2, _, h3 = dedup.dedup_candidates(c1, snap, 2)
+    new2, _, h3 = dedup.dedup_candidates(c1, snap, 2, store_root=store_root)
     got = {r.url for r in new2.select("url").collect()}
     assert got == set(victims)
     for h in h3:
@@ -58,15 +58,15 @@ def test_revoke_seen_operator(spark):
     vrow = rev.orderBy("url_id").first()
     st = {r.host_bucket: r for r in snap.collect()}
     row = st[int(vrow.host_bucket)]
-    cf = seenset.CuckooFilter.from_bytes(bytes(row.cuckoo))
-    ids = np.frombuffer(bytes(row.ids), dtype=np.int64)
+    _bloom_b, cuckoo_b, ids, _hs = segstore.read_segment(store_root, row.file)
+    cf = seenset.CuckooFilter.from_bytes(cuckoo_b)
     assert int(vrow.url_id) not in ids
     # every REMAINING key is still in the cuckoo (no collateral deletes)
     if len(ids):
         assert cf.contains(ids.view(np.uint64)).all()
     # revoking a never-seen url is a no-op (no bucket changes)
     rev2 = _rev_df(spark, ["https://search.gsccca.org/nope?id=999999999"])
-    snap2, h4 = dedup.revoke_seen(snap, rev2, 3)
+    snap2, h4 = dedup.revoke_seen(snap, rev2, 3, store_root=store_root)
     assert snap2.filter(F.col("epoch") == 3).count() == 0
     for h in h4:
         h.unpersist()

@@ -82,41 +82,42 @@ def test_cuckoo_load_factor():
 
 # ------------------------------------------------- overflow rebuild (r2 #9)
 
-def test_dedup_rebuilds_overflowing_bucket(spark):
-    """Insert ~2x a bucket's capacity across two epochs: the fused dedup
-    must rebuild the bucket's filters at doubled capacity from the seen+new
-    ids in hand, keep the FPR bounded, and stay exact (re-deduping the same
-    candidates admits zero)."""
+def test_dedup_rebuilds_overflowing_bucket(spark, store_root):
+    """Runs size their own filters: across two epochs every live segment's
+    bloom (read back from the segment store) holds its run at a healthy
+    capacity, keeps the FPR bounded, and stays exact (re-deduping the same
+    candidates admits zero; fresh urls admit fully)."""
     import bench
-    from gsccca_tax_records_scraper_spark.operators import dedup
-    from pyspark.sql import functions as F
+    from gsccca_tax_records_scraper_spark.operators import dedup, segstore
 
-    cap = 16  # tiny per-bucket capacity; 2000 urls / 64 buckets ~ 31/bucket
+    def check_filters(state):
+        rows = state.collect()
+        assert rows
+        probes = np.arange(10**6, 10**6 + 20_000, dtype=np.uint64)
+        fprs = []
+        for r in rows:
+            bloom_b, _cuckoo_b, _layout = segstore.read_segment_filters(store_root, r.file)
+            bb = seenset.BlockedBloom.from_bytes(bloom_b)
+            assert bb.n_items == r.n_items
+            assert bb.capacity >= bb.n_items, (r.host_bucket, bb.capacity, bb.n_items)
+            fprs.append(bb.contains(probes).mean())
+        # FPR stays at the healthy 16-bits/key bound
+        assert float(np.mean(fprs)) < 0.01, fprs
+
     c1 = bench._synth_candidates(spark, 2000, start=0)
-    new1, state1, h1 = dedup.dedup_candidates(c1, None, 0, capacity=cap)
-    rows = state1.collect()
-    assert {int(r.n_items) for r in rows} and all(int(r.n_items) > cap for r in rows)
-    blooms = {r.host_bucket: seenset.BlockedBloom.from_bytes(bytes(r.bloom)) for r in rows}
-    # every bucket rebuilt above its item count
-    for b, bb in blooms.items():
-        assert bb.capacity >= bb.n_items, (b, bb.capacity, bb.n_items)
-    # FPR after rebuild stays at the healthy 16-bits/key bound
-    probes = np.arange(10**6, 10**6 + 20_000, dtype=np.uint64)
-    fpr = float(np.mean([bb.contains(probes).mean() for bb in blooms.values()]))
-    assert fpr < 0.01, fpr
+    new1, state1, h1 = dedup.dedup_candidates(c1, None, 0, store_root=store_root)
     state1 = state1.localCheckpoint()
     for h in h1:
         h.unpersist()
-    # exactness survives the rebuild: same candidates again -> 0 admitted
-    new2, state2, h2 = dedup.dedup_candidates(c1, state1, 1, capacity=cap)
+    check_filters(state1)
+    # exactness: same candidates again -> 0 admitted
+    new2, state2, h2 = dedup.dedup_candidates(c1, state1, 1, store_root=store_root)
     assert new2.count() == 0
-    # a second overflow epoch: fresh urls keep inserting correctly
+    # a second epoch: fresh urls keep inserting correctly
     c2 = bench._synth_candidates(spark, 2000, start=2000)
-    new3, state3, h3 = dedup.dedup_candidates(c2, state1, 1, capacity=cap)
+    new3, state3, h3 = dedup.dedup_candidates(c2, state1, 1, store_root=store_root)
     assert new3.count() == 2000
-    for r in state3.collect():
-        bb = seenset.BlockedBloom.from_bytes(bytes(r.bloom))
-        assert bb.capacity >= bb.n_items
+    check_filters(state3)
     for h in h2 + h3:
         h.unpersist()
 

@@ -1,10 +1,11 @@
 """Segment-store backend (operators/segstore.py): write-once payload files,
-worker-process cache, store-vs-inline bit-parity, engine GC, crash orphans.
+worker-process cache, a keep-first reference oracle, engine GC, crash
+orphans.
 
-The engine-level store coverage rides the default backend ("store") in
-test_crawl_e2e/test_resume/test_compaction/test_split/test_revoke/
-test_checkpoint_uri (file:// URI root through pyarrow.fs included); this
-file covers the store's own contract.
+The engine-level store coverage rides in test_crawl_e2e/test_resume/
+test_compaction/test_split/test_revoke/test_checkpoint_uri (file:// URI
+root through pyarrow.fs included); this file covers the store's own
+contract.
 """
 
 from __future__ import annotations
@@ -72,52 +73,63 @@ def test_lru_byte_budget_evicts(tmp_path, monkeypatch):
     segstore.clear_cache()
 
 
-def test_store_matches_inline_bitwise(spark, tmp_path):
-    """The store backend must be a pure transport change: same admitted
-    set, same metadata rows, bit-identical payload bytes per live segment
-    across a two-epoch sequence."""
-    root = str(tmp_path / "segs")
+def test_store_matches_keep_first_reference(spark, store_root):
+    """Two-epoch differential check against a plain-Python keep-first
+    reference: the admitted rows are the first (crawl-order) candidate of
+    every id not already seen, each bucket's live segments hold exactly
+    that bucket's seen ids, and a bucket's segments are disjoint."""
     c0 = bench._synth_candidates(spark, 6000, start=0, n_buckets=16)
-    c1 = bench._synth_candidates(spark, 6000, start=3000, n_buckets=16)
-
-    n0i, s0i, h0i = dedup.dedup_candidates(c0, None, 0)
-    n0s, s0s, h0s = dedup.dedup_candidates(c0, None, 0, store_root=root)
-    s0i, s0s = s0i.localCheckpoint(), s0s.localCheckpoint()
-    for h in h0i + h0s:
-        h.unpersist()
-    n1i, s1i, h1i = dedup.dedup_candidates(c1, s0i, 1)
-    n1s, s1s, h1s = dedup.dedup_candidates(c1, s0s, 1, store_root=root)
-    assert sorted(r[0] for r in n1i.select("url_id").collect()) == sorted(
-        r[0] for r in n1s.select("url_id").collect()
+    # epoch 1 overlaps epoch 0 and repeats 500 ids later in crawl order
+    later = bench._synth_candidates(spark, 500, start=7000, n_buckets=16).withColumn(
+        "crawl_order", F.col("crawl_order").withField("depth", F.lit(4))
     )
-    meta_i = sorted(
-        tuple(r) for r in s1i.select("host_bucket", "seg", "lo", "n_items", "epoch").collect()
-    )
-    meta_s = sorted(
-        tuple(r) for r in s1s.select("host_bucket", "seg", "lo", "n_items", "epoch").collect()
-    )
-    assert meta_i == meta_s
-    for bucket in (0, 5, 11):
-        pdf_i = s1i.filter(F.col("host_bucket") == bucket).toPandas()
-        pdf_s = s1s.filter(F.col("host_bucket") == bucket).toPandas()
-        segs_i = dedup._live_segments(pdf_i)
-        segs_s = dedup._live_segments(pdf_s, root)
-        assert len(segs_i) == len(segs_s) > 0
-        for si, ss in zip(segs_i, segs_s):
-            assert si["bloom_b"] == ss["bloom_b"]
-            assert si["cuckoo_b"] == ss["cuckoo_b"]
-            assert si["n"] == ss["n"]
-            ss_ids, ss_hs = dedup.seg_keys(ss)  # store keys load lazily
-            assert (si["ids"] == ss_ids).all()
-            assert (si["hs"] == ss_hs).all()
-    for h in h1i + h1s:
-        h.unpersist()
+    c1 = bench._synth_candidates(spark, 6000, start=3000, n_buckets=16).unionByName(later)
+
+    def order_key(r):
+        co = r.crawl_order
+        return (co.depth, co.seed_id, co.page, co.link_order)
+
+    seen: dict[int, int] = {}  # url_id -> host_bucket
+    state, handles = None, []
+    for epoch, cands in enumerate((c0, c1)):
+        first: dict[int, tuple] = {}
+        for r in cands.collect():
+            if r.url_id not in seen:
+                k = order_key(r)
+                if r.url_id not in first or k < first[r.url_id][0]:
+                    first[r.url_id] = (k, r.host_bucket)
+        new, state, h = dedup.dedup_candidates(cands, state, epoch, store_root=store_root)
+        got = {r.url_id: order_key(r) for r in new.collect()}
+        assert got == {u: k for u, (k, _b) in first.items()}
+        seen.update({u: b for u, (_k, b) in first.items()})
+        state = state.localCheckpoint()
+        for hh in handles:
+            hh.unpersist()
+        handles = h
+    for hh in handles:
+        hh.unpersist()
+
+    rows_by_bucket: dict[int, list] = {}
+    for r in state.collect():
+        rows_by_bucket.setdefault(r.host_bucket, []).append(tuple(r))
+    assert set(rows_by_bucket) == set(seen.values())
+    for b, rows in rows_by_bucket.items():
+        segs = dedup._live_segments(dedup._meta_table(rows), store_root)
+        keys = [dedup.seg_keys(s)[0] for s in segs]
+        union = np.sort(np.concatenate(keys))
+        want = sorted(u for u, ub in seen.items() if ub == b)
+        assert union.tolist() == want
+        assert sum(len(k) for k in keys) == len(np.unique(union))  # disjoint
 
 
-def test_engine_records_backend_and_resume_adopts(spark, tmp_path):
+def test_engine_refuses_non_store_workdir(spark, tmp_path):
+    """A store workdir records its backend and reopens; a workdir committed
+    by any other backend (payload rows, no `file` column) is refused with
+    an error naming that backend instead of being misread."""
+    from gsccca_tax_records_scraper_spark.sources.checkpoint import CheckpointStore
+
     wd = tmp_path / "crawl"
     eng = CrawlEngine(spark, wd, epoch_seconds=60.0)
-    assert eng.state_backend == "store"
     eng.run(seed_ids=[1, 2], max_epochs=2)
     # segment files exist and metadata references resolve
     seg_dir = wd / "segments"
@@ -126,10 +138,17 @@ def test_engine_records_backend_and_resume_adopts(spark, tmp_path):
     state = eng._read_seen_state(eng.store.last_epoch())
     referenced = {r[0] for r in state.select("file").collect()}
     assert referenced <= files
-    # a reopened engine adopts the committed backend even if asked otherwise
-    eng2 = CrawlEngine(spark, wd, epoch_seconds=60.0, state_backend="inline")
-    assert eng2.state_backend == "store"
-    assert eng2.store.meta("state_backend") == "store"
+    assert eng.store.meta("state_backend") == "store"
+    CrawlEngine(spark, wd, epoch_seconds=60.0)  # reopens fine
+    # an inline-backend workdir, and one predating the meta key (which
+    # always meant inline), are refused
+    for name, meta in (("inline", {"state_backend": "inline"}), ("unkeyed", {})):
+        st = CheckpointStore(tmp_path / name)
+        for k, v in meta.items():
+            st.set_meta(k, v)
+        st.commit(0)
+        with pytest.raises(ValueError, match="'inline' backend"):
+            CrawlEngine(spark, tmp_path / name, epoch_seconds=60.0)
 
 
 def test_engine_gc_reclaims_orphans(spark, tmp_path):

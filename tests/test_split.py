@@ -10,30 +10,32 @@ from pyspark.sql import functions as F
 import bench
 from gsccca_tax_records_scraper_spark import simulator
 from gsccca_tax_records_scraper_spark.functions import urltools
-from gsccca_tax_records_scraper_spark.operators import dedup, seenset
+from gsccca_tax_records_scraper_spark.operators import dedup, seenset, segstore
 from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
 
 
-def test_split_preserves_membership_and_halves_buckets(spark):
+def test_split_preserves_membership_and_halves_buckets(spark, store_root):
     c1 = bench._synth_candidates(spark, 20_000)
-    new1, state1, h1 = dedup.dedup_candidates(c1, None, 0)
+    new1, state1, h1 = dedup.dedup_candidates(c1, None, 0, store_root=store_root)
     state1 = state1.localCheckpoint()
     for h in h1:
         h.unpersist()
     n_old = urltools.N_HOST_BUCKETS
-    split = dedup.split_seen_state(state1, n_old, n_old * 2).localCheckpoint()
+    split = dedup.split_seen_state(
+        state1, n_old, n_old * 2, store_root=store_root
+    ).localCheckpoint()
     rows = split.collect()
     assert len(rows) == n_old * 2
     # every key landed in its id % (2n) bucket, arrays still sorted, and the
     # rebuilt filters contain exactly the bucket's keys
     total = 0
     for r in rows:
-        ids = np.frombuffer(bytes(r.ids), dtype=np.int64)
+        bloom_b, _cuckoo_b, ids, _hs = segstore.read_segment(store_root, r.file)
         total += len(ids)
         assert (ids % (n_old * 2) == r.host_bucket).all()
         assert (np.diff(ids) >= 0).all()
         assert r.n_items == len(ids)
-        bloom = seenset.BlockedBloom.from_bytes(bytes(r.bloom))
+        bloom = seenset.BlockedBloom.from_bytes(bloom_b)
         if len(ids):
             assert bloom.contains(ids.view(np.uint64)).all()
     assert total == 20_000
@@ -47,13 +49,13 @@ def test_split_preserves_membership_and_halves_buckets(spark):
     c1_re = c1.withColumn(
         "host_bucket", urltools.host_bucket_col(F.col("url_id"), n_old * 2)
     )
-    new2, _, h2 = dedup.dedup_candidates(c1_re, split, 1)
+    new2, _, h2 = dedup.dedup_candidates(c1_re, split, 1, store_root=store_root)
     assert new2.count() == 0
     # ...and fresh candidates still admit fully
     c2 = bench._synth_candidates(spark, 5_000, start=20_000).withColumn(
         "host_bucket", urltools.host_bucket_col(F.col("url_id"), n_old * 2)
     )
-    new3, _, h3 = dedup.dedup_candidates(c2, split, 1)
+    new3, _, h3 = dedup.dedup_candidates(c2, split, 1, store_root=store_root)
     assert new3.count() == 5_000
     for h in h2 + h3:
         h.unpersist()
@@ -65,7 +67,7 @@ def test_pending_backlog_triggers_split(spark, tmp_path):
     state is large."""
     eng = CrawlEngine(spark, tmp_path / "p", epoch_seconds=60.0, split_threshold=50)
     seen_cands = bench._synth_candidates(spark, 2000)  # max bucket seen ~45 < 50
-    # build the state with the engine's backend (store-backed metadata rows)
+    # build the state in the engine's own segment store
     _new, state, h = dedup.dedup_candidates(
         seen_cands, None, 0, store_root=eng._seg_root
     )

@@ -50,98 +50,7 @@ def test_streaming_window_agg_matches_batch(spark, sf001, tmp_path):
 
 # ----------------------- applyInPandasWithState streaming seen-set (T2/T3)
 
-def test_streaming_dedup_stateful(spark, tmp_path):
-    """URLs delivered across several micro-batches, with duplicates both
-    within and across batches: the admitted stream carries each url exactly
-    once, first delivery wins, state persists across triggers."""
-    import json
-
-    from gsccca_tax_records_scraper_spark.functions import urltools
-    from gsccca_tax_records_scraper_spark.streaming.stateful import streaming_dedup
-
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_batch(name, urls):
-        rows = [
-            {
-                "host_bucket": urltools.host_bucket_of(urltools.url_id(u)),
-                "url_id": urltools.url_id(u),
-                "url": u,
-            }
-            for u in urls
-        ]
-        p = src / f"{name}.json"
-        p.write_text("\n".join(json.dumps(r) for r in rows))
-
-    u = [f"https://search.gsccca.org/Lien/liendetails.asp?id={i}" for i in range(40)]
-    write_batch("b0", u[:20] + u[:5])          # in-batch dups
-    write_batch("b1", u[10:30])                # cross-batch dups 10..19
-    write_batch("b2", u[25:40] + u[0:2])       # more cross-batch dups
-
-    stream = (
-        spark.readStream.schema("host_bucket int, url_id long, url string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        streaming_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("admitted_urls")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [r.url for r in spark.sql("SELECT url FROM admitted_urls").collect()]
-    assert sorted(got) == sorted(u)       # every url exactly once
-    assert len(got) == len(set(got)) == 40
-
-
-def test_streaming_dedup_state_cap(spark, tmp_path):
-    """Driving a bucket past max_ids_per_bucket must fail LOUDLY with the
-    fan-out remediation — never commit a state row over the cap (r2 verdict
-    #8: bounded streaming state)."""
-    import json
-
-    import pytest
-
-    from gsccca_tax_records_scraper_spark.functions import urltools
-    from gsccca_tax_records_scraper_spark.streaming.stateful import streaming_dedup
-
-    src = tmp_path / "src"
-    src.mkdir()
-    urls = [f"https://search.gsccca.org/Lien/liendetails.asp?id={i}" for i in range(200)]
-    rows = [
-        {"host_bucket": 0, "url_id": urltools.url_id(u), "url": u} for u in urls
-    ]  # everything in ONE bucket: worst-case state row
-    (src / "b0.json").write_text("\n".join(json.dumps(r) for r in rows))
-
-    stream = (
-        spark.readStream.schema("host_bucket int, url_id long, url string")
-        .json(str(src))
-    )
-    q = (
-        streaming_dedup(stream, max_ids_per_bucket=50)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("capped_urls")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    with pytest.raises(Exception, match="max_ids_per_bucket"):
-        try:
-            q.processAllAvailable()
-            raise AssertionError("stream should have failed over the cap")
-        finally:
-            q.stop()
-
-
-def test_streaming_dedup_fanout_migration(spark, tmp_path):
+def test_streaming_dedup_fanout_migration(spark, tmp_path, store_root):
     """r3 ADVICE #2: a fan-out change needs a FRESH checkpoint + state
     rebuild (state is keyed by the old bucket ids). reseed_frame replays the
     already-admitted urls at the new fan-out; after the replay drains, live
@@ -177,7 +86,7 @@ def test_streaming_dedup_fanout_migration(spark, tmp_path):
         .json(str(src1))
     )
     q1 = (
-        streaming_dedup(stream1)
+        streaming_dedup(stream1, store_root=store_root)
         .writeStream.outputMode("append").format("memory")
         .queryName("mig_phase1")
         .option("checkpointLocation", str(tmp_path / "ckpt1"))
@@ -206,7 +115,7 @@ def test_streaming_dedup_fanout_migration(spark, tmp_path):
         .json(str(src2))
     )
     q2 = (
-        streaming_dedup(stream2)
+        streaming_dedup(stream2, store_root=store_root)
         .writeStream.outputMode("append").format("memory")
         .queryName("mig_phase2")
         .option("checkpointLocation", str(tmp_path / "ckpt2"))
@@ -229,10 +138,11 @@ def test_streaming_dedup_fanout_migration(spark, tmp_path):
 
 
 def test_streaming_dedup_store_backend(spark, tmp_path):
-    """Segment-store streaming variant: same exactly-once admissions as the
-    inline state, but the state rows hold segment METADATA only — payloads
-    live in the store, so the per-commit state write is O(MAX_SEGS) however
-    large the seen set (the inline cap is structurally moot here)."""
+    """URLs delivered across several micro-batches, with duplicates both
+    within and across batches: the admitted stream carries each url exactly
+    once, first delivery wins, state persists across triggers. The state
+    rows hold segment METADATA only — payloads live in the store, so the
+    per-commit state write is O(MAX_SEGS) however large the seen set."""
     import json
     import os
 
