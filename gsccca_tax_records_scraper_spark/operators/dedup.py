@@ -586,7 +586,13 @@ def revoke_seen(
     epoch == current) persists only the changed rows.
 
     Requests for urls that are not in the seen set are no-ops (exactness
-    lives in the key arrays; the filters only ever skip work)."""
+    lives in the key arrays; the filters only ever skip work).
+
+    Precondition: every `seen_state` row is stamped with an epoch earlier
+    than `epoch` (prior state was committed at an earlier epoch). The
+    carried branch keeps only such rows, so the snapshot's
+    `filter(epoch == current)` folds to the replaced rows alone — no
+    prior-state scan, no window."""
     rev = revoked.select("host_bucket", "url_id", "url_h")
     buckets = [int(r[0]) for r in rev.select("host_bucket").distinct().collect()]
     state_src = seen_state.filter(F.col("host_bucket").isin(buckets))
@@ -653,7 +659,7 @@ def revoke_seen(
         .applyInArrow(fn, _META_SCHEMA)
         .persist()
     )
-    carried = seen_state.join(
+    carried = seen_state.filter(F.col("epoch") < epoch).join(
         F.broadcast(out.select("host_bucket", "seg")),
         ["host_bucket", "seg"],
         "left_anti",
@@ -769,6 +775,12 @@ def dedup_candidates(
     bucket and pruning cannot help — the engine turns it on only when its
     granted-count bound says the batch is small (plans/epoch._admit), which
     is exactly the politeness-limited regime where state >> batch.
+
+    Precondition: every `seen_state` row is stamped with an epoch earlier
+    than `epoch` (prior state was committed at an earlier epoch). The
+    carried branch keeps only such rows, so the snapshot's
+    `filter(epoch == current)` folds to the changed rows alone: Catalyst
+    prunes the whole carried branch, windows and state scan included.
     """
     spark = candidates.sparkSession
     # lin_parent is the only nullable int64 (seed rows have no parent): a
@@ -812,16 +824,16 @@ def dedup_candidates(
         # not absorb: a new row's [lo, seg) interval names exactly the
         # segments it replaced (empty for a pure append), so the anti-join
         # keeps all other prior rows verbatim — original bytes, original
-        # epoch stamps. The engine's delta write filters epoch == current,
-        # which prunes this whole carried branch at the parquet scan
-        # (per-epoch delta dirs have constant epoch stats). The join side
-        # is bounded (<= one row per touched bucket) and broadcast.
+        # epoch stamps. The epoch < current guard (the precondition above)
+        # lets the engine's delta write, which filters epoch == current,
+        # fold this whole carried branch away in the optimizer. The join
+        # side is bounded (<= one row per touched bucket) and broadcast.
         cov = changed.select(
             F.col("host_bucket").alias("__b"),
             F.col("lo").alias("__lo"),
             F.col("seg").alias("__hi"),
         )
-        carried = seen_state.join(
+        carried = seen_state.filter(F.col("epoch") < epoch).join(
             F.broadcast(cov),
             (F.col("host_bucket") == F.col("__b"))
             & (F.col("seg") >= F.col("__lo"))

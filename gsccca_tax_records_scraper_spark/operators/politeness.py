@@ -132,9 +132,12 @@ def grant(
     granted = (
         survivors.withColumn("__r", F.row_number().over(w_host))
         .filter(F.col("__r") <= F.col("budget"))
-        .drop("__r")
+        .drop("__r", "budget", "tokens_before")
     )
 
+    # counted from the very frame returned: a caller that caches `granted`
+    # then serves this plan from the cache too, instead of re-running the
+    # tournament when host_state_after is written
     granted_counts = granted.groupBy("host").agg(F.count("*").alias("granted_n"))
     host_state_after = (
         budgets.join(granted_counts, "host", "left")
@@ -145,4 +148,4 @@ def grant(
             F.lit(epoch).alias("epoch"),
         )
     )
-    return granted.drop("budget", "tokens_before"), host_state_after
+    return granted, host_state_after

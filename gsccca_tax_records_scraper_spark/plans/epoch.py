@@ -29,15 +29,29 @@ Shuffle budget per epoch (the 100-TB story):
     per-epoch Arrow AND parquet state traffic is O(touched buckets), with
     the probe/merge work O(batch).
   - writes are partition-local.
+
+Materialization budget per epoch: each epoch product is computed once. The
+grant, its budgets, the fetched pages and the admitted rows are cached and
+every checkpoint write and metric reads them from the cache: the host_state
+plan is derived from the cached grant frame itself (no second tournament),
+and the seen_state delta write filters a snapshot whose carried branch is
+stamped with earlier epochs, so it folds to the changed rows (no prior-state
+scan, no window). Frames the driver builds (robots rules, metrics rows,
+revoke lists, seeds) cross to the JVM as Arrow local data (`_local_df`:
+a LocalRelation), never as pickled rows through a Python worker.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from pathlib import Path
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .. import sitegen
 from ..functions import extract, urltools
@@ -64,6 +78,25 @@ _OUTLINKS_BOUND = 16
 # (beyond that the url-hash bucketing touches every bucket anyway and the
 # distinct-bucket pass would be a wasted candidate scan)
 _PRUNE_BATCH_PER_BUCKET = 4
+
+
+def _local_df(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
+    """Driver-built rows as Arrow local data: the frame plans as a
+    LocalRelation, with no pickled-row RDD and no Python-worker pass."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
+
+
+def _bucket_counts(new_rows: DataFrame) -> dict[int, int]:
+    """Admitted rows per host bucket, in one action (their sum is the
+    epoch's admitted total)."""
+    return {
+        int(r["host_bucket"]): int(r["n"])
+        for r in new_rows.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()
+    }
 
 
 def _span(kind: str, text, media_ref, offset: int):
@@ -218,8 +251,10 @@ class CrawlEngine:
             (h, list(r.disallow_prefixes), r.rate_per_sec, r.burst)
             for h, r in sorted(self.robots_rules.items())
         ]
-        return self.spark.createDataFrame(
-            rows, "host string, disallow_prefixes array<string>, rate_per_sec double, burst int"
+        return _local_df(
+            self.spark,
+            rows,
+            "host string, disallow_prefixes array<string>, rate_per_sec double, burst int",
         )
 
     @staticmethod
@@ -313,10 +348,15 @@ class CrawlEngine:
         )
 
     def _admit(
-        self, raw_candidates: DataFrame, epoch: int, n_cand_bound: int | None = None
+        self,
+        raw_candidates: DataFrame,
+        epoch: int,
+        robots: DataFrame,
+        n_cand_bound: int | None = None,
     ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
         """Junk filter + robots gate + dedup; returns (new_rows, seen_state',
         persisted handles to unpersist after the epoch's writes commit).
+        `robots` is the caller's robots_df(), built once per epoch.
         The seen_state snapshot names the whole seen set (segment metadata
         per bucket), so the hot path reads ONE snapshot — the
         seen_exact delta table is write-only here (export/lineage).
@@ -326,7 +366,6 @@ class CrawlEngine:
         relative to the fan-out, dedup prunes its state input to the
         touched buckets (worth one extra candidate scan); a batch >> fan-out
         touches every bucket anyway, so pruning is skipped."""
-        robots = self.robots_df()
         cands = self._finalize_candidates(raw_candidates, epoch)
         gated = politeness.apply_robots_gate(cands, robots)
         prev = self.store.last_epoch()
@@ -395,7 +434,7 @@ class CrawlEngine:
         records: DataFrame | None,
         documents: DataFrame | None,
         metric_counts: dict[str, int],
-        bucket_counts: dict[int, int] | None = None,
+        bucket_counts: dict[int, int],
     ) -> None:
         st = self.store
         st.write("frontier", epoch, frontier.repartition(8, "host_bucket"))
@@ -414,18 +453,14 @@ class CrawlEngine:
             st.write("documents", epoch, documents)
         mrows = [(epoch, -1, k, int(v)) for k, v in sorted(metric_counts.items())]
         # per-partition lineage/metrics (north_rule): admitted-per-bucket
-        if bucket_counts is None:
-            bucket_counts = {
-                int(r["host_bucket"]): int(r["n"])
-                for r in new_rows.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()
-            }
         per_bucket = [
             (epoch, b, "admitted", n) for b, n in sorted(bucket_counts.items())
         ]
         st.write(
             "metrics",
             epoch,
-            self.spark.createDataFrame(
+            _local_df(
+                self.spark,
                 (mrows + per_bucket) or [(epoch, -1, "noop", 0)],
                 "epoch int, host_bucket int, metric string, value long",
             ),
@@ -477,11 +512,11 @@ class CrawlEngine:
         extra commit (until the pre-compaction manifest itself is pruned)
         — bounded lag, and crash orphans are reclaimed immediately.
         Bounded driver collect: one string per metadata row, <= fan-out x
-        MAX_SEGS per manifest view after a compaction."""
+        MAX_SEGS per manifest view after a compaction, taken for all views
+        in one pass."""
         from ..operators import segstore
 
-        referenced: set[str] = set()
-        views = 0
+        views: list[DataFrame] = []
         for m in self.store.manifests():
             epochs = m.get("epochs") or []
             if not epochs:
@@ -497,21 +532,21 @@ class CrawlEngine:
                 # deletes live payloads — skip this cadence entirely;
                 # orphans just wait for the next compaction commit
                 return 0
-            views += 1
-            referenced |= {r[0] for r in df.select("file").distinct().collect()}
-        if views == 0:
+            views.append(df.select("file"))
+        if not views:
             # no readable committed view at all (e.g. every retained
             # manifest read failed transiently): never treat that as
             # "nothing is referenced"
             return 0
-        return segstore.gc_segments(self._seg_root, referenced)
+        files = reduce(DataFrame.union, views).distinct().collect()
+        return segstore.gc_segments(self._seg_root, {r[0] for r in files})
 
     # ------------------------------------------------------------ phases
     def _serp_raw_candidates(self, seed_ids: list[int]) -> DataFrame:
         """Search-phase candidate rows: seeds -> synthetic SERP pages ->
         extracted links (reference: get_search_results,
         lien_index_scraper.py:362-549). Used by bootstrap and reseed."""
-        seeds = self.spark.createDataFrame([(int(s),) for s in seed_ids], "seed_id long")
+        seeds = _local_df(self.spark, [(int(s),) for s in seed_ids], "seed_id long")
 
         def gen_serp(it):
             for pdf in it:
@@ -539,16 +574,17 @@ class CrawlEngine:
         # with epoch 0)
         self.store.set_meta("state_backend", "store")
         raw = self._serp_raw_candidates(seed_ids)
-        new_rows, state, handles = self._admit(raw, 0)
+        new_rows, state, handles = self._admit(raw, 0, self.robots_df())
         new_rows = new_rows.cache()
-        n_admitted = new_rows.count()
-        empty_host_state = self.spark.createDataFrame(
-            [], "host string, tokens double, epoch int"
+        bucket_counts = _bucket_counts(new_rows)
+        empty_host_state = _local_df(
+            self.spark, [], "host string, tokens double, epoch int"
         )
         state, frontier0, _split = self._maybe_split(state, new_rows, 0)
         self._write_epoch(
             0, frontier0, state, empty_host_state, new_rows, None, None,
-            {"admitted": n_admitted, "seeds": len(seed_ids)},
+            {"admitted": sum(bucket_counts.values()), "seeds": len(seed_ids)},
+            bucket_counts,
         )
         new_rows.unpersist()
         for h in handles:
@@ -577,19 +613,25 @@ class CrawlEngine:
         # step commits the same epoch number (phantom-delta guard)
         self.store.clean_epoch(epoch)
         pending = self.store.read_snapshot(self.spark, "frontier", prev)
-        if pending.isEmpty():
-            return None
         robots = self.robots_df()
         prev_host_state = self.store.read_snapshot(self.spark, "host_state", prev)
 
         budgets = politeness.compute_budgets(
             pending, robots, prev_host_state if prev > 0 else None, self.epoch_seconds
-        )
+        ).cache()
         granted, host_state_new = politeness.grant(
             pending, budgets, epoch, n_buckets=self._n_buckets()
         )
+        # host_state_new counts this very frame, so its write reads the cache
         granted = granted.cache()
         n_granted = granted.count()
+        # drained frontier: nothing is written before this point, so a
+        # drained crawl commits nothing (a grant implies pending rows, so
+        # the emptiness check runs only when nothing was granted)
+        if n_granted == 0 and pending.isEmpty():
+            granted.unpersist()
+            budgets.unpersist()
+            return None
         # carry state for hosts with no pending urls this epoch
         host_state = host_state_new.unionByName(
             prev_host_state.select("host", "tokens", F.lit(epoch).alias("epoch")).join(
@@ -600,13 +642,14 @@ class CrawlEngine:
             # zero-grant epoch (tokens still fractional): commit the token
             # accrual and carry on — the simulator does the same; returning
             # None here would abandon a non-empty frontier
-            granted.unpersist()
-            empty_rows = self.spark.createDataFrame([], pending.schema)
+            empty_rows = _local_df(self.spark, [], pending.schema)
             self._write_epoch(
                 epoch, pending, self._read_seen_state(prev),
                 host_state, empty_rows, None, None,
                 {"granted": 0, "new_urls": 0, "cancelled": 0}, bucket_counts={},
             )
+            granted.unpersist()
+            budgets.unpersist()
             return {"epoch": epoch, "granted": 0, "new_urls": 0, "cancelled": 0}
 
         fetched = (
@@ -648,14 +691,11 @@ class CrawlEngine:
             )
         )
         new_rows, seen_state, handles = self._admit(
-            children, epoch, n_cand_bound=n_granted * _OUTLINKS_BOUND
+            children, epoch, robots, n_cand_bound=n_granted * _OUTLINKS_BOUND
         )
         new_rows = new_rows.cache()
         # one action for all admission metrics (total + per-bucket)
-        bucket_counts = {
-            int(r["host_bucket"]): int(r["n"])
-            for r in new_rows.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()
-        }
+        bucket_counts = _bucket_counts(new_rows)
         n_new = sum(bucket_counts.values())
 
         frontier_next = pending.join(
@@ -675,6 +715,7 @@ class CrawlEngine:
             bucket_counts=bucket_counts,
         )
         granted.unpersist()
+        budgets.unpersist()
         fetched.unpersist()
         new_rows.unpersist()
         # release dedup's internal persists explicitly — never clear the
@@ -706,7 +747,7 @@ class CrawlEngine:
         rev = (
             urls
             if isinstance(urls, DataFrame)
-            else self.spark.createDataFrame([(u,) for u in urls], "url string")
+            else _local_df(self.spark, [(u,) for u in urls], "url string")
         )
         uid = urltools.url_id_col(F.col("url"))
         n_requested = len(urls) if not isinstance(urls, DataFrame) else int(rev.count())
@@ -727,8 +768,8 @@ class CrawlEngine:
             (int(r[0]), int(r[1]))
             for r in delta.select("host_bucket", "seg").collect()
         ]
-        pairs_df = self.spark.createDataFrame(
-            changed_pairs or [(-1, -1)], "host_bucket int, seg int"
+        pairs_df = _local_df(
+            self.spark, changed_pairs or [(-1, -1)], "host_bucket int, seg int"
         )
         before = seen_state.join(
             F.broadcast(pairs_df), ["host_bucket", "seg"], "left_semi"
@@ -746,7 +787,7 @@ class CrawlEngine:
             epoch,
             rev.select("host_bucket", "url_id", "url", F.lit(epoch).alias("epoch")),
         )
-        empty_rows = self.spark.createDataFrame([], pending.schema)
+        empty_rows = _local_df(self.spark, [], pending.schema)
         self._write_epoch(
             epoch, pending, snapshot, host_state, empty_rows, None, None,
             {"revoked_requested": n_requested, "revoked_removed": n_removed},
@@ -769,13 +810,10 @@ class CrawlEngine:
         raw = self._serp_raw_candidates(seed_ids)
         # SERP fan-out bound: <= 3 pages x <= 10 links per seed (sitegen)
         new_rows, state, handles = self._admit(
-            raw, epoch, n_cand_bound=len(seed_ids) * 30
+            raw, epoch, self.robots_df(), n_cand_bound=len(seed_ids) * 30
         )
         new_rows = new_rows.cache()
-        bucket_counts = {
-            int(r["host_bucket"]): int(r["n"])
-            for r in new_rows.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()
-        }
+        bucket_counts = _bucket_counts(new_rows)
         n_new = sum(bucket_counts.values())
         st = self.store
         frontier = st.read_snapshot(self.spark, "frontier", prev).unionByName(new_rows)
@@ -823,7 +861,7 @@ class CrawlEngine:
         host_state = st.read_snapshot(self.spark, "host_state", prev).select(
             "host", "tokens", F.lit(epoch).cast("int").alias("epoch")
         )
-        empty_rows = self.spark.createDataFrame([], frontier.schema)
+        empty_rows = _local_df(self.spark, [], frontier.schema)
         self._write_epoch(
             epoch, frontier, folded, host_state, empty_rows, None, None,
             {"fold_segments_before": segs_before},

@@ -132,3 +132,113 @@ def test_neardup_pairs_plan_shape(spark, sf01):
 
     assert len(re.findall(r"Exchange (hash|range)partitioning", plan)) <= 2
     assert plan.count("BroadcastHashJoin") == 2  # both verify joins broadcast
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a JVM plan tree, following children only: an
+    InMemoryRelation is a leaf here (its cached plan already ran)."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def _optimized_nodes(df) -> list[str]:
+    return _plan_nodes(df._jdf.queryExecution().optimizedPlan())  # noqa: SLF001
+
+
+def test_host_state_reads_the_cached_grant(spark):
+    """politeness.grant derives host_state_after from the frame it returns,
+    so once the caller caches the grant, writing the host state reads the
+    cache instead of re-running the windowed tournament."""
+    from gsccca_tax_records_scraper_spark.operators import politeness
+    import bench
+
+    pending = bench._synth_candidates(spark, 1000)
+    robots = spark.createDataFrame(
+        [("search.gsccca.org", [], 0.25, 10)],
+        "host string, disallow_prefixes array<string>, rate_per_sec double, burst int",
+    )
+    budgets = politeness.compute_budgets(pending, robots, None, 60.0)
+    granted, host_state = politeness.grant(pending, budgets, 1)
+    granted = granted.cache()
+    try:
+        assert granted.count() == 15  # floor(0.25 * 60), no carry yet
+        nodes = _plan_nodes(host_state._jdf.queryExecution().sparkPlan())  # noqa: SLF001
+        assert "InMemoryTableScan" in nodes
+        assert "Window" not in nodes
+    finally:
+        granted.unpersist()
+
+
+def _parquet_state(spark, tmp_path, store_root):
+    """Epoch-0 seen state written to parquet and read back through the
+    engine's live-row filter (windows over a parquet scan)."""
+    from gsccca_tax_records_scraper_spark.operators import dedup
+    from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
+    import bench
+
+    _new, state0, h = dedup.dedup_candidates(
+        bench._synth_candidates(spark, 500), None, 0, store_root=store_root
+    )
+    state0.write.parquet(str(tmp_path / "state0"))
+    for x in h:
+        x.unpersist()
+    state = CrawlEngine._latest_state_rows(spark.read.parquet(str(tmp_path / "state0")))
+    assert "Window" in _optimized_nodes(state)
+    return state
+
+
+def _assert_delta_skips_prior_state(delta) -> None:
+    nodes = _optimized_nodes(delta)
+    assert "Window" not in nodes
+    # a parquet scan is a LogicalRelation, named "Relation"
+    assert "Relation" not in nodes
+
+
+def test_dedup_delta_skips_prior_state(spark, tmp_path, store_root):
+    """The carried branch of the dedup snapshot holds only earlier-epoch
+    rows, so the delta write's filter(epoch == E) folds it away: no window
+    and no scan of the prior state."""
+    from gsccca_tax_records_scraper_spark.operators import dedup
+    import bench
+
+    state = _parquet_state(spark, tmp_path, store_root)
+    _new, snap, h = dedup.dedup_candidates(
+        bench._synth_candidates(spark, 300, start=400), state, 1,
+        store_root=store_root,
+    )
+    try:
+        _assert_delta_skips_prior_state(snap.filter(F.col("epoch") == 1))
+    finally:
+        for x in h:
+            x.unpersist()
+
+
+def test_revoke_delta_skips_prior_state(spark, tmp_path, store_root):
+    from gsccca_tax_records_scraper_spark.operators import dedup
+    import bench
+
+    state = _parquet_state(spark, tmp_path, store_root)
+    rev = bench._synth_candidates(spark, 20).select(
+        "host_bucket", "url_id", F.xxhash64("url").alias("url_h")
+    )
+    snap, h = dedup.revoke_seen(state, rev, 1, store_root=store_root)
+    try:
+        _assert_delta_skips_prior_state(snap.filter(F.col("epoch") == 1))
+    finally:
+        for x in h:
+            x.unpersist()
+
+
+def test_robots_frame_is_local_relation(spark, tmp_path):
+    """Driver-built frames cross to the JVM as Arrow local data, not as a
+    pickled-row RDD."""
+    from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
+
+    nodes = _optimized_nodes(CrawlEngine(spark, tmp_path / "r").robots_df())
+    assert "LocalRelation" in nodes
+    assert "LogicalRDD" not in nodes

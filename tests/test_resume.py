@@ -56,6 +56,38 @@ def test_zero_grant_epoch_carries_tokens(spark, tmp_path):
         assert sorted(got.get(e, [])) == sorted(sim.grant_order[e - 1]), e
 
 
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: SLF001
+
+
+def test_step_paths_release_their_caches(spark, tmp_path):
+    """Every step path (normal, zero-grant, drained) unpersists the frames
+    it cached, and a drained step commits nothing: step() returns None, the
+    committed epochs are unchanged and no table dir exists at the next
+    epoch."""
+    eng = CrawlEngine(spark, tmp_path / "n", epoch_seconds=60.0)
+    eng.bootstrap(SEEDS)
+    base = _persisted(spark)
+    m = eng.step()
+    assert m is not None and m["granted"] > 0
+    assert _persisted(spark) == base
+
+    z = CrawlEngine(spark, tmp_path / "z", epoch_seconds=2.0)
+    z.bootstrap(SEEDS)
+    base = _persisted(spark)
+    m = z.step()
+    assert m is not None and m["granted"] == 0
+    assert _persisted(spark) == base
+
+    eng.run()
+    committed = eng.store.committed_epochs()
+    base = _persisted(spark)
+    assert eng.step() is None
+    assert _persisted(spark) == base
+    assert eng.store.committed_epochs() == committed
+    assert not list(eng.store.workdir.glob(f"*/epoch={committed[-1] + 1}"))
+
+
 def test_partial_write_ignored(spark, tmp_path):
     """An uncommitted epoch dir (crash mid-write) must not poison resume."""
     eng = CrawlEngine(spark, tmp_path / "c", epoch_seconds=60.0)
