@@ -86,30 +86,6 @@ def is_junk(url: str) -> bool:
 
 # ---------------------------------------------------------------- pandas side
 
-def canonicalize_series(base_urls: pd.Series, raw_hrefs: pd.Series) -> pd.Series:
-    """Vectorized canonicalization over an Arrow batch."""
-    unescaped = raw_hrefs.str.strip().map(_html.unescape)
-    return pd.Series(
-        [urljoin(b, h) for b, h in zip(base_urls, unescaped)],
-        index=raw_hrefs.index,
-        dtype="object",
-    )
-
-
-def url_id_series(urls: pd.Series) -> pd.Series:
-    return urls.map(url_id).astype("int64")
-
-
-def host_series(urls: pd.Series) -> pd.Series:
-    # scheme://HOST/...  — pure string op, no urlparse per row
-    return urls.str.extract(r"^[a-z]+://([^/]+)", expand=False).str.lower()
-
-
-def extract_hrefs_series(html_texts: pd.Series) -> pd.Series:
-    """Series[str html] -> Series[list[str] hrefs], document order preserved."""
-    return html_texts.map(extract_raw_hrefs)
-
-
 def canonicalize_frame(base_urls: pd.Series, raw_hrefs: pd.Series) -> pd.Series:
     """Vectorized canonicalize (strip + html.unescape + urljoin). The three
     href shapes that dominate any crawl — absolute http(s), root-relative

@@ -120,15 +120,6 @@ def _pafs(root: str):
     return hit
 
 
-def _read_bytes(root: str, filename: str) -> bytes:
-    if _is_uri(root):
-        fs, base = _pafs(root)
-        with fs.open_input_stream(f"{base}/{filename}") as f:
-            return f.read()
-    with open(os.path.join(root, filename), "rb") as f:
-        return f.read()
-
-
 def _write_bytes_once(root: str, filename: str, data: bytes) -> None:
     """Write-once create: skip when the name exists (content-addressed names
     mean the bytes are identical), atomic rename on POSIX, direct create on

@@ -63,26 +63,6 @@ def shingles_of_tokens(t: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
     return F.when(F.size(t) >= k, joined).otherwise(F.array(F.concat_ws(" ", t)))
 
 
-def shingles_col(text: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
-    """Word k-gram shingles, 1-based positions (matches the DuckDB oracle).
-    Documents shorter than k tokens shingle to the whole text. Prefer
-    binding the token array and calling shingles_of_tokens (see its
-    docstring) on any hot path."""
-    return shingles_of_tokens(tokens_col(text), k)
-
-
-def fingerprint_col(text: Column) -> Column:
-    """Order-insensitive document fingerprint: md5 of sorted distinct tokens
-    (the rolling-hash analog, reproducible in ANSI SQL)."""
-    return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens_col(text))), " "))
-
-
-def hex_to_long(hex_col: Column) -> Column:
-    """First 60 bits of a hex digest as a non-negative BIGINT (oracle:
-    ('0x' || substr(h,1,15))::BIGINT)."""
-    return F.conv(F.substring(hex_col, 1, 15), 16, 10).cast("long")
-
-
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup: groups of identical texts (md5 fingerprint hash-groupBy).
     Returns (fp, n_docs, min_doc_id) for groups with n_docs > 1."""
@@ -263,18 +243,6 @@ def lsh_candidate_pairs(
     )
 
 
-def simhash_col_exprs(bits: int = 16):
-    """Per-bit sum expressions for simhash over distinct tokens; used by
-    simhash_fingerprints and mirrored in the oracle SQL generator."""
-    h = hex_to_long(F.md5(F.col("tok")))
-    return [
-        F.sum(
-            F.when((F.shiftright(h, b).bitwiseAND(F.lit(1))) == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(bits)
-    ]
-
-
 def simhash_fingerprints(
     df: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -287,9 +255,8 @@ def simhash_fingerprints(
     per distinct token and a single numpy broadcast popcount matrix for
     all `bits` sign sums. `int.from_bytes(digest[:8]) >> 4` is the first
     60 bits of the digest — value-identical to the oracle's
-    ('0x' || substr(md5, 1, 15))::BIGINT (and to hex_to_long). Sign rule
-    unchanged: bit b set iff s_b > 0, i.e. 2*ones_b > n; ties (s_b == 0)
-    give 0.
+    ('0x' || substr(md5, 1, 15))::BIGINT. Sign rule unchanged: bit b set
+    iff s_b > 0, i.e. 2*ones_b > n; ties (s_b == 0) give 0.
 
     Measured at sf0.1/local[32], same-session alternating A/B vs the
     per-bit JVM F.aggregate chain: 0.42s vs 0.64s warm (the 16 interpreted
@@ -388,9 +355,3 @@ def simhash_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-
-
-def top_k_per_group(df: DataFrame, part_cols: list[str], order_cols: list[Column], k: int) -> DataFrame:
-    """Window top-k (SURVEY A2/O3): row_number over a deterministic order."""
-    w = Window.partitionBy(*part_cols).orderBy(*order_cols)
-    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)

@@ -39,10 +39,22 @@ stamped with earlier epochs, so it folds to the changed rows (no prior-state
 scan, no window). Frames the driver builds (robots rules, metrics rows,
 revoke lists, seeds) cross to the JVM as Arrow local data (`_local_df`:
 a LocalRelation), never as pickled rows through a Python worker.
+
+Epoch transaction: every op that writes an epoch runs in `with
+self._epoch() as ep:`. Opening reads the manifest once (previous epoch,
+fan-out) and drops what a crashed attempt left at this epoch; frames given
+to `ep.cache(df)` / `ep.hold(handles)` are unpersisted however the block
+exits (commit, failure, drained frontier); a split stages its fan-out in
+`ep.meta`, so a failed op cannot leak it into a later commit;
+`ep.commit(metrics, ...)` writes the tables and publishes exactly `ep.meta`
+and the tables it compacted. An omitted frontier carries the previous
+snapshot, an omitted host_state the previous one re-stamped to this epoch
+(empty at epoch 0), an omitted new_rows / seen_state an empty delta.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from functools import reduce
 from pathlib import Path
 
@@ -174,6 +186,115 @@ def _fetch_parse(it):
         yield out
 
 
+class _Epoch:
+    """One open epoch transaction (module docstring): what its opening read
+    established, the frames it holds and the manifest meta it stages."""
+
+    def __init__(self, eng: CrawlEngine, prev: int | None, n_buckets: int):
+        self.eng = eng
+        self.prev = prev
+        self.epoch = 0 if prev is None else prev + 1
+        self.n_buckets = n_buckets  # the committed fan-out
+        self.meta: dict = {}  # published by commit(), dropped on failure
+        self.held: list[DataFrame] = []  # unpersisted when the epoch closes
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        df = df.cache()
+        self.held.append(df)
+        return df
+
+    def hold(self, handles: list[DataFrame]) -> None:
+        """Frames an operator persisted internally (dedup's handles)."""
+        self.held.extend(handles)
+
+    def commit(
+        self,
+        metrics: dict[str, int],
+        *,
+        frontier: DataFrame | None = None,
+        seen_state: DataFrame | None = None,
+        host_state: DataFrame | None = None,
+        new_rows: DataFrame | None = None,
+        records: DataFrame | None = None,
+        documents: DataFrame | None = None,
+        revoked: DataFrame | None = None,
+        bucket_counts: dict[int, int] | None = None,
+    ) -> None:
+        """Write the epoch's tables, fold deltas on the compaction cadence,
+        publish the manifest, then GC segments. `new_rows` / `revoked` need
+        (host_bucket, url_id, url); both become lineage rows of this epoch."""
+        eng, st, spark, epoch = self.eng, self.eng.store, self.eng.spark, self.epoch
+        if frontier is None:
+            frontier = st.read_snapshot(spark, "frontier", self.prev)
+        if host_state is None:
+            host_state = (
+                _local_df(spark, [], "host string, tokens double, epoch int")
+                if self.prev is None
+                else st.read_snapshot(spark, "host_state", self.prev).select(
+                    "host", "tokens", F.lit(epoch).cast("int").alias("epoch")
+                )
+            )
+        if seen_state is None:
+            seen_state = _local_df(spark, [], dedup._META_SCHEMA)
+        if new_rows is None:
+            new_rows = _local_df(spark, [], "host_bucket int, url_id long, url string")
+
+        def lineage(df: DataFrame) -> DataFrame:
+            return df.select("host_bucket", "url_id", "url", F.lit(epoch).alias("epoch"))
+
+        st.write("frontier", epoch, frontier.repartition(8, "host_bucket"))
+        # delta write: only the bucket rows this epoch changed (stamped with
+        # the current epoch by the dedup cogroup / split / revoke / fold)
+        st.write("seen_state", epoch, seen_state.filter(F.col("epoch") == epoch))
+        st.write("host_state", epoch, host_state)
+        st.write("seen_exact", epoch, lineage(new_rows))
+        if records is not None:
+            st.write("records", epoch, records)
+        if documents is not None:
+            st.write("documents", epoch, documents)
+        if revoked is not None:
+            st.write("revoked", epoch, lineage(revoked))
+        mrows = [(epoch, -1, k, int(v)) for k, v in sorted(metrics.items())]
+        # per-partition lineage/metrics (north_rule): admitted-per-bucket
+        per_bucket = [
+            (epoch, b, "admitted", n) for b, n in sorted((bucket_counts or {}).items())
+        ]
+        st.write(
+            "metrics",
+            epoch,
+            _local_df(
+                spark,
+                (mrows + per_bucket) or [(epoch, -1, "noop", 0)],
+                "epoch int, host_bucket int, metric string, value long",
+            ),
+        )
+        # fold the deltas on a cadence so resume reads O(1) dirs, not
+        # O(epochs). Per-epoch seen_exact deltas keep the labels of the
+        # fan-out that produced them (lineage); the fold RELABELS to the
+        # fan-out being committed (a split staged this epoch included). The
+        # seen_state fold is a live-row filter only: a payload fold would add
+        # an O(|seen|) rewrite every cadence, the linear amplification the
+        # tier rule avoids (fold_segments() is the explicit maintenance op).
+        compacted: dict[str, int] = {}
+        if epoch > 0 and eng.compact_every and epoch % eng.compact_every == 0:
+            nb = self.meta.get("n_buckets", self.n_buckets)
+            for table, transform in (
+                ("seen_exact", lambda df: df.withColumn(
+                    "host_bucket", urltools.host_bucket_col(F.col("url_id"), nb)
+                )),
+                ("seen_state", eng._latest_state_rows),
+            ):
+                if st.compact_deltas(spark, table, epoch, transform=transform):
+                    compacted[table] = epoch
+        st.commit(epoch, meta=self.meta, compacted=compacted)
+        # segment-store GC rides the compaction cadence, AFTER the commit
+        # that retired the old metadata: files the committed metadata no
+        # longer names (absorbed runs, pre-revocation rewrites, crash
+        # orphans) are reclaimed; a crash before this point only delays GC
+        if compacted:
+            eng._gc_segments()
+
+
 class CrawlEngine:
     """The frontier + scheduler engine. All state lives in the checkpoint
     store; the object itself is stateless between steps (kill-safe)."""
@@ -301,14 +422,27 @@ class CrawlEngine:
         effect at their epoch's commit)."""
         return int(self.store.meta("n_buckets", urltools.N_HOST_BUCKETS))
 
-    def _current_fanout(self) -> int:
-        """The fan-out the in-flight commit will establish: a split staged
-        THIS epoch (set_meta, not yet committed) or the committed value."""
-        staged = getattr(self.store, "_pending_meta", {}).get("n_buckets")
-        return int(staged) if staged is not None else self._n_buckets()
+    @contextmanager
+    def _epoch(self, first: bool = False):
+        """Open the next epoch transaction (module docstring); its cached
+        frames are released however the block exits."""
+        m = self.store._manifest()
+        prev = max(m["epochs"], default=None)
+        # not an assert: under `python -O` a second bootstrap would commit
+        if (prev is None) != first:
+            raise RuntimeError("workdir already bootstrapped" if first else "bootstrap first")
+        ep = _Epoch(self, prev, int(m["meta"].get("n_buckets", urltools.N_HOST_BUCKETS)))
+        # phantom-delta guard: ops write different table subsets, so parquet
+        # overwrite alone cannot clear a crashed attempt's dirs at this epoch
+        self.store.clean_epoch(ep.epoch)
+        try:
+            yield ep
+        finally:
+            for df in ep.held:  # never clear the session-wide cache
+                df.unpersist()
 
     # ------------------------------------------------- candidate plumbing
-    def _finalize_candidates(self, df: DataFrame, epoch: int) -> DataFrame:
+    def _finalize_candidates(self, df: DataFrame, ep: _Epoch) -> DataFrame:
         """Raw (url, seed_id, page, link_order, depth, parent_url_id) rows ->
         FRONTIER-shaped rows: junk filter (P2), canonical ids/host JVM-side."""
         url_id = urltools.url_id_col(F.col("url"))
@@ -319,7 +453,7 @@ class CrawlEngine:
             .withColumn("host", host)
             .withColumn(
                 "host_bucket",
-                urltools.host_bucket_col(F.col("url_id"), self._n_buckets()),
+                urltools.host_bucket_col(F.col("url_id"), ep.n_buckets),
             )
             .withColumn("priority", F.col("depth").cast("double"))
             .withColumn(
@@ -338,7 +472,7 @@ class CrawlEngine:
                     F.col("parent_url_id").cast("long").alias("parent_url_id"),
                     F.col("seed_id").cast("long").alias("seed_id"),
                     F.col("depth").cast("int").alias("depth"),
-                    F.lit(epoch).cast("int").alias("discovered_epoch"),
+                    F.lit(ep.epoch).cast("int").alias("discovered_epoch"),
                 ),
             )
             .select(
@@ -349,13 +483,17 @@ class CrawlEngine:
 
     def _admit(
         self,
+        ep: _Epoch,
         raw_candidates: DataFrame,
-        epoch: int,
         robots: DataFrame,
+        carried: DataFrame | None = None,
         n_cand_bound: int | None = None,
-    ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-        """Junk filter + robots gate + dedup; returns (new_rows, seen_state',
-        persisted handles to unpersist after the epoch's writes commit).
+    ) -> tuple[DataFrame, dict[int, int], DataFrame, DataFrame]:
+        """Junk filter + robots gate + dedup, then the tail every admitting
+        op shares: cache the admitted rows, count them per bucket in one
+        action, append them to the `carried` frontier (None: they are the
+        whole frontier) and stage a split, if any, in `ep.meta`.
+        Returns (new_rows, bucket_counts, seen_state', frontier').
         `robots` is the caller's robots_df(), built once per epoch.
         The seen_state snapshot names the whole seen set (segment metadata
         per bucket), so the hot path reads ONE snapshot — the
@@ -366,18 +504,25 @@ class CrawlEngine:
         relative to the fan-out, dedup prunes its state input to the
         touched buckets (worth one extra candidate scan); a batch >> fan-out
         touches every bucket anyway, so pruning is skipped."""
-        cands = self._finalize_candidates(raw_candidates, epoch)
+        cands = self._finalize_candidates(raw_candidates, ep)
         gated = politeness.apply_robots_gate(cands, robots)
-        prev = self.store.last_epoch()
-        seen_state = self._read_seen_state(prev) if prev is not None else None
+        seen_state = self._read_seen_state(ep.prev) if ep.prev is not None else None
         prune = (
             n_cand_bound is not None
-            and n_cand_bound <= _PRUNE_BATCH_PER_BUCKET * self._n_buckets()
+            and n_cand_bound <= _PRUNE_BATCH_PER_BUCKET * ep.n_buckets
         )
         new_rows, state, handles = dedup.dedup_candidates(
-            gated, seen_state, epoch, prune_state=prune, store_root=self._seg_root
+            gated, seen_state, ep.epoch, prune_state=prune, store_root=self._seg_root
         )
-        return new_rows, state, handles
+        ep.hold(handles)
+        new_rows = ep.cache(new_rows)
+        # one action for all admission metrics (total + per-bucket)
+        bucket_counts = _bucket_counts(new_rows)
+        frontier = new_rows if carried is None else carried.unionByName(new_rows)
+        state, frontier, n_new = self._maybe_split(state, frontier, ep.epoch)
+        if n_new is not None:
+            ep.meta["n_buckets"] = n_new
+        return new_rows, bucket_counts, state, frontier
 
     def _maybe_split(
         self, seen_state: DataFrame, frontier: DataFrame, epoch: int
@@ -385,12 +530,12 @@ class CrawlEngine:
         """Double the bucket fan-out when any bucket's seen count crosses
         split_threshold. State rows split locally from their segments' key
         arrays; the frontier is re-bucketed JVM-side (a pure column rewrite).
-        Returns (state', frontier', n_new | None). The new fan-out is staged
-        as manifest meta and becomes visible at this epoch's commit — a
-        crash before commit leaves the old fan-out and old snapshots, so
-        resume stays consistent. This epoch's seen_exact/metrics deltas keep
-        the PRE-split bucket labels (per-epoch lineage is labeled by the
-        bucketing that produced it)."""
+        Returns (state', frontier', n_new | None). The caller stages n_new
+        in `ep.meta`, visible at that epoch's commit — a crash or failure
+        before commit leaves the old fan-out and old snapshots, so resume
+        and the next op stay consistent. This epoch's seen_exact/metrics
+        deltas keep the PRE-split bucket labels (per-epoch lineage is
+        labeled by the bucketing that produced it)."""
         if not self.split_threshold:
             return seen_state, frontier, None
         n_old = self._n_buckets()
@@ -421,85 +566,7 @@ class CrawlEngine:
         frontier2 = frontier.withColumn(
             "host_bucket", urltools.host_bucket_col(F.col("url_id"), n_new)
         )
-        self.store.set_meta("n_buckets", n_new)
         return state2, frontier2, n_new
-
-    def _write_epoch(
-        self,
-        epoch: int,
-        frontier: DataFrame,
-        seen_state: DataFrame,
-        host_state: DataFrame,
-        new_rows: DataFrame,
-        records: DataFrame | None,
-        documents: DataFrame | None,
-        metric_counts: dict[str, int],
-        bucket_counts: dict[int, int],
-    ) -> None:
-        st = self.store
-        st.write("frontier", epoch, frontier.repartition(8, "host_bucket"))
-        # delta write: only the bucket rows this epoch changed (stamped with
-        # the current epoch by the dedup cogroup / split)
-        st.write("seen_state", epoch, seen_state.filter(F.col("epoch") == epoch))
-        st.write("host_state", epoch, host_state)
-        st.write(
-            "seen_exact",
-            epoch,
-            new_rows.select("host_bucket", "url_id", "url", F.lit(epoch).alias("epoch")),
-        )
-        if records is not None:
-            st.write("records", epoch, records)
-        if documents is not None:
-            st.write("documents", epoch, documents)
-        mrows = [(epoch, -1, k, int(v)) for k, v in sorted(metric_counts.items())]
-        # per-partition lineage/metrics (north_rule): admitted-per-bucket
-        per_bucket = [
-            (epoch, b, "admitted", n) for b, n in sorted(bucket_counts.items())
-        ]
-        st.write(
-            "metrics",
-            epoch,
-            _local_df(
-                self.spark,
-                (mrows + per_bucket) or [(epoch, -1, "noop", 0)],
-                "epoch int, host_bucket int, metric string, value long",
-            ),
-        )
-        # fold the per-epoch seen_exact deltas periodically so resume reads
-        # stay O(1) dirs instead of O(epochs); takes effect at this commit.
-        # Per-epoch deltas keep the bucket labels of the fan-out that
-        # produced them (lineage), but the compacted fold RELABELS to the
-        # fan-out being committed, so post-split lineage queries group by
-        # the live bucketing instead of a mix of historical ones.
-        if epoch > 0 and self.compact_every and epoch % self.compact_every == 0:
-            nb = self._current_fanout()
-            st.compact_deltas(
-                self.spark,
-                "seen_exact",
-                epoch,
-                transform=lambda df: df.withColumn(
-                    "host_bucket", urltools.host_bucket_col(F.col("url_id"), nb)
-                ),
-            )
-            # seen_state compaction: live-row filter (delta-dir count back
-            # to O(1)). The metadata rewrite is O(live rows); a payload fold
-            # would ADD an O(|seen|) rewrite every cadence — linear
-            # amplification the binary-counter merge rule exists to avoid —
-            # so payloads are left to the tier rule (fold_segments() below
-            # is the explicit maintenance op).
-            st.compact_deltas(
-                self.spark, "seen_state", epoch, transform=self._latest_state_rows
-            )
-            compacted = True
-        else:
-            compacted = False
-        st.commit(epoch)
-        # segment-store GC rides the compaction cadence, AFTER the commit
-        # that retired the old metadata: files the committed metadata no
-        # longer names (absorbed runs, pre-revocation rewrites, crash
-        # orphans) are reclaimed; a crash before this point only delays GC
-        if compacted:
-            self._gc_segments()
 
     def _gc_segments(self) -> int:
         """Reclaim segment files no committed seen_state row references.
@@ -568,27 +635,17 @@ class CrawlEngine:
 
     def bootstrap(self, seed_ids: list[int]) -> None:
         """Epoch 0: search phase. seeds -> SERP pages -> initial frontier."""
-        assert self.store.last_epoch() is None, "workdir already bootstrapped"
-        self.store.clean_epoch(0)  # phantom-delta guard (see step())
-        # pin the backend in the manifest so resume can verify it (commits
-        # with epoch 0)
-        self.store.set_meta("state_backend", "store")
-        raw = self._serp_raw_candidates(seed_ids)
-        new_rows, state, handles = self._admit(raw, 0, self.robots_df())
-        new_rows = new_rows.cache()
-        bucket_counts = _bucket_counts(new_rows)
-        empty_host_state = _local_df(
-            self.spark, [], "host string, tokens double, epoch int"
-        )
-        state, frontier0, _split = self._maybe_split(state, new_rows, 0)
-        self._write_epoch(
-            0, frontier0, state, empty_host_state, new_rows, None, None,
-            {"admitted": sum(bucket_counts.values()), "seeds": len(seed_ids)},
-            bucket_counts,
-        )
-        new_rows.unpersist()
-        for h in handles:
-            h.unpersist()
+        with self._epoch(first=True) as ep:
+            # pin the backend in the manifest so resume can verify it
+            ep.meta["state_backend"] = "store"
+            new_rows, bucket_counts, state, frontier = self._admit(
+                ep, self._serp_raw_candidates(seed_ids), self.robots_df()
+            )
+            ep.commit(
+                {"admitted": sum(bucket_counts.values()), "seeds": len(seed_ids)},
+                frontier=frontier, seen_state=state, new_rows=new_rows,
+                bucket_counts=bucket_counts,
+            )
 
     def bootstrap_forms(self, forms: list[dict]) -> list[int]:
         """Epoch 0 from structured seed FORMS (S1): each form (party_type,
@@ -604,126 +661,94 @@ class CrawlEngine:
     def step(self) -> dict | None:
         """Run one drain epoch; returns metric counts, or None when the
         frontier is empty (crawl complete)."""
-        prev = self.store.last_epoch()
-        assert prev is not None, "bootstrap first"
-        epoch = prev + 1
-        # drop any table dirs a crashed prior attempt left at this epoch:
-        # ops write different table subsets, so parquet overwrite alone
-        # cannot clear e.g. an aborted revoke's `revoked` dir before a
-        # step commits the same epoch number (phantom-delta guard)
-        self.store.clean_epoch(epoch)
-        pending = self.store.read_snapshot(self.spark, "frontier", prev)
-        robots = self.robots_df()
-        prev_host_state = self.store.read_snapshot(self.spark, "host_state", prev)
+        with self._epoch() as ep:
+            prev, epoch = ep.prev, ep.epoch
+            pending = self.store.read_snapshot(self.spark, "frontier", prev)
+            robots = self.robots_df()
+            prev_host_state = self.store.read_snapshot(self.spark, "host_state", prev)
 
-        budgets = politeness.compute_budgets(
-            pending, robots, prev_host_state if prev > 0 else None, self.epoch_seconds
-        ).cache()
-        granted, host_state_new = politeness.grant(
-            pending, budgets, epoch, n_buckets=self._n_buckets()
-        )
-        # host_state_new counts this very frame, so its write reads the cache
-        granted = granted.cache()
-        n_granted = granted.count()
-        # drained frontier: nothing is written before this point, so a
-        # drained crawl commits nothing (a grant implies pending rows, so
-        # the emptiness check runs only when nothing was granted)
-        if n_granted == 0 and pending.isEmpty():
-            granted.unpersist()
-            budgets.unpersist()
-            return None
-        # carry state for hosts with no pending urls this epoch
-        host_state = host_state_new.unionByName(
-            prev_host_state.select("host", "tokens", F.lit(epoch).alias("epoch")).join(
-                host_state_new.select("host"), "host", "left_anti"
+            budgets = ep.cache(politeness.compute_budgets(
+                pending, robots, prev_host_state if prev > 0 else None,
+                self.epoch_seconds,
+            ))
+            granted, host_state_new = politeness.grant(
+                pending, budgets, epoch, n_buckets=ep.n_buckets
             )
-        )
-        if n_granted == 0:
-            # zero-grant epoch (tokens still fractional): commit the token
-            # accrual and carry on — the simulator does the same; returning
-            # None here would abandon a non-empty frontier
-            empty_rows = _local_df(self.spark, [], pending.schema)
-            self._write_epoch(
-                epoch, pending, self._read_seen_state(prev),
-                host_state, empty_rows, None, None,
-                {"granted": 0, "new_urls": 0, "cancelled": 0}, bucket_counts={},
+            # host_state_new counts this very frame, so its write reads the cache
+            granted = ep.cache(granted)
+            n_granted = granted.count()
+            # drained frontier: nothing is written before this point, so a
+            # drained crawl commits nothing (a grant implies pending rows, so
+            # the emptiness check runs only when nothing was granted)
+            if n_granted == 0 and pending.isEmpty():
+                return None
+            # carry state for hosts with no pending urls this epoch
+            host_state = host_state_new.unionByName(
+                prev_host_state.select("host", "tokens", F.lit(epoch).alias("epoch")).join(
+                    host_state_new.select("host"), "host", "left_anti"
+                )
             )
-            granted.unpersist()
-            budgets.unpersist()
-            return {"epoch": epoch, "granted": 0, "new_urls": 0, "cancelled": 0}
+            if n_granted == 0:
+                # zero-grant epoch (tokens still fractional): commit the token
+                # accrual and carry on — the simulator does the same; returning
+                # None here would abandon a non-empty frontier
+                counts = {"granted": 0, "new_urls": 0, "cancelled": 0}
+                ep.commit(counts, host_state=host_state)
+                return {"epoch": epoch, **counts}
 
-        fetched = (
-            granted.select(
-                "url_id", "url",
-                F.col("crawl_order.seed_id").alias("seed_id"),
-                F.col("crawl_order.page").alias("page"),
-                F.col("crawl_order.depth").alias("depth"),
-                F.col("crawl_order.link_order").alias("link_order"),
+            fetched = ep.cache(
+                granted.select(
+                    "url_id", "url",
+                    F.col("crawl_order.seed_id").alias("seed_id"),
+                    F.col("crawl_order.page").alias("page"),
+                    F.col("crawl_order.depth").alias("depth"),
+                    F.col("crawl_order.link_order").alias("link_order"),
+                ).mapInPandas(_fetch_parse, _FETCH_SCHEMA)
             )
-            .mapInPandas(_fetch_parse, _FETCH_SCHEMA)
-            .cache()
-        )
 
-        records = fetched.select(
-            "doc_id", "url_id", "url", "county", "instrument", "date_filed",
-            "book", "page_no", "debtors", "claimants", "amount", "amount_value",
-            "address", "description", "pdf_document_url", "media_ref", "cancelled",
-            F.lit(epoch).cast("int").alias("epoch"),
-            F.struct(
-                F.col("seed_id"), F.col("page"), F.col("link_order"), F.col("depth")
-            ).alias("crawl_order"),
-        )
-        documents = fetched.filter(~F.col("cancelled")).select(
-            "doc_id", "url", span_col().alias("spans")
-        )
-
-        children = (
-            fetched.filter(~F.col("cancelled"))
-            .select(
-                "url_id", "seed_id", "page", "depth",
-                F.posexplode("outlink_urls").alias("link_order", "url"),
+            records = fetched.select(
+                "doc_id", "url_id", "url", "county", "instrument", "date_filed",
+                "book", "page_no", "debtors", "claimants", "amount", "amount_value",
+                "address", "description", "pdf_document_url", "media_ref", "cancelled",
+                F.lit(epoch).cast("int").alias("epoch"),
+                F.struct(
+                    F.col("seed_id"), F.col("page"), F.col("link_order"), F.col("depth")
+                ).alias("crawl_order"),
             )
-            .select(
-                "url",
-                "seed_id", "page", "link_order",
-                (F.col("depth") + 1).alias("depth"),
-                F.col("url_id").alias("parent_url_id"),
+            documents = fetched.filter(~F.col("cancelled")).select(
+                "doc_id", "url", span_col().alias("spans")
             )
-        )
-        new_rows, seen_state, handles = self._admit(
-            children, epoch, robots, n_cand_bound=n_granted * _OUTLINKS_BOUND
-        )
-        new_rows = new_rows.cache()
-        # one action for all admission metrics (total + per-bucket)
-        bucket_counts = _bucket_counts(new_rows)
-        n_new = sum(bucket_counts.values())
 
-        frontier_next = pending.join(
-            granted.select("url_id"), "url_id", "left_anti"
-        ).unionByName(new_rows)
-        seen_state, frontier_next, _split = self._maybe_split(
-            seen_state, frontier_next, epoch
-        )
-
-        n_cancelled = int(
-            fetched.agg(F.sum(F.col("cancelled").cast("int")).alias("nc")).first()["nc"] or 0
-        )
-        self._write_epoch(
-            epoch, frontier_next, seen_state, host_state, new_rows,
-            records, documents,
-            {"granted": n_granted, "new_urls": n_new, "cancelled": n_cancelled},
-            bucket_counts=bucket_counts,
-        )
-        granted.unpersist()
-        budgets.unpersist()
-        fetched.unpersist()
-        new_rows.unpersist()
-        # release dedup's internal persists explicitly — never clear the
-        # session-wide cache (the caller may have its own frames cached)
-        for h in handles:
-            h.unpersist()
-        return {"epoch": epoch, "granted": n_granted, "new_urls": n_new,
-                "cancelled": n_cancelled}
+            children = (
+                fetched.filter(~F.col("cancelled"))
+                .select(
+                    "url_id", "seed_id", "page", "depth",
+                    F.posexplode("outlink_urls").alias("link_order", "url"),
+                )
+                .select(
+                    "url",
+                    "seed_id", "page", "link_order",
+                    (F.col("depth") + 1).alias("depth"),
+                    F.col("url_id").alias("parent_url_id"),
+                )
+            )
+            new_rows, bucket_counts, seen_state, frontier_next = self._admit(
+                ep, children, robots,
+                carried=pending.join(granted.select("url_id"), "url_id", "left_anti"),
+                n_cand_bound=n_granted * _OUTLINKS_BOUND,
+            )
+            n_cancelled = int(
+                fetched.agg(F.sum(F.col("cancelled").cast("int")).alias("nc")).first()["nc"]
+                or 0
+            )
+            counts = {"granted": n_granted, "new_urls": sum(bucket_counts.values()),
+                      "cancelled": n_cancelled}
+            ep.commit(
+                counts, frontier=frontier_next, seen_state=seen_state,
+                host_state=host_state, new_rows=new_rows, records=records,
+                documents=documents, bucket_counts=bucket_counts,
+            )
+        return {"epoch": epoch, **counts}
 
     def revoke(self, urls: list[str]) -> dict:
         """Recrawl revocation (north_star deletion capability; reference
@@ -735,67 +760,49 @@ class CrawlEngine:
         Urls never seen are no-ops. The revocation is lineage-tracked in the
         `revoked` delta table (a seen_exact rebuild = seen_exact minus
         revoked, last-wins by epoch)."""
-        prev = self.store.last_epoch()
-        assert prev is not None, "bootstrap first"
-        epoch = prev + 1
-        self.store.clean_epoch(epoch)  # phantom-delta guard (see step())
-        seen_state = self._read_seen_state(prev)
-        assert seen_state is not None
-        n_b = self._n_buckets()
-        # list for convenience; a DataFrame with a `url` column for scale
-        # (a 10^8-url revocation should not ride through the driver)
-        rev = (
-            urls
-            if isinstance(urls, DataFrame)
-            else _local_df(self.spark, [(u,) for u in urls], "url string")
-        )
-        uid = urltools.url_id_col(F.col("url"))
-        n_requested = len(urls) if not isinstance(urls, DataFrame) else int(rev.count())
-        rev = rev.select(
-            "url",
-            uid.alias("url_id"),
-            urltools.host_bucket_col(uid, n_b).alias("host_bucket"),
-            F.xxhash64("url").alias("url_h"),
-        )
-        snapshot, handles = dedup.revoke_seen(
-            seen_state, rev, epoch, store_root=self._seg_root
-        )
-        delta = snapshot.filter(F.col("epoch") == epoch)
-        # actually-removed count: bounded aggs over the replaced SEGMENT
-        # rows (per-(bucket,seg) supersession — untouched segments of a
-        # touched bucket don't enter either sum)
-        changed_pairs = [
-            (int(r[0]), int(r[1]))
-            for r in delta.select("host_bucket", "seg").collect()
-        ]
-        pairs_df = _local_df(
-            self.spark, changed_pairs or [(-1, -1)], "host_bucket int, seg int"
-        )
-        before = seen_state.join(
-            F.broadcast(pairs_df), ["host_bucket", "seg"], "left_semi"
-        ).agg(F.sum("n_items")).first()[0] or 0
-        after = delta.agg(F.sum("n_items")).first()[0] or 0
-        n_removed = int(before) - int(after)
-
-        st = self.store
-        pending = st.read_snapshot(self.spark, "frontier", prev)
-        host_state = st.read_snapshot(self.spark, "host_state", prev).select(
-            "host", "tokens", F.lit(epoch).cast("int").alias("epoch")
-        )
-        st.write(
-            "revoked",
-            epoch,
-            rev.select("host_bucket", "url_id", "url", F.lit(epoch).alias("epoch")),
-        )
-        empty_rows = _local_df(self.spark, [], pending.schema)
-        self._write_epoch(
-            epoch, pending, snapshot, host_state, empty_rows, None, None,
-            {"revoked_requested": n_requested, "revoked_removed": n_removed},
-            bucket_counts={},
-        )
-        for h in handles:
-            h.unpersist()
-        return {"epoch": epoch, "revoked": n_removed}
+        with self._epoch() as ep:
+            seen_state = self._read_seen_state(ep.prev)
+            assert seen_state is not None
+            # list for convenience; a DataFrame with a `url` column for scale
+            # (a 10^8-url revocation should not ride through the driver)
+            rev = (
+                urls
+                if isinstance(urls, DataFrame)
+                else _local_df(self.spark, [(u,) for u in urls], "url string")
+            )
+            uid = urltools.url_id_col(F.col("url"))
+            n_requested = len(urls) if not isinstance(urls, DataFrame) else int(rev.count())
+            rev = rev.select(
+                "url",
+                uid.alias("url_id"),
+                urltools.host_bucket_col(uid, ep.n_buckets).alias("host_bucket"),
+                F.xxhash64("url").alias("url_h"),
+            )
+            snapshot, handles = dedup.revoke_seen(
+                seen_state, rev, ep.epoch, store_root=self._seg_root
+            )
+            ep.hold(handles)
+            delta = snapshot.filter(F.col("epoch") == ep.epoch)
+            # actually-removed count: bounded aggs over the replaced SEGMENT
+            # rows (per-(bucket,seg) supersession — untouched segments of a
+            # touched bucket don't enter either sum)
+            changed_pairs = [
+                (int(r[0]), int(r[1]))
+                for r in delta.select("host_bucket", "seg").collect()
+            ]
+            pairs_df = _local_df(
+                self.spark, changed_pairs or [(-1, -1)], "host_bucket int, seg int"
+            )
+            before = seen_state.join(
+                F.broadcast(pairs_df), ["host_bucket", "seg"], "left_semi"
+            ).agg(F.sum("n_items")).first()[0] or 0
+            after = delta.agg(F.sum("n_items")).first()[0] or 0
+            n_removed = int(before) - int(after)
+            ep.commit(
+                {"revoked_requested": n_requested, "revoked_removed": n_removed},
+                seen_state=snapshot, revoked=rev,
+            )
+        return {"epoch": ep.epoch, "revoked": n_removed}
 
     def reseed(self, seed_ids: list[int]) -> dict:
         """Re-run the search phase against the CURRENT crawl state: SERP
@@ -803,33 +810,20 @@ class CrawlEngine:
         seen — or explicitly revoked since — are admitted to the frontier
         (reference analog: re-running the scraper after clearing resume
         state). Returns admission counts; follow with step()/run() to drain."""
-        prev = self.store.last_epoch()
-        assert prev is not None, "bootstrap first"
-        epoch = prev + 1
-        self.store.clean_epoch(epoch)  # phantom-delta guard (see step())
-        raw = self._serp_raw_candidates(seed_ids)
-        # SERP fan-out bound: <= 3 pages x <= 10 links per seed (sitegen)
-        new_rows, state, handles = self._admit(
-            raw, epoch, self.robots_df(), n_cand_bound=len(seed_ids) * 30
-        )
-        new_rows = new_rows.cache()
-        bucket_counts = _bucket_counts(new_rows)
-        n_new = sum(bucket_counts.values())
-        st = self.store
-        frontier = st.read_snapshot(self.spark, "frontier", prev).unionByName(new_rows)
-        host_state = st.read_snapshot(self.spark, "host_state", prev).select(
-            "host", "tokens", F.lit(epoch).cast("int").alias("epoch")
-        )
-        state, frontier, _split = self._maybe_split(state, frontier, epoch)
-        self._write_epoch(
-            epoch, frontier, state, host_state, new_rows, None, None,
-            {"reseeded": len(seed_ids), "new_urls": n_new},
-            bucket_counts=bucket_counts,
-        )
-        new_rows.unpersist()
-        for h in handles:
-            h.unpersist()
-        return {"epoch": epoch, "new_urls": n_new}
+        with self._epoch() as ep:
+            # SERP fan-out bound: <= 3 pages x <= 10 links per seed (sitegen)
+            new_rows, bucket_counts, state, frontier = self._admit(
+                ep, self._serp_raw_candidates(seed_ids), self.robots_df(),
+                carried=self.store.read_snapshot(self.spark, "frontier", ep.prev),
+                n_cand_bound=len(seed_ids) * 30,
+            )
+            n_new = sum(bucket_counts.values())
+            ep.commit(
+                {"reseeded": len(seed_ids), "new_urls": n_new},
+                frontier=frontier, seen_state=state, new_rows=new_rows,
+                bucket_counts=bucket_counts,
+            )
+        return {"epoch": ep.epoch, "new_urls": n_new}
 
     def fold_segments(self) -> dict:
         """Explicit LSM maintenance (major compaction): fold each bucket's
@@ -842,35 +836,19 @@ class CrawlEngine:
         tier_absorb). Commits a normal epoch (resume-safe, lineage-
         metered); retired payload files become orphans the next
         compaction-cadence GC reclaims."""
-        prev = self.store.last_epoch()
-        assert prev is not None, "bootstrap first"
-        epoch = prev + 1
-        self.store.clean_epoch(epoch)  # phantom-delta guard (see step())
-        seen_state = self._read_seen_state(prev)
-        assert seen_state is not None
-        live = self._latest_state_rows(seen_state)
-        segs_before = int(live.count())
-        # restamp to the folding epoch so the delta write (filter
-        # epoch == current) captures every folded row; the fold row's
-        # lo=0 interval supersedes the bucket's whole prior stack on read
-        folded = dedup.merge_segments(live, store_root=self._seg_root).withColumn(
-            "epoch", F.lit(epoch).cast("int")
-        )
-        st = self.store
-        frontier = st.read_snapshot(self.spark, "frontier", prev)
-        host_state = st.read_snapshot(self.spark, "host_state", prev).select(
-            "host", "tokens", F.lit(epoch).cast("int").alias("epoch")
-        )
-        empty_rows = _local_df(self.spark, [], frontier.schema)
-        self._write_epoch(
-            epoch, frontier, folded, host_state, empty_rows, None, None,
-            {"fold_segments_before": segs_before},
-            bucket_counts={},
-        )
-        segs_after = int(
-            self._latest_state_rows(self._read_seen_state(epoch)).count()
-        )
-        return {"epoch": epoch, "segments_before": segs_before,
+        with self._epoch() as ep:
+            live = self._read_seen_state(ep.prev)
+            assert live is not None
+            segs_before = int(live.count())
+            # restamp to the folding epoch so the delta write (filter
+            # epoch == current) captures every folded row; the fold row's
+            # lo=0 interval supersedes the bucket's whole prior stack on read
+            folded = dedup.merge_segments(live, store_root=self._seg_root).withColumn(
+                "epoch", F.lit(ep.epoch).cast("int")
+            )
+            ep.commit({"fold_segments_before": segs_before}, seen_state=folded)
+        segs_after = int(self._read_seen_state(ep.epoch).count())
+        return {"epoch": ep.epoch, "segments_before": segs_before,
                 "segments_after": segs_after}
 
     def run(self, seed_ids: list[int] | None = None, max_epochs: int = 1000) -> int:

@@ -18,6 +18,8 @@ corrupt higher version falls back to the previous one); superseded
 versions are pruned best-effort after the new one lands, keeping one
 predecessor. A killed job therefore always resumes from the last committed
 epoch; partially-written epoch K+1 dirs are ignored and overwritten.
+`commit(epoch, meta=..., compacted=...)` publishes exactly the meta keys
+and table compactions it is passed: the store stages nothing between calls.
 Snapshot tables (frontier/host_state) are read at exactly one epoch; delta
 tables (seen_exact/seen_state/records/documents/metrics/revoked) are read
 as the union of epochs <= K (seen_state additionally keeps only the latest
@@ -225,12 +227,8 @@ class CheckpointStore:
 
     def meta(self, key: str, default=None):
         """Small committed key/value state riding in the manifest (e.g. the
-        current host-bucket fan-out) — visible only after commit()."""
+        current host-bucket fan-out) — written only by commit(meta=...)."""
         return self._manifest()["meta"].get(key, default)
-
-    def set_meta(self, key: str, value) -> None:
-        self._pending_meta = getattr(self, "_pending_meta", {})
-        self._pending_meta[key] = value
 
     def table_path(self, table: str, epoch: int) -> str:
         return f"{self.workdir}/{table}/epoch={epoch}"
@@ -243,9 +241,9 @@ class CheckpointStore:
         the aborted fetch's records/documents dirs in place — and
         read_deltas, which trusts any existing dir at a committed epoch,
         would surface those phantom rows the moment the replacement op
-        commits the epoch. Called at the START of every epoch-writing op,
-        before its first write; parquet 'overwrite' mode only protects the
-        tables the op itself writes."""
+        commits the epoch. Called when an epoch transaction opens, before
+        its first write; parquet 'overwrite' mode only protects the tables
+        the op itself writes."""
         for table in SNAPSHOT_TABLES + DELTA_TABLES:
             p = self.table_path(table, epoch)
             if self.fs.exists(p):
@@ -295,33 +293,39 @@ class CheckpointStore:
 
     def compact_deltas(
         self, spark: SparkSession, table: str, upto_epoch: int, transform=None
-    ) -> None:
-        """Fold all deltas <= upto_epoch into one partitioned dir. Readers
-        switch over only at the next manifest commit (the compacted epoch is
-        recorded there), so a crash mid-compaction leaves an ignored orphan
-        dir. Old delta dirs are retained (cheap, crash-safe; a vacuum step
-        can remove them once the compaction is committed). `transform`
-        (DataFrame -> DataFrame) folds row-superseding tables — e.g.
-        seen_state keeps only the latest row per bucket."""
+    ) -> bool:
+        """Fold all deltas <= upto_epoch into one partitioned dir; returns
+        whether it wrote one (False: the table has no deltas). Readers
+        switch over only once a commit names the compaction
+        (`commit(..., compacted={table: upto_epoch})`), so a crash
+        mid-compaction leaves an ignored orphan dir. Old delta dirs are
+        retained (cheap, crash-safe; a vacuum step can remove them once the
+        compaction is committed). `transform` (DataFrame -> DataFrame) folds
+        row-superseding tables — e.g. seen_state keeps only the latest row
+        per bucket."""
         df = self.read_deltas(spark, table, upto_epoch)
         if df is None:
-            return
+            return False
         if transform is not None:
             df = transform(df)
         df.write.mode("overwrite").parquet(self.compacted_path(table, upto_epoch))
-        self._pending_compactions = getattr(self, "_pending_compactions", {})
-        self._pending_compactions[table] = upto_epoch
+        return True
 
-    def commit(self, epoch: int) -> None:
+    def commit(
+        self,
+        epoch: int,
+        *,
+        meta: dict | None = None,
+        compacted: dict[str, int] | None = None,
+    ) -> None:
+        """Publish `epoch` as committed, together with exactly the manifest
+        meta keys in `meta` and the table compactions in `compacted` (table
+        -> folded epoch); the store itself stages nothing between calls."""
         m = self._manifest()
         epochs = set(m["epochs"])
         epochs.add(epoch)
-        for table, e in getattr(self, "_pending_compactions", {}).items():
-            m["compacted"][table] = e
-        self._pending_compactions = {}
-        meta = m["meta"]
-        meta.update(getattr(self, "_pending_meta", {}))
-        self._pending_meta = {}
+        m["compacted"].update(compacted or {})
+        m["meta"].update(meta or {})
         versions = self._manifest_versions()
         v_new = (versions[0] if versions else 0) + 1
         # commit = create the NEXT version under a fresh name (no moment
@@ -330,7 +334,8 @@ class CheckpointStore:
         self.fs.write_text_atomic(
             self.manifest_path(v_new),
             json.dumps(
-                {"epochs": sorted(epochs), "compacted": m["compacted"], "meta": meta}
+                {"epochs": sorted(epochs), "compacted": m["compacted"],
+                 "meta": m["meta"]}
             ),
         )
         for v in versions:

@@ -51,8 +51,7 @@ def test_manifest_versioning_crash_windows(tmp_path):
     import json
 
     st = CheckpointStore(tmp_path / "v")
-    st.set_meta("n_buckets", 128)
-    st.commit(0)
+    st.commit(0, meta={"n_buckets": 128})
     st.commit(1)
     assert st.committed_epochs() == [0, 1]
     # torn write of the NEXT version (crash mid-create on a non-atomic
@@ -82,9 +81,7 @@ def test_manifest_versioning_crash_windows(tmp_path):
 def test_meta_visible_only_after_commit(tmp_path):
     st = CheckpointStore(tmp_path / "m")
     assert st.meta("n_buckets") is None
-    st.set_meta("n_buckets", 128)
-    assert st.meta("n_buckets") is None  # pending, not yet committed
-    st.commit(0)
+    st.commit(0, meta={"n_buckets": 128})
     assert st.meta("n_buckets") == 128
     # a fresh store on the same workdir sees the committed value
     assert CheckpointStore(tmp_path / "m").meta("n_buckets") == 128

@@ -32,7 +32,7 @@ def test_canonicalize_golden_pairs():
     ]
     for raw, want in cases:
         assert urltools.canonicalize(base, raw) == want
-    got = urltools.canonicalize_series(
+    got = urltools.canonicalize_frame(
         pd.Series([base] * len(cases)), pd.Series([c[0] for c in cases])
     )
     assert list(got) == [c[1] for c in cases]

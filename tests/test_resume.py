@@ -6,6 +6,8 @@ table must equal the uninterrupted run's, row for row."""
 
 from __future__ import annotations
 
+import pytest
+
 from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
 
 SEEDS = [7]
@@ -61,13 +63,15 @@ def _persisted(spark) -> int:
 
 
 def test_step_paths_release_their_caches(spark, tmp_path):
-    """Every step path (normal, zero-grant, drained) unpersists the frames
-    it cached, and a drained step commits nothing: step() returns None, the
-    committed epochs are unchanged and no table dir exists at the next
-    epoch."""
+    """Every step path (normal, zero-grant, drained) and every other
+    epoch-writing op (bootstrap, revoke, reseed, fold_segments) unpersists
+    the frames it cached, and a drained step commits nothing: step()
+    returns None, the committed epochs are unchanged and no table dir
+    exists at the next epoch."""
     eng = CrawlEngine(spark, tmp_path / "n", epoch_seconds=60.0)
-    eng.bootstrap(SEEDS)
     base = _persisted(spark)
+    eng.bootstrap(SEEDS)
+    assert _persisted(spark) == base
     m = eng.step()
     assert m is not None and m["granted"] > 0
     assert _persisted(spark) == base
@@ -86,6 +90,81 @@ def test_step_paths_release_their_caches(spark, tmp_path):
     assert _persisted(spark) == base
     assert eng.store.committed_epochs() == committed
     assert not list(eng.store.workdir.glob(f"*/epoch={committed[-1] + 1}"))
+
+    victims = [r.url for r in eng.seen().limit(2).collect()]
+    for op in (lambda: eng.revoke(victims), lambda: eng.reseed(SEEDS), eng.fold_segments):
+        base = _persisted(spark)
+        op()
+        assert _persisted(spark) == base
+
+
+def test_failed_step_releases_its_caches(spark, tmp_path):
+    """A step whose checkpoint write fails mid-epoch still unpersists every
+    frame it cached, and the epoch then retries cleanly."""
+    eng = CrawlEngine(spark, tmp_path / "w", epoch_seconds=60.0)
+    eng.bootstrap(SEEDS)
+    write = eng.store.write
+
+    def failing_write(table, epoch, df):
+        if table == "seen_exact":  # after frontier, seen_state, host_state
+            raise OSError("injected write failure")
+        return write(table, epoch, df)
+
+    eng.store.write = failing_write
+    base = _persisted(spark)
+    with pytest.raises(OSError, match="injected"):
+        eng.step()
+    assert _persisted(spark) == base
+    eng.store.write = write
+    assert eng.step() is not None
+    assert _persisted(spark) == base
+
+
+def test_failed_split_commit_leaks_no_fanout(spark, tmp_path):
+    """A step that stages a split and then fails to commit must not leak the
+    staged fan-out into the next op's commit: after fold_segments() on the
+    same engine, the committed fan-out is unchanged and every committed
+    seen_state key sits in bucket url_id % n_buckets."""
+    from pyspark.sql import functions as F
+
+    from gsccca_tax_records_scraper_spark.operators import segstore
+
+    eng = CrawlEngine(spark, tmp_path / "s", epoch_seconds=60.0, split_threshold=1)
+    eng.bootstrap([1])
+    n_buckets = eng._n_buckets()
+    commit = eng.store.commit
+
+    def failing_commit(*args, **kwargs):
+        eng.store.commit = commit  # raise once
+        raise OSError("injected commit failure")
+
+    eng.store.commit = failing_commit
+    with pytest.raises(OSError, match="injected"):
+        eng.step()
+    # the failed step did split: its uncommitted frontier is re-bucketed
+    staged = spark.read.parquet(
+        eng.store.table_path("frontier", eng.store.last_epoch() + 1)
+    )
+    assert staged.agg(F.max("host_bucket")).first()[0] >= n_buckets
+    eng.fold_segments()
+    assert eng._n_buckets() == n_buckets
+    state = eng._read_seen_state(eng.store.last_epoch()).collect()
+    assert state
+    for r in state:
+        _bloom, _cuckoo, ids, _hs = segstore.read_segment(eng._seg_root, r.file)
+        assert (ids % n_buckets == r.host_bucket).all(), r
+
+
+def test_epoch_guards_raise(spark, tmp_path):
+    """Opening an epoch on the wrong workdir state raises (an assert would
+    vanish under `python -O` and let a second bootstrap commit)."""
+    from gsccca_tax_records_scraper_spark.sources.checkpoint import CheckpointStore
+
+    with pytest.raises(RuntimeError, match="bootstrap first"):
+        CrawlEngine(spark, tmp_path / "e", epoch_seconds=60.0).step()
+    CheckpointStore(tmp_path / "b").commit(0, meta={"state_backend": "store"})
+    with pytest.raises(RuntimeError, match="already bootstrapped"):
+        CrawlEngine(spark, tmp_path / "b", epoch_seconds=60.0).bootstrap(SEEDS)
 
 
 def test_partial_write_ignored(spark, tmp_path):

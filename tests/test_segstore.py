@@ -144,9 +144,7 @@ def test_engine_refuses_non_store_workdir(spark, tmp_path):
     # always meant inline), are refused
     for name, meta in (("inline", {"state_backend": "inline"}), ("unkeyed", {})):
         st = CheckpointStore(tmp_path / name)
-        for k, v in meta.items():
-            st.set_meta(k, v)
-        st.commit(0)
+        st.commit(0, meta=meta)
         with pytest.raises(ValueError, match="'inline' backend"):
             CrawlEngine(spark, tmp_path / name, epoch_seconds=60.0)
 
