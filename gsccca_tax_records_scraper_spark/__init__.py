@@ -7,7 +7,6 @@ pyspark.sql DataFrames + vectorized pandas/Arrow UDFs over partitioned parquet
 (Iceberg-style) tables. See SURVEY.md for the operator-by-operator mapping.
 
 Layout:
-  schemas      — StructTypes for spans/frontier/seeds/serp/robots (SURVEY §1)
   sitegen      — deterministic synthetic GSCCCA site (serp + detail pages)
   functions/   — URL canonicalization + field-extraction library (SURVEY §2.8)
   operators/   — dedup (exact + blocked-Bloom/cuckoo), politeness, scoring,

@@ -74,16 +74,14 @@ state-side shuffle on a real cluster (written per-bucket; the cogroup reads
 co-located partitions). Per-epoch state-byte movement is proportional to
 the TOUCHED bucket set, in both directions (the r3 verdict's #1):
 
-  - input: for SMALL batches (the politeness-limited regime, where state
-    >> batch) the state side is pruned to the batch's distinct host_buckets
-    before the cogroup (a bounded <= fan-out driver collect builds a static
-    `isin` predicate, so a bucketed/sorted state table prunes at the scan);
-    an epoch that touches 5% of the buckets ships 5% of the state bytes
-    into Python, not all of them. host_bucket is a url-hash, so a batch
-    much larger than the fan-out necessarily touches every bucket — the
-    engine enables pruning only when its granted-count bound says the
-    batch is small, because the distinct-bucket pass costs one extra scan
-    of the candidate lineage (`prune_state` in dedup_candidates);
+  - input: the state side is metadata rows only (at most fan-out x
+    MAX_SEGS), and a bucket with state but no candidates returns at once,
+    so no state payload byte is read for an untouched bucket. A caller can
+    still prune the state side to the batch's distinct host_buckets before
+    the cogroup (`prune_state` in dedup_candidates: a bounded <= fan-out
+    driver collect builds a static `isin` predicate); the engine does not,
+    since that collect costs one extra scan of the candidate lineage and
+    the metadata rows it would drop are few;
   - output: a touched bucket that admitted NOTHING (every candidate was a
     dup) emits no state row at all, and a bucket that DID admit emits only
     its new segment (plus whatever the tiering absorbed) — existing
@@ -119,7 +117,10 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from ..sources.checkpoint import TABLES
 from . import seenset, segstore
 
 _ORDER_COLS = [
@@ -138,24 +139,28 @@ _FLAT_ORDER = ["co_depth", "co_seed_id", "co_page", "co_link_order", "url_id"]
 # rows are freshly-discovered candidates (status "", lineage derived), which
 # every engine path satisfies by construction (_finalize_candidates).
 _FLAT_SCHEMA = (
-    "url_id long, url string, host_bucket int, priority double, "
-    "co_seed_id long, co_page int, co_link_order int, co_depth int, "
-    "lin_parent long"
+    StructType().add("url_id", "long").add("url", "string")
+    .add("host_bucket", "integer").add("priority", "double")
+    .add("co_seed_id", "long").add("co_page", "integer")
+    .add("co_link_order", "integer").add("co_depth", "integer")
+    .add("lin_parent", "long")
 )
+_PAYLOAD_COLS = _FLAT_SCHEMA.names
 # seen_state metadata rows (operators/segstore.py): the payload lives in a
 # content-addressed write-once file; only these rows ride the Spark plan.
 # seg: the segment's id within its bucket (newer = higher); lo: the row
 # supersedes segments in [lo, seg) — lo == seg for a pure append, lo == 0
 # for a full rewrite. A bucket's LIVE segments are the latest row per
 # (bucket, seg) minus every seg covered by a higher row's interval.
-_META_SCHEMA = (
-    "host_bucket int, seg int, lo int, n_items long, epoch int, file string"
-)
-_PA_META = pa.schema(
-    [("host_bucket", pa.int32()), ("seg", pa.int32()), ("lo", pa.int32()),
-     ("n_items", pa.int64()), ("epoch", pa.int32()), ("file", pa.string())]
-)
+_META_SCHEMA = TABLES["seen_state"]
+_PA_META = to_arrow_schema(_META_SCHEMA)
 _META_COLS = _PA_META.names
+# cogroup output: the payload columns, then the metadata columns (NULL on
+# admitted rows, set on the bucket's appended state row)
+_OUT_META_SCHEMA = StructType(
+    _FLAT_SCHEMA.fields + [f for f in _META_SCHEMA.fields if f.name != "host_bucket"]
+)
+_PA_OUT_META = to_arrow_schema(_OUT_META_SCHEMA)
 
 # probe fan-out bound: a candidate checks at most this many segment blooms.
 # The binary-counter merge rule keeps the live count at ~log2(|seen|/batch)
@@ -214,13 +219,6 @@ def keep_first_in_batch(candidates: DataFrame) -> DataFrame:
     )
 
 
-_PAYLOAD_COLS = [
-    "url_id", "url", "host_bucket", "priority",
-    "co_seed_id", "co_page", "co_link_order", "co_depth", "lin_parent",
-]
-_OUT_META_SCHEMA = (
-    _FLAT_SCHEMA + ", seg int, lo int, n_items long, epoch int, file string"
-)
 def probe_sorted_keys(
     seen_ids: np.ndarray, seen_hs: np.ndarray, q_ids: np.ndarray, q_hs: np.ndarray
 ) -> np.ndarray:
@@ -421,23 +419,15 @@ def emit_run(
     return run_ids, run_hs, seg_id, lo, bloom_b, cuckoo_b
 
 
-# arrow output field layout — must mirror _OUT_META_SCHEMA
-_PA_PAYLOAD_FIELDS = [
-    ("url_id", pa.int64()), ("url", pa.string()), ("host_bucket", pa.int32()),
-    ("priority", pa.float64()), ("co_seed_id", pa.int64()), ("co_page", pa.int32()),
-    ("co_link_order", pa.int32()), ("co_depth", pa.int32()), ("lin_parent", pa.int64()),
-]
-# typed-zero payload values for the appended state row (never read; kept
-# value-identical to the previous pandas implementation)
+# typed-zero payload values for the appended state row, one per payload
+# column (never read; kept value-identical to the previous pandas
+# implementation)
 _PA_STATE_ZEROS = [0, "", 0, 0.0, 0, 0, 0, 0, 0]
-_PA_OUT_META = pa.schema(
-    _PA_PAYLOAD_FIELDS + [f for f in _PA_META if f.name != "host_bucket"]
-)
 
 
 def _meta_table(rows: list[tuple]) -> pa.Table:
-    """(host_bucket, seg, lo, n_items, epoch, file) tuples -> metadata rows
-    (the one place the revoke/merge/split UDF outputs get their types)."""
+    """_META_COLS-ordered tuples -> metadata rows (the one place the
+    revoke/merge/split UDF outputs get their types)."""
     return pa.Table.from_pylist([dict(zip(_META_COLS, r)) for r in rows], schema=_PA_META)
 
 
@@ -536,9 +526,12 @@ def _fused_fn(epoch: int, store_root: str):
         take = pa.array(new_idx)
         zeros = list(_PA_STATE_ZEROS)
         zeros[2] = bucket
+        # the payload columns lead _PA_OUT_META; zip stops after them
         arrays = [
-            pa.concat_arrays([_pa_col(left[c].take(take)), pa.array([z], type=t)])
-            for (c, t), z in zip(_PA_PAYLOAD_FIELDS, zeros)
+            pa.concat_arrays(
+                [_pa_col(left[f.name].take(take)), pa.array([z], type=f.type)]
+            )
+            for f, z in zip(_PA_OUT_META, zeros)
         ]
         seg_a = np.zeros(n + 1, dtype=np.int32); seg_a[-1] = seg_id
         lo_a = np.zeros(n + 1, dtype=np.int32); lo_a[-1] = lo
@@ -761,20 +754,18 @@ def dedup_candidates(
     unpersist them once new_rows/state have been consumed (the engine does;
     never clear the session-wide cache, other users' frames live there too).
 
-    Per-epoch state transport: O(touched buckets) on the way IN (with
-    `prune_state=True` the state input is pruned to the batch's distinct
-    buckets before the cogroup) and O(new keys), amortized, on the way
-    OUT — an all-dup bucket emits nothing and an admitting bucket emits
-    only its new segment run; the returned snapshot reuses the prior
-    epoch's un-absorbed rows verbatim (module docstring has the full
-    story).
+    Per-epoch state transport: metadata rows only on the way IN (with
+    `prune_state=True`, only the batch's distinct buckets' rows) and
+    O(new keys), amortized, on the way OUT — an all-dup bucket emits
+    nothing and an admitting bucket emits only its new segment run; the
+    returned snapshot reuses the prior epoch's un-absorbed rows verbatim
+    (module docstring has the full story).
 
     `prune_state` costs one extra scan of the candidate lineage (the
-    distinct-bucket collect), so it is the CALLER's call: host_bucket is a
-    url-hash, so any batch much larger than the fan-out touches every
-    bucket and pruning cannot help — the engine turns it on only when its
-    granted-count bound says the batch is small (plans/epoch._admit), which
-    is exactly the politeness-limited regime where state >> batch.
+    distinct-bucket collect), so it is the CALLER's call; the engine
+    leaves it off, since the state side it would prune is at most
+    fan-out x MAX_SEGS metadata rows and an untouched bucket's group
+    returns without reading any segment.
 
     Precondition: every `seen_state` row is stamped with an epoch earlier
     than `epoch` (prior state was committed at an earlier epoch). The

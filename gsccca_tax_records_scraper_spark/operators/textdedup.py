@@ -25,7 +25,9 @@ where a streaming join parallelizes better than giant per-bucket arrays.
 
 All hashes are md5/hex-derived so the DuckDB oracle can reproduce them
 bit-for-bit (no engine-specific hash functions in the contract surface).
-Everything is built-in pyspark.sql.functions — no Python UDFs.
+The exact, ngram and minhash-LSH operators are built-in
+pyspark.sql.functions only; simhash_fingerprints hashes in a Python
+mapInPandas kernel over Arrow batches.
 """
 
 from __future__ import annotations

@@ -24,10 +24,9 @@ Shuffle budget per epoch (the 100-TB story):
     no host skew); the bucket's whole seen set is named by its segment
     metadata rows (filters + packed sorted key arrays live in the segment
     store), so no seen-side join or aggregation exists. The state input is
-    pruned to the batch's distinct buckets (one
-    bounded <= fan-out collect) and unchanged buckets emit no state row, so
-    per-epoch Arrow AND parquet state traffic is O(touched buckets), with
-    the probe/merge work O(batch).
+    metadata rows only (<= fan-out x MAX_SEGS) and unchanged buckets emit no
+    state row, so per-epoch parquet state traffic is O(touched buckets),
+    with the probe/merge work O(batch).
   - writes are partition-local.
 
 Materialization budget per epoch: each epoch product is computed once. The
@@ -69,7 +68,7 @@ from .. import sitegen
 from ..functions import extract, urltools
 from ..operators import dedup, politeness
 from ..simulator import RobotsRule, default_robots
-from ..sources.checkpoint import CheckpointStore
+from ..sources.checkpoint import TABLES, CheckpointStore
 
 _FETCH_SCHEMA = (
     "url_id long, url string, seed_id long, page int, depth int, link_order int, "
@@ -81,15 +80,6 @@ _FETCH_SCHEMA = (
 )
 
 _CANDIDATE_COLS = ["url", "seed_id", "page", "link_order", "depth", "parent_url_id"]
-
-# outlinks-per-fetched-page upper bound (sitegen emits 5-10 SERP links and a
-# handful of detail links; real deployments size this from their parser).
-# Used to bound an epoch's candidate count for the dedup state-prune rule.
-_OUTLINKS_BOUND = 16
-# prune the dedup state input when bound(candidates) <= this many per bucket
-# (beyond that the url-hash bucketing touches every bucket anyway and the
-# distinct-bucket pass would be a wasted candidate scan)
-_PRUNE_BATCH_PER_BUCKET = 4
 
 
 def _local_df(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
@@ -228,16 +218,16 @@ class _Epoch:
             frontier = st.read_snapshot(spark, "frontier", self.prev)
         if host_state is None:
             host_state = (
-                _local_df(spark, [], "host string, tokens double, epoch int")
+                _local_df(spark, [], TABLES["host_state"])
                 if self.prev is None
                 else st.read_snapshot(spark, "host_state", self.prev).select(
                     "host", "tokens", F.lit(epoch).cast("int").alias("epoch")
                 )
             )
         if seen_state is None:
-            seen_state = _local_df(spark, [], dedup._META_SCHEMA)
+            seen_state = _local_df(spark, [], TABLES["seen_state"])
         if new_rows is None:
-            new_rows = _local_df(spark, [], "host_bucket int, url_id long, url string")
+            new_rows = _local_df(spark, [], TABLES["seen_exact"])
 
         def lineage(df: DataFrame) -> DataFrame:
             return df.select("host_bucket", "url_id", "url", F.lit(epoch).alias("epoch"))
@@ -265,7 +255,7 @@ class _Epoch:
             _local_df(
                 spark,
                 (mrows + per_bucket) or [(epoch, -1, "noop", 0)],
-                "epoch int, host_bucket int, metric string, value long",
+                TABLES["metrics"],
             ),
         )
         # fold the deltas on a cadence so resume reads O(1) dirs, not
@@ -487,7 +477,6 @@ class CrawlEngine:
         raw_candidates: DataFrame,
         robots: DataFrame,
         carried: DataFrame | None = None,
-        n_cand_bound: int | None = None,
     ) -> tuple[DataFrame, dict[int, int], DataFrame, DataFrame]:
         """Junk filter + robots gate + dedup, then the tail every admitting
         op shares: cache the admitted rows, count them per bucket in one
@@ -497,22 +486,12 @@ class CrawlEngine:
         `robots` is the caller's robots_df(), built once per epoch.
         The seen_state snapshot names the whole seen set (segment metadata
         per bucket), so the hot path reads ONE snapshot — the
-        seen_exact delta table is write-only here (export/lineage).
-
-        `n_cand_bound` is the caller's upper bound on the candidate count
-        (granted pages x outlinks-per-page): when the batch is small
-        relative to the fan-out, dedup prunes its state input to the
-        touched buckets (worth one extra candidate scan); a batch >> fan-out
-        touches every bucket anyway, so pruning is skipped."""
+        seen_exact delta table is write-only here (export/lineage)."""
         cands = self._finalize_candidates(raw_candidates, ep)
         gated = politeness.apply_robots_gate(cands, robots)
         seen_state = self._read_seen_state(ep.prev) if ep.prev is not None else None
-        prune = (
-            n_cand_bound is not None
-            and n_cand_bound <= _PRUNE_BATCH_PER_BUCKET * ep.n_buckets
-        )
         new_rows, state, handles = dedup.dedup_candidates(
-            gated, seen_state, ep.epoch, prune_state=prune, store_root=self._seg_root
+            gated, seen_state, ep.epoch, store_root=self._seg_root
         )
         ep.hold(handles)
         new_rows = ep.cache(new_rows)
@@ -735,7 +714,6 @@ class CrawlEngine:
             new_rows, bucket_counts, seen_state, frontier_next = self._admit(
                 ep, children, robots,
                 carried=pending.join(granted.select("url_id"), "url_id", "left_anti"),
-                n_cand_bound=n_granted * _OUTLINKS_BOUND,
             )
             n_cancelled = int(
                 fetched.agg(F.sum(F.col("cancelled").cast("int")).alias("nc")).first()["nc"]
@@ -811,11 +789,9 @@ class CrawlEngine:
         (reference analog: re-running the scraper after clearing resume
         state). Returns admission counts; follow with step()/run() to drain."""
         with self._epoch() as ep:
-            # SERP fan-out bound: <= 3 pages x <= 10 links per seed (sitegen)
             new_rows, bucket_counts, state, frontier = self._admit(
                 ep, self._serp_raw_candidates(seed_ids), self.robots_df(),
                 carried=self.store.read_snapshot(self.spark, "frontier", ep.prev),
-                n_cand_bound=len(seed_ids) * 30,
             )
             n_new = sum(bucket_counts.values())
             ep.commit(

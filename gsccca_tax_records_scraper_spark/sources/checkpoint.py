@@ -23,7 +23,15 @@ and table compactions it is passed: the store stages nothing between calls.
 Snapshot tables (frontier/host_state) are read at exactly one epoch; delta
 tables (seen_exact/seen_state/records/documents/metrics/revoked) are read
 as the union of epochs <= K (seen_state additionally keeps only the latest
-row per bucket — see DELTA_TABLES note).
+row per bucket — see the TABLES note).
+
+Declared schemas: every table's schema is declared once, in TABLES. Reads
+pass it to the parquet reader, so no read launches a schema-inference job;
+writes (epoch tables and compactions) check the frame against it — names,
+order and types, nullability ignored, since parquet reads every field back
+as nullable — and refuse a drifted frame with a ValueError before any file
+is written. The check is what makes the declared read safe: a column a
+file lacks would otherwise read back as nulls instead of failing.
 
 Filesystem abstraction: plain paths use the local POSIX fast path; URI
 workdirs (hdfs://, s3a://, file://, ...) route the manifest/_SUCCESS/rename
@@ -40,16 +48,91 @@ from __future__ import annotations
 import json
 import os
 import re
+from itertools import zip_longest
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, StructType
 
-SNAPSHOT_TABLES = ("frontier", "host_state")
-# seen_state is a ROW-SUPERSEDING delta table: each epoch writes only the
-# bucket rows it changed; readers keep the latest row per bucket and the
-# periodic compaction folds superseded rows away
-DELTA_TABLES = ("seen_exact", "seen_state", "records", "documents", "metrics",
-                "revoked")
+_CRAWL_ORDER = (
+    StructType().add("seed_id", "long").add("page", "integer")
+    .add("link_order", "integer").add("depth", "integer")
+)
+# seen_exact and revoked: one lineage row per admitted / revoked url
+_URL_LINEAGE = (
+    StructType().add("host_bucket", "integer").add("url_id", "long")
+    .add("url", "string").add("epoch", "integer")
+)
+
+# The declared schema of every checkpoint table, in column order (a
+# declared read returns columns in this order). Types are built without a
+# JVM because the dedup operator derives its Arrow schemas from the
+# seen_state entry on the Python workers.
+TABLES: dict[str, StructType] = {
+    # snapshot tables
+    "frontier": (
+        StructType().add("url_id", "long").add("url", "string").add("host", "string")
+        .add("host_bucket", "integer").add("priority", "double")
+        .add("crawl_order", _CRAWL_ORDER).add("status", "string")
+        .add("lineage", StructType().add("parent_url_id", "long").add("seed_id", "long")
+             .add("depth", "integer").add("discovered_epoch", "integer"))
+    ),
+    "host_state": (
+        StructType().add("host", "string").add("tokens", "double").add("epoch", "integer")
+    ),
+    # delta tables. seen_state is ROW-SUPERSEDING: each epoch writes only
+    # the bucket rows it changed; readers keep the latest row per bucket and
+    # the periodic compaction folds superseded rows away
+    "seen_exact": _URL_LINEAGE,
+    "revoked": _URL_LINEAGE,
+    "seen_state": (
+        StructType().add("host_bucket", "integer").add("seg", "integer")
+        .add("lo", "integer").add("n_items", "long").add("epoch", "integer")
+        .add("file", "string")
+    ),
+    "records": (
+        StructType().add("doc_id", "string").add("url_id", "long").add("url", "string")
+        .add("county", "string").add("instrument", "string").add("date_filed", "string")
+        .add("book", "string").add("page_no", "string").add("debtors", "string")
+        .add("claimants", "string").add("amount", "string").add("amount_value", "double")
+        .add("address", "string").add("description", "string")
+        .add("pdf_document_url", "string").add("media_ref", "string")
+        .add("cancelled", "boolean").add("epoch", "integer").add("crawl_order", _CRAWL_ORDER)
+    ),
+    "documents": (
+        StructType().add("doc_id", "string").add("url", "string")
+        .add("spans", ArrayType(
+            StructType().add("kind", "string").add("text", "string")
+            .add("media_ref", "string").add("offset", "integer")
+        ))
+    ),
+    "metrics": (
+        StructType().add("epoch", "integer").add("host_bucket", "integer")
+        .add("metric", "string").add("value", "long")
+    ),
+}
+
+
+def _declared(table: str) -> StructType:
+    if table not in TABLES:
+        raise ValueError(f"{table!r} is not a declared checkpoint table")
+    return TABLES[table]
+
+
+def _write_checked(table: str, df: DataFrame, path: str) -> None:
+    """Write `df` to `path` once its schema matches the table's declared
+    one (names, order and types; nullability ignored at every level:
+    simpleString() carries no nullability)."""
+    got = [f.simpleString() for f in df.schema.fields]
+    want = [f.simpleString() for f in _declared(table).fields]
+    for g, w in zip_longest(got, want, fillvalue="nothing"):
+        if g != w:
+            raise ValueError(
+                f"checkpoint table {table!r}: writing field {g!r} where {w!r}"
+                " is declared"
+            )
+    df.write.mode("overwrite").parquet(path)
+
 
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d+)\.json$")
 
@@ -244,16 +327,16 @@ class CheckpointStore:
         commits the epoch. Called when an epoch transaction opens, before
         its first write; parquet 'overwrite' mode only protects the tables
         the op itself writes."""
-        for table in SNAPSHOT_TABLES + DELTA_TABLES:
+        for table in TABLES:
             p = self.table_path(table, epoch)
             if self.fs.exists(p):
                 self.fs.delete_dir(p)
 
     def write(self, table: str, epoch: int, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.table_path(table, epoch))
+        _write_checked(table, df, self.table_path(table, epoch))
 
     def read_snapshot(self, spark: SparkSession, table: str, epoch: int) -> DataFrame:
-        return spark.read.parquet(self.table_path(table, epoch))
+        return spark.read.schema(_declared(table)).parquet(self.table_path(table, epoch))
 
     def compacted_path(self, table: str, epoch: int) -> str:
         return f"{self.workdir}/{table}/compacted={epoch}"
@@ -272,6 +355,7 @@ class CheckpointStore:
         latest committed compaction instead of the deltas it folded in.
         `manifest` pins the view to a specific retained manifest (see
         manifests()); default is the current one."""
+        schema = _declared(table)
         comp = (
             manifest["compacted"].get(table)
             if manifest is not None
@@ -289,7 +373,7 @@ class CheckpointStore:
         ]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return spark.read.schema(schema).parquet(*paths)
 
     def compact_deltas(
         self, spark: SparkSession, table: str, upto_epoch: int, transform=None
@@ -308,7 +392,7 @@ class CheckpointStore:
             return False
         if transform is not None:
             df = transform(df)
-        df.write.mode("overwrite").parquet(self.compacted_path(table, upto_epoch))
+        _write_checked(table, df, self.compacted_path(table, upto_epoch))
         return True
 
     def commit(

@@ -85,3 +85,23 @@ def test_meta_visible_only_after_commit(tmp_path):
     assert st.meta("n_buckets") == 128
     # a fresh store on the same workdir sees the committed value
     assert CheckpointStore(tmp_path / "m").meta("n_buckets") == 128
+
+
+def test_write_refuses_schema_drift(spark, tmp_path):
+    """A frame whose schema drifts from the table's declared one is refused
+    before any file is written; a frame with the declared schema writes."""
+    from pyspark.sql import functions as F
+
+    st = CheckpointStore(tmp_path / "drift")
+    good = spark.createDataFrame([("h", 1.5, 3)], "host string, tokens double, epoch int")
+    for bad in (
+        good.withColumn("tokens", F.col("tokens").cast("bigint")),
+        good.drop("tokens"),
+    ):
+        with pytest.raises(ValueError, match="'host_state'.*tokens"):
+            st.write("host_state", 3, bad)
+        assert not (tmp_path / "drift" / "host_state" / "epoch=3").exists()
+    with pytest.raises(ValueError, match="not a declared checkpoint table"):
+        st.write("hosts", 3, good)
+    st.write("host_state", 3, good)
+    assert st.read_snapshot(spark, "host_state", 3).collect() == [("h", 1.5, 3)]

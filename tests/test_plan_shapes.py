@@ -242,3 +242,39 @@ def test_robots_frame_is_local_relation(spark, tmp_path):
     nodes = _optimized_nodes(CrawlEngine(spark, tmp_path / "r").robots_df())
     assert "LocalRelation" in nodes
     assert "LogicalRDD" not in nodes
+
+
+def test_checkpoint_reads_launch_no_job(spark, tmp_path):
+    """Checkpoint reads pass the table's declared schema, so opening a
+    committed table launches no schema-inference job."""
+    import time
+    import uuid
+
+    from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
+
+    wd = tmp_path / "reads"
+    eng = CrawlEngine(spark, wd, epoch_seconds=60.0)
+    eng.bootstrap([1])
+    assert eng.step() is not None
+    fresh = CrawlEngine(spark, wd, epoch_seconds=60.0)
+    k = fresh.store.last_epoch()
+    sc = spark.sparkContext
+    group = f"ckpt-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "checkpoint reads")
+    try:
+        fresh.store.read_snapshot(spark, "frontier", k)
+        fresh.store.read_snapshot(spark, "host_state", k)
+        fresh.store.read_deltas(spark, "seen_state", k)
+        # fence: a job in its own group; once the status tracker lists it,
+        # every earlier job start has been processed too (one ordered queue)
+        sc.setJobGroup(group + "-fence", "fence")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tr = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tr.getJobIdsForGroup(group + "-fence") and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tr.getJobIdsForGroup(group + "-fence")
+    assert list(tr.getJobIdsForGroup(group)) == []

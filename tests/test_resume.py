@@ -202,12 +202,12 @@ def test_crashed_op_leaves_no_phantom_deltas(spark, tmp_path):
     phantom = spark.createDataFrame(
         [("https://phantom.example/x", k + 1)], "url string, epoch int"
     )
-    real_cols = eng.records().columns
+    real = eng.records().schema
     pad = phantom
-    for c in real_cols:
-        if c not in pad.columns:
-            pad = pad.withColumn(c, F.lit(None))
-    eng.store.write("records", k + 1, pad.select(*real_cols))
+    for f in real.fields:
+        if f.name not in pad.columns:
+            pad = pad.withColumn(f.name, F.lit(None).cast(f.dataType))
+    eng.store.write("records", k + 1, pad.select(*real.names))
     victims = sorted(r.url for r in eng.seen().filter(F.col("epoch") == 0).collect())[:2]
     res = eng.revoke(victims)
     assert res["epoch"] == k + 1
