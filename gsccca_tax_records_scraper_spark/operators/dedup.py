@@ -219,21 +219,25 @@ def keep_first_in_batch(candidates: DataFrame) -> DataFrame:
     )
 
 
-def probe_sorted_keys(
+def find_sorted_keys(
     seen_ids: np.ndarray, seen_hs: np.ndarray, q_ids: np.ndarray, q_hs: np.ndarray
 ) -> np.ndarray:
-    """Exact 128-bit membership of (q_ids, q_hs) in the (id-sorted) seen key
-    arrays: two searchsorted passes + a direct compare for the (dominant)
-    unique-id case; the ultra-rare 60-bit id collision ranges are scanned."""
+    """Exact 128-bit lookup of (q_ids, q_hs) in the (id-sorted, non-empty)
+    seen key arrays: each query's position in them, -1 when absent. Two
+    searchsorted passes + a direct compare for the (dominant) unique-id
+    case; the ultra-rare 60-bit id collision ranges are scanned. The one
+    lookup behind both the dedup probe and revocation."""
     lo = np.searchsorted(seen_ids, q_ids, side="left")
     hi = np.searchsorted(seen_ids, q_ids, side="right")
-    found = np.zeros(len(q_ids), dtype=bool)
-    one = hi - lo == 1
-    if one.any():
-        found[one] = seen_hs[lo[one]] == q_hs[one]
+    pos = np.full(len(q_ids), -1, dtype=np.int64)
+    hit = hi - lo == 1
+    hit[hit] = seen_hs[lo[hit]] == q_hs[hit]
+    pos[hit] = lo[hit]
     for j in np.flatnonzero(hi - lo > 1):
-        found[j] = bool((seen_hs[lo[j]:hi[j]] == q_hs[j]).any())
-    return found
+        m = np.flatnonzero(seen_hs[lo[j]:hi[j]] == q_hs[j])
+        if len(m):
+            pos[j] = lo[j] + m[0]
+    return pos
 
 
 def _live_segments(right: pa.Table, store_root: str) -> list[dict]:
@@ -320,8 +324,7 @@ def probe_segments(segs: list[dict], q_ids: np.ndarray, q_hs: np.ndarray) -> np.
             mi = mi[cuckoo.contains(q_ids[mi].view(np.uint64))]
         if len(mi):
             seen_ids, seen_hs = seg_keys(s)
-            found = probe_sorted_keys(seen_ids, seen_hs, q_ids[mi], q_hs[mi])
-            fi = mi[found]
+            fi = mi[find_sorted_keys(seen_ids, seen_hs, q_ids[mi], q_hs[mi]) >= 0]
             seen[fi] = True
             undecided[fi] = False
     return seen
@@ -386,25 +389,43 @@ def _build_run(ids: np.ndarray, hs: np.ndarray) -> tuple[bytes, bytes]:
     return bloom.to_bytes(), cuckoo.to_bytes()
 
 
-def emit_run(
-    segs: list[dict], new_ids: np.ndarray, new_hs: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, int, int, bytes, bytes]:
-    """Materialize the epoch's new run over a live segment stack: canonical
-    (id, h) ordering, the tier_absorb decision, merge of any absorbed
-    segments' keys, and filter construction. ONE implementation shared by
-    the batch cogroup (_fused_fn) and the streaming state operator
-    (streaming/stateful._dedup_group_store) so the two operators can never
-    desynchronize on seg_id/lo/absorb semantics. Returns
-    (run_ids, run_hs, seg_id, lo, bloom_bytes, cuckoo_bytes); lo is the
-    run's coverage floor (== seg_id for a pure append, the lowest absorbed
-    seg otherwise, 0 for a full fold)."""
+def _write_run(
+    store_root: str, bucket: int, seg: int, lo: int, epoch: int,
+    ids: np.ndarray, hs: np.ndarray,
+) -> tuple:
+    """Build a (canonically ordered) run's filters, write it to the store
+    and return its _META_COLS metadata row. Write-once, content-addressed:
+    retries and replays converge on the same file name. Every seen-set
+    writer except revocation (which keeps a segment's bloom capacity)
+    goes through here."""
+    bloom_b, cuckoo_b = _build_run(ids, hs)
+    fname = segstore.write_segment(store_root, bucket, seg, bloom_b, cuckoo_b, ids, hs)
+    return (bucket, seg, lo, len(ids), epoch, fname)
+
+
+def append_run(
+    segs: list[dict], bucket: int, ids: np.ndarray, hs: np.ndarray,
+    epoch: int, store_root: str,
+) -> tuple[np.ndarray, tuple | None]:
+    """Admit (ids, hs) — unique keys — against a bucket's live segment
+    stack: probe, then write the not-yet-seen keys as ONE new run in
+    canonical (id, h) order, absorbing the segments tier_absorb names.
+    Shared by the batch cogroup (_fused_fn) and the streaming state
+    operator (streaming/stateful._dedup_group_store), so the two cannot
+    desynchronize on seg/lo/absorb semantics. Returns (new_mask, the run's
+    metadata row); the row is None when nothing is new. Its lo is the
+    run's coverage floor: == seg for a pure append, the lowest absorbed
+    seg otherwise, 0 for a full fold."""
+    new_mask = ~probe_segments(segs, ids, hs)
+    if not new_mask.any():
+        return new_mask, None
+    new_ids, new_hs = ids[new_mask], hs[new_mask]
     o = np.lexsort((new_hs, new_ids))
     new_ids, new_hs = new_ids[o], new_hs[o]
     j = tier_absorb([s["n"] for s in segs], len(new_ids))
+    seg_id = segs[-1]["seg"] + 1 if segs else 0
     if j == len(segs) - 1:  # pure append (also the empty-state case)
-        run_ids, run_hs = new_ids, new_hs
-        seg_id = segs[-1]["seg"] + 1 if segs else 0
-        lo = seg_id  # covers nothing below itself
+        run_ids, run_hs, lo = new_ids, new_hs, seg_id
     else:
         absorbed = segs[j + 1:]
         absorbed_keys = [seg_keys(s) for s in absorbed]
@@ -412,17 +433,9 @@ def emit_run(
         run_hs = np.concatenate([k[1] for k in absorbed_keys] + [new_hs])
         oo = np.lexsort((run_hs, run_ids))
         run_ids, run_hs = run_ids[oo], run_hs[oo]
-        seg_id = segs[-1]["seg"] + 1
         # full rewrite marks lo=0 so storage GC kills every older row
         lo = 0 if j < 0 else absorbed[0]["seg"]
-    bloom_b, cuckoo_b = _build_run(run_ids, run_hs)
-    return run_ids, run_hs, seg_id, lo, bloom_b, cuckoo_b
-
-
-# typed-zero payload values for the appended state row, one per payload
-# column (never read; kept value-identical to the previous pandas
-# implementation)
-_PA_STATE_ZEROS = [0, "", 0, 0.0, 0, 0, 0, 0, 0]
+    return new_mask, _write_run(store_root, bucket, seg_id, lo, epoch, run_ids, run_hs)
 
 
 def _meta_table(rows: list[tuple]) -> pa.Table:
@@ -443,7 +456,8 @@ def _fused_fn(epoch: int, store_root: str):
     by construction). Payloads are read through the worker's segment cache
     (operators/segstore.py) and the new run is WRITTEN to the store from
     here. Returns the kept-first NEW candidate rows (state columns NULL)
-    plus AT MOST ONE new segment metadata row (file non-NULL): an all-dup
+    plus AT MOST ONE new segment metadata row (file non-NULL, payload
+    columns NULL but host_bucket; append_run writes it): an all-dup
     bucket emits no state row, an admitting bucket emits only its new run
     plus whatever the tiering absorbed — un-absorbed segments never
     re-cross Arrow outbound (the caller carries them forward JVM-side,
@@ -498,59 +512,32 @@ def _fused_fn(epoch: int, store_root: str):
             first_mask[0] = True
             first_mask[1:] = ids_sorted[1:] != ids_sorted[:-1]
             kept_idx = order[first_mask]
-        kept_ids = ids[kept_idx]
-        kept_hs = left["url_h"].to_numpy()[kept_idx]
-        # (b)/(c) per-segment bloom probe + exact resolve: seen in any
-        # segment -> dup; found in none -> new
-        new_sel = ~probe_segments(segs, kept_ids, kept_hs)
-        new_idx = kept_idx[new_sel]
-        new_ids = kept_ids[new_sel]
-        new_hs = kept_hs[new_sel]
-        n = len(new_ids)
-
+        # (b)-(d) per-segment probe + exact resolve, then the confirmed-new
+        # keys become one run (canonical order + size-tiered absorb: state
+        # bytes must not depend on partition layout)
+        new_mask, row = append_run(
+            segs, bucket, ids[kept_idx], left["url_h"].to_numpy()[kept_idx],
+            epoch, store_root,
+        )
         # touched-but-unchanged bucket: every candidate was a dup, so the
         # state is byte-identical to last epoch's — emit NO state row; the
         # caller reuses the prior rows JVM-side, and the bucket's state
         # bytes never cross Arrow outbound
-        if not n:
+        if row is None:
             return _PA_OUT_META.empty_table()
 
-        # (d) canonical ordering + size-tiered absorb + filter build — the
-        # shared run-emission rule (state bytes must not depend on
-        # partition layout; emit_run owns the lexsort)
-        run_ids, run_hs, seg_id, lo, bloom_b, cuckoo_b = emit_run(
-            segs, new_ids, new_hs
+        # admitted payload rows (kept-first order, metadata NULL) + ONE
+        # state row (payload NULL but host_bucket). Only CHANGED buckets
+        # get here, so the row's stamp is the current epoch: the engine's
+        # delta write (filter epoch == current) writes exactly these rows
+        take = pa.array(kept_idx[new_mask])
+        admitted = pa.Table.from_arrays(
+            [_pa_col(left[c].take(take)) for c in _PAYLOAD_COLS]
+            + [pa.nulls(len(take), f.type) for f in _PA_OUT_META if f.name not in _PAYLOAD_COLS],
+            schema=_PA_OUT_META,
         )
-
-        # admitted payload rows (kept-first order) + ONE appended state row
-        take = pa.array(new_idx)
-        zeros = list(_PA_STATE_ZEROS)
-        zeros[2] = bucket
-        # the payload columns lead _PA_OUT_META; zip stops after them
-        arrays = [
-            pa.concat_arrays(
-                [_pa_col(left[f.name].take(take)), pa.array([z], type=f.type)]
-            )
-            for f, z in zip(_PA_OUT_META, zeros)
-        ]
-        seg_a = np.zeros(n + 1, dtype=np.int32); seg_a[-1] = seg_id
-        lo_a = np.zeros(n + 1, dtype=np.int32); lo_a[-1] = lo
-        ni_a = np.zeros(n + 1, dtype=np.int64); ni_a[-1] = len(run_ids)
-        # only CHANGED buckets reach this point (unchanged ones returned
-        # early with no state row), so the stamp is always the current
-        # epoch — the engine's delta write (filter epoch == current) writes
-        # exactly these rows and the read side keeps the latest per bucket
-        ep_a = np.zeros(n + 1, dtype=np.int32); ep_a[-1] = epoch
-        # write-once, content-addressed: retries/replays converge on the
-        # same name; only this metadata row crosses Arrow outbound
-        fname = segstore.write_segment(
-            store_root, bucket, seg_id, bloom_b, cuckoo_b, run_ids, run_hs
-        )
-        arrays += [
-            pa.array(seg_a), pa.array(lo_a), pa.array(ni_a), pa.array(ep_a),
-            pa.array([None] * n + [fname], type=pa.string()),
-        ]
-        return pa.Table.from_arrays(arrays, schema=_PA_OUT_META)
+        state_row = pa.Table.from_pylist([dict(zip(_META_COLS, row))], schema=_PA_OUT_META)
+        return pa.concat_tables([admitted, state_row])
 
     return fn
 
@@ -606,20 +593,8 @@ def revoke_seen(
             seen_ids, seen_hs = seg_keys(s)
             if not len(seen_ids):
                 continue
-            lo_i = np.searchsorted(seen_ids, q_ids, side="left")
-            hi_i = np.searchsorted(seen_ids, q_ids, side="right")
-            one = (hi_i - lo_i == 1)
-            del_idx = lo_i[one & (seen_hs[np.minimum(lo_i, len(seen_hs) - 1)] == q_hs)]
-            extra = []
-            for j in np.flatnonzero(hi_i - lo_i > 1):  # ultra-rare 60-bit collisions
-                m = np.flatnonzero(seen_hs[lo_i[j]:hi_i[j]] == q_hs[j])
-                if len(m):
-                    extra.append(lo_i[j] + m[0])
-            if len(extra):
-                del_idx = np.concatenate(
-                    [del_idx, np.asarray(extra, dtype=del_idx.dtype)]
-                )
-            del_idx = np.unique(del_idx)
+            pos = find_sorted_keys(seen_ids, seen_hs, q_ids, q_hs)
+            del_idx = np.unique(pos[pos >= 0])
             if not len(del_idx):
                 continue  # segment untouched: prior row carried JVM-side
             removed_ids = seen_ids[del_idx]
@@ -686,12 +661,8 @@ def merge_segments(seen_state: DataFrame, *, store_root: str) -> DataFrame:
             ids = np.zeros(0, dtype=np.int64)
             hs = np.zeros(0, dtype=np.int64)
             seg_id = 0
-        bloom_b, cuckoo_b = _build_run(ids, hs)
         epoch = int(rows["epoch"].to_numpy().max())
-        fname = segstore.write_segment(
-            store_root, bucket, seg_id, bloom_b, cuckoo_b, ids, hs
-        )
-        return _meta_table([(bucket, seg_id, 0, len(ids), epoch, fname)])
+        return _meta_table([_write_run(store_root, bucket, seg_id, 0, epoch, ids, hs)])
 
     return seen_state.groupBy("host_bucket").applyInArrow(fn, _META_SCHEMA)
 
@@ -716,18 +687,14 @@ def split_seen_state(
                 _bb, _cb, ids, hs = segstore.read_segment(store_root, row["file"])
                 for nb in range(row["host_bucket"], n_new, n_old):
                     sel = (ids % n_new) == nb
-                    sids, shs = ids[sel], hs[sel]
-                    bloom_b, cuckoo_b = _build_run(sids, shs)
                     # seg and lo pass through: sibling buckets inherit the
                     # parent's segment history (coverage intervals stay
                     # valid — each sibling got the same seg-id set), and
                     # later appends continue from the shared max seg
-                    fname = segstore.write_segment(
-                        store_root, nb, row["seg"], bloom_b, cuckoo_b, sids, shs
-                    )
-                    outs.append(
-                        (nb, row["seg"], row["lo"], len(sids), row["epoch"], fname)
-                    )
+                    outs.append(_write_run(
+                        store_root, nb, row["seg"], row["lo"], row["epoch"],
+                        ids[sel], hs[sel],
+                    ))
             yield from _meta_table(outs).to_batches()
 
     return seen_state.mapInArrow(fn, _META_SCHEMA)

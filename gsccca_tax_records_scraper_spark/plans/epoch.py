@@ -498,17 +498,22 @@ class CrawlEngine:
         # one action for all admission metrics (total + per-bucket)
         bucket_counts = _bucket_counts(new_rows)
         frontier = new_rows if carried is None else carried.unionByName(new_rows)
-        state, frontier, n_new = self._maybe_split(state, frontier, ep.epoch)
+        state, frontier, n_new = self._maybe_split(
+            state, frontier, ep.epoch, ep.n_buckets
+        )
         if n_new is not None:
             ep.meta["n_buckets"] = n_new
         return new_rows, bucket_counts, state, frontier
 
     def _maybe_split(
-        self, seen_state: DataFrame, frontier: DataFrame, epoch: int
+        self, seen_state: DataFrame, frontier: DataFrame, epoch: int,
+        n_old: int | None = None,
     ) -> tuple[DataFrame, DataFrame, int | None]:
-        """Double the bucket fan-out when any bucket's seen count crosses
-        split_threshold. State rows split locally from their segments' key
-        arrays; the frontier is re-bucketed JVM-side (a pure column rewrite).
+        """Double the bucket fan-out `n_old` (the committed one — an open
+        epoch's `ep.n_buckets`; None reads the manifest) when any bucket's
+        seen count crosses split_threshold. State rows split locally from
+        their segments' key arrays; the frontier is re-bucketed JVM-side (a
+        pure column rewrite).
         Returns (state', frontier', n_new | None). The caller stages n_new
         in `ep.meta`, visible at that epoch's commit — a crash or failure
         before commit leaves the old fan-out and old snapshots, so resume
@@ -517,7 +522,8 @@ class CrawlEngine:
         labeled by the bucketing that produced it)."""
         if not self.split_threshold:
             return seen_state, frontier, None
-        n_old = self._n_buckets()
+        if n_old is None:
+            n_old = self._n_buckets()
         # two triggers (SURVEY §4.1): a bucket's SEEN state outgrowing its
         # shard, or one host's PENDING backlog exceeding threshold-per-bucket
         # (the hot-host case — more buckets directly widens the politeness

@@ -191,3 +191,127 @@ def test_streaming_dedup_store_backend(spark, tmp_path):
     assert len(got) == len(set(got)) == 60
     # segment files exist; multi-micro-batch buckets stacked/absorbed runs
     assert any(f.endswith(".seg") for f in os.listdir(root))
+
+
+def _stream_synth_batches(spark, src, batches):
+    """Write each (start, n) slice of bench._synth_candidates as one JSON
+    source file, named so they drain in order one per trigger."""
+    import json
+
+    import bench
+
+    src.mkdir()
+    for i, (start, n) in enumerate(batches):
+        rows = bench._synth_candidates(spark, n, start=start).select(
+            "host_bucket", "url_id", "url"
+        ).collect()
+        (src / f"b{i}.json").write_text("\n".join(json.dumps(r.asDict()) for r in rows))
+    return (
+        spark.readStream.schema("host_bucket int, url_id long, url string")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+
+
+def _state_rows(spark, ckpt):
+    """The streaming dedup's state: every bucket's live seen_state rows."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.read.format("statestore").load(str(ckpt))
+        .select(F.explode("value.groupState.segs").alias("s")).select("s.*")
+    )
+
+
+def test_streaming_state_is_seen_state(spark, tmp_path, store_root):
+    """The streaming state rows ARE seen_state rows: same field names and
+    types as the batch table, and the batch dedup accepts them as its seen
+    set — every streamed url is a dup there, every fresh one admits."""
+    import bench
+
+    from gsccca_tax_records_scraper_spark.operators import dedup
+    from gsccca_tax_records_scraper_spark.sources.checkpoint import TABLES
+    from gsccca_tax_records_scraper_spark.streaming.stateful import streaming_dedup
+
+    stream = _stream_synth_batches(spark, tmp_path / "src", [(0, 300), (200, 300)])
+    ckpt = tmp_path / "ckpt"
+    q = (
+        streaming_dedup(stream, store_root=store_root)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("state_is_seen_state")
+        .option("checkpointLocation", str(ckpt))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.sql("SELECT url FROM state_is_seen_state").distinct().count() == 500
+
+    state = _state_rows(spark, ckpt)
+    assert [(f.name, f.dataType) for f in state.schema] == [
+        (f.name, f.dataType) for f in TABLES["seen_state"]
+    ]
+    rows = state.collect()
+    assert sum(r.n_items for r in rows) == 500
+    epoch = max(r.epoch for r in rows) + 1
+    cands = bench._synth_candidates(spark, 600)
+    new, _, handles = dedup.dedup_candidates(cands, state, epoch, store_root=store_root)
+    try:
+        got = {r.url for r in new.select("url").collect()}
+        fresh = {r.url for r in bench._synth_candidates(spark, 100, start=500).collect()}
+        assert got == fresh
+    finally:
+        for h in handles:
+            h.unpersist()
+
+
+def test_streaming_dedup_replay_is_exactly_once(spark, tmp_path, store_root):
+    """Micro-batch replay: drop the last batch's commit and restart, so the
+    stream re-runs that batch against the state it rolled back to. The
+    state rows and the segment files come out identical (the replayed run
+    converges on the same content-addressed file) and the sink holds each
+    url once."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from gsccca_tax_records_scraper_spark.streaming.stateful import streaming_dedup
+
+    stream = _stream_synth_batches(
+        spark, tmp_path / "src", [(0, 300), (200, 300), (400, 300)]
+    )
+    ckpt, out = tmp_path / "ckpt", tmp_path / "out"
+
+    def run():
+        q = (
+            streaming_dedup(stream, store_root=store_root)
+            .writeStream.outputMode("append").format("parquet")
+            .option("path", str(out))
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return [p["batchId"] for p in q.recentProgress]
+        finally:
+            q.stop()
+
+    def snapshot():
+        state = spark.read.format("statestore").load(str(ckpt)).select(
+            F.to_json(F.struct("key", "value"))
+        )
+        return (
+            sorted(r[0] for r in state.collect()),
+            sorted(f for f in os.listdir(store_root) if f.endswith(".seg")),
+        )
+
+    run()
+    before = snapshot()
+    last = max(int(f) for f in os.listdir(ckpt / "commits") if f.isdigit())
+    (ckpt / "commits" / str(last)).unlink()
+    (ckpt / "commits" / f".{last}.crc").unlink(missing_ok=True)
+    assert last in run()  # the restart re-ran the uncommitted batch
+    assert snapshot() == before
+    sink = spark.read.parquet(str(out))
+    assert sink.count() == sink.select(F.countDistinct("url")).first()[0] == 700
