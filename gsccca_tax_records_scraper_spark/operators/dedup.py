@@ -664,7 +664,16 @@ def merge_segments(seen_state: DataFrame, *, store_root: str) -> DataFrame:
         epoch = int(rows["epoch"].to_numpy().max())
         return _meta_table([_write_run(store_root, bucket, seg_id, 0, epoch, ids, hs)])
 
-    return seen_state.groupBy("host_bucket").applyInArrow(fn, _META_SCHEMA)
+    # the input is at most fan-out x MAX_SEGS metadata rows, so AQE would
+    # coalesce the groupBy's shuffle to ONE task and fold every bucket's
+    # segments one after another; an explicit-count repartition is never
+    # coalesced, and the groupBy reuses its hash partitioning
+    n = seen_state.sparkSession.sparkContext.defaultParallelism
+    return (
+        seen_state.repartition(n, "host_bucket")
+        .groupBy("host_bucket")
+        .applyInArrow(fn, _META_SCHEMA)
+    )
 
 
 def split_seen_state(

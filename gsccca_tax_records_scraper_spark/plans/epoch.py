@@ -507,13 +507,13 @@ class CrawlEngine:
 
     def _maybe_split(
         self, seen_state: DataFrame, frontier: DataFrame, epoch: int,
-        n_old: int | None = None,
+        n_old: int,
     ) -> tuple[DataFrame, DataFrame, int | None]:
         """Double the bucket fan-out `n_old` (the committed one — an open
-        epoch's `ep.n_buckets`; None reads the manifest) when any bucket's
-        seen count crosses split_threshold. State rows split locally from
-        their segments' key arrays; the frontier is re-bucketed JVM-side (a
-        pure column rewrite).
+        epoch's `ep.n_buckets`) when any bucket's seen count crosses
+        split_threshold. State rows split locally from their segments' key
+        arrays; the frontier is re-bucketed JVM-side (a pure column
+        rewrite).
         Returns (state', frontier', n_new | None). The caller stages n_new
         in `ep.meta`, visible at that epoch's commit — a crash or failure
         before commit leaves the old fan-out and old snapshots, so resume
@@ -522,8 +522,6 @@ class CrawlEngine:
         labeled by the bucketing that produced it)."""
         if not self.split_threshold:
             return seen_state, frontier, None
-        if n_old is None:
-            n_old = self._n_buckets()
         # two triggers (SURVEY §4.1): a bucket's SEEN state outgrowing its
         # shard, or one host's PENDING backlog exceeding threshold-per-bucket
         # (the hot-host case — more buckets directly widens the politeness

@@ -278,3 +278,24 @@ def test_checkpoint_reads_launch_no_job(spark, tmp_path):
         time.sleep(0.05)
     assert tr.getJobIdsForGroup(group + "-fence")
     assert list(tr.getJobIdsForGroup(group)) == []
+
+
+def test_fold_keeps_default_parallelism(spark, store_root):
+    """The fold groups at most fan-out x MAX_SEGS metadata rows, a shuffle
+    AQE would coalesce to ONE task that folds every bucket in turn. It
+    repartitions by host_bucket to defaultParallelism instead, an exchange
+    AQE keeps, and its groupBy adds no second one."""
+    from gsccca_tax_records_scraper_spark.operators import dedup
+    import bench
+
+    _new, state, h = dedup.dedup_candidates(
+        bench._synth_candidates(spark, 2000), None, 0, store_root=store_root
+    )
+    state = state.localCheckpoint()
+    for x in h:
+        x.unpersist()
+    folded = dedup.merge_segments(state, store_root=store_root)
+    assert explain(folded).count("hashpartitioning(host_bucket") == 1
+    # the executed (adaptive) plan's partition count: what AQE left
+    n = spark.sparkContext.defaultParallelism
+    assert folded._jdf.rdd().getNumPartitions() == n

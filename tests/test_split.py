@@ -76,7 +76,9 @@ def test_pending_backlog_triggers_split(spark, tmp_path):
         hh.unpersist()
     assert max(r.n_items for r in state.collect()) <= 50
     backlog = bench._synth_candidates(spark, 20_000)  # 20k pending, one host
-    state2, frontier2, n_new = eng._maybe_split(state, backlog, 1)
+    state2, frontier2, n_new = eng._maybe_split(
+        state, backlog, 1, urltools.N_HOST_BUCKETS
+    )
     assert n_new == 2 * urltools.N_HOST_BUCKETS
     assert state2.count() == n_new
     assert frontier2.select(F.max("host_bucket")).first()[0] >= urltools.N_HOST_BUCKETS
