@@ -38,13 +38,15 @@ speculative duplicates are idempotent by construction: a segment's name
 is derived from its content hash, so two attempts write identical bytes
 to the same name (the second sees it exists and skips).
 
-Filesystem reach: a plain path uses POSIX fast paths (tmp + atomic
-rename). A URI root (hdfs://, s3a://, file://, ...) routes through
-``pyarrow.fs`` — the Arrow-native filesystem bindings every executor
-already ships — so a cluster points the store at the same DFS as the
-checkpoint workdir with no code change (object stores lack atomic rename;
-write-once naming makes the direct write safe there: partial uploads are
-not visible under the final key on S3-semantics stores).
+Filesystem reach: every root, plain path or URI (file://, hdfs://, ...),
+resolves through ``pyarrow.fs`` (``resolve_root`` in
+sources/checkpoint.py, the checkpoint store's own resolution), the
+Arrow-native filesystem bindings every executor already ships; a scheme
+it cannot open (s3a:// is Hadoop's name, not Arrow's) is refused when the
+engine's checkpoint store is built. Writes go to a
+``<name>.tmp.<pid>@<host>`` file that is then moved onto the name; on
+object stores the move is copy+delete, which write-once naming makes
+safe (a reader never finds a partial file under the final name).
 """
 
 from __future__ import annotations
@@ -58,6 +60,9 @@ import time
 from collections import OrderedDict
 
 import numpy as np
+import pyarrow.fs as pafs
+
+from ..sources.checkpoint import resolve_root, write_atomic
 
 _MAGIC = b"GSEG1\n"
 _HEADER = struct.Struct("<6sQQQQ")  # magic + 4 payload lengths
@@ -100,10 +105,6 @@ def clear_cache() -> None:
 
 
 # ------------------------------------------------------------- filesystems
-def _is_uri(root: str) -> bool:
-    return "://" in root
-
-
 _PAFS_CACHE: dict[str, tuple] = {}
 _DIRS_MADE: set[str] = set()
 
@@ -114,63 +115,32 @@ def _pafs(root: str):
     probe on the hot dedup path against s3/hdfs store roots."""
     hit = _PAFS_CACHE.get(root)
     if hit is None:
-        import pyarrow.fs as pafs
-
-        hit = _PAFS_CACHE[root] = pafs.FileSystem.from_uri(root)
+        hit = _PAFS_CACHE[root] = resolve_root(root)
     return hit
 
 
 def _write_bytes_once(root: str, filename: str, data: bytes) -> None:
     """Write-once create: skip when the name exists (content-addressed names
-    mean the bytes are identical), atomic rename on POSIX, direct create on
-    URI stores (write-once keys are safe without rename semantics)."""
-    if _is_uri(root):
-        fs, base = _pafs(root)
-        import pyarrow.fs as pafs
-
-        # one create_dir RPC per root per worker process, not per segment
-        # write (an epoch emits one run per touched bucket)
-        if root not in _DIRS_MADE:
-            fs.create_dir(base, recursive=True)
-            _DIRS_MADE.add(root)
-        target = f"{base}/{filename}"
-        info = fs.get_file_info([target])[0]
-        if info.type != pafs.FileType.NotFound:
-            return
-        try:
-            with fs.open_output_stream(target) as f:
-                f.write(data)
-        except OSError:
-            # the memoized "dir exists" fact can go stale (workdir removed
-            # and recreated under a surviving worker): re-create and retry
-            # once before surfacing the error
-            _DIRS_MADE.discard(root)
-            fs.create_dir(base, recursive=True)
-            _DIRS_MADE.add(root)
-            with fs.open_output_stream(target) as f:
-                f.write(data)
-        return
-    os.makedirs(root, exist_ok=True)
-    target = os.path.join(root, filename)
-    if os.path.exists(target):
+    mean the bytes are identical), else write a
+    '<name>.tmp.<pid>@<host>' file and move it onto the name."""
+    fs, base = _pafs(root)
+    # one create_dir call per root per worker process, not per segment
+    # write (an epoch emits one run per touched bucket)
+    if root not in _DIRS_MADE:
+        fs.create_dir(base, recursive=True)
+        _DIRS_MADE.add(root)
+    target = f"{base}/{filename}"
+    if fs.get_file_info(target).type != pafs.FileType.NotFound:
         return
     tmp = f"{target}.tmp.{os.getpid()}@{socket.gethostname()}"
-    with open(tmp, "wb") as f:
-        f.write(data)
-    os.replace(tmp, target)
-
-
-def _listdir(root: str) -> list[str]:
-    if _is_uri(root):
-        import pyarrow.fs as pafs
-
-        fs, base = _pafs(root)
-        sel = pafs.FileSelector(base, allow_not_found=True)
-        return [info.base_name for info in fs.get_file_info(sel)]
     try:
-        return os.listdir(root)
-    except FileNotFoundError:
-        return []
+        write_atomic(fs, target, data, tmp)
+    except OSError:
+        # the memoized "dir exists" fact can go stale (workdir removed
+        # and recreated under a surviving worker): re-create and retry
+        # once before surfacing the error
+        fs.create_dir(base, recursive=True)
+        write_atomic(fs, target, data, tmp)
 
 
 def _pid_alive(pid: int) -> bool:
@@ -181,17 +151,6 @@ def _pid_alive(pid: int) -> bool:
     except PermissionError:
         return True
     return True
-
-
-def _delete(root: str, filename: str) -> None:
-    if _is_uri(root):
-        fs, base = _pafs(root)
-        fs.delete_file(f"{base}/{filename}")
-        return
-    try:
-        os.remove(os.path.join(root, filename))
-    except FileNotFoundError:
-        pass
 
 
 # ------------------------------------------------------------ segment I/O
@@ -260,10 +219,8 @@ def _cache_put(key, nbytes: int, value, count_miss: bool = True) -> None:
 
 
 def _open_reader(root: str, filename: str):
-    if _is_uri(root):
-        fs, base = _pafs(root)
-        return fs.open_input_file(f"{base}/{filename}")
-    return open(os.path.join(root, filename), "rb")
+    fs, base = _pafs(root)
+    return fs.open_input_file(f"{base}/{filename}")
 
 
 def read_segment_filters(root: str, filename: str):
@@ -319,11 +276,11 @@ def _tmp_grace_sec() -> float:
     return float(os.environ.get("SPARK_GRAFT_SEG_TMP_GRACE_SEC", "3600"))
 
 
-def _tmp_reclaimable(root: str, name: str) -> bool:
-    """Whether an orphaned '<seg>.tmp.<pid>@<host>' file is safe to delete.
-    Tmp names are only produced by plain-path writes, but a plain path may
-    be a SHARED mount (NFS) visible from several hosts, so a pid probe is
-    only meaningful when the writer's recorded host is this host. Rules:
+def _tmp_reclaimable(name: str, mtime: float) -> bool:
+    """Whether an orphaned '<seg>.tmp.<pid>@<host>' file, last modified at
+    `mtime` (epoch seconds), is safe to delete. A root may be SHARED (an
+    NFS mount, a DFS) by writers on several hosts, so a pid probe is only
+    meaningful when the writer's recorded host is this host. Rules:
       - same host: writer pid dead -> reclaim now; pid alive -> reclaim
         only past the grace age (a real writer finishes in seconds — an old
         file under a live pid is pid REUSE, not a live writer);
@@ -335,11 +292,7 @@ def _tmp_reclaimable(root: str, name: str) -> bool:
     pid_s, _, host = suffix.partition("@")
     if not pid_s.isdigit():
         return False
-    try:
-        age = time.time() - os.stat(os.path.join(root, name)).st_mtime
-    except OSError:
-        return False  # raced the writer's own os.replace — gone already
-    if age > _tmp_grace_sec():
+    if time.time() - mtime > _tmp_grace_sec():
         return True
     # within grace: only a same-host dead pid is provably abandoned
     same_host = (host == socket.gethostname()) if host else True
@@ -353,16 +306,21 @@ def gc_segments(root: str, referenced: set[str]) -> int:
     cheap, and keeps any still-listed history resumable). Orphans appear
     when a crash lands between file write and manifest commit, or when
     compaction/revocation retire a run's name."""
+    fs, base = _pafs(root)
     removed = 0
-    for name in _listdir(root):
-        if name.endswith(".seg") and name not in referenced:
-            _delete(root, name)
-            removed += 1
-        elif ".seg.tmp." in name:
-            # a worker killed between the tmp write and os.replace leaves
+    for info in fs.get_file_info(pafs.FileSelector(base, allow_not_found=True)):
+        name = info.base_name
+        if name.endswith(".seg"):
+            stale = name not in referenced
+        else:
+            # a worker killed between the tmp write and its move leaves
             # '<name>.seg.tmp.<pid>@<host>' behind; _tmp_reclaimable
-            # decides via pid probe (same host) or grace age (shared mount)
-            if _tmp_reclaimable(root, name):
-                _delete(root, name)
-                removed += 1
+            # decides via pid probe (same host) or grace age (shared root)
+            stale = ".seg.tmp." in name and _tmp_reclaimable(name, info.mtime.timestamp())
+        if stale:
+            try:
+                fs.delete_file(f"{base}/{name}")
+            except FileNotFoundError:
+                continue  # raced the writer's own move: gone already
+            removed += 1
     return removed

@@ -299,7 +299,7 @@ class CrawlEngine:
         split_threshold: int | None = None,
     ):
         self.spark = spark
-        self.store = CheckpointStore(workdir, spark)
+        self.store = CheckpointStore(workdir)
         self.epoch_seconds = epoch_seconds
         self.robots_rules = robots_rules if robots_rules is not None else default_robots()
         self.compact_every = compact_every
@@ -406,11 +406,6 @@ class CrawlEngine:
         it changed — per-epoch state I/O scales with the touched set)."""
         df = self.store.read_deltas(self.spark, "seen_state", upto_epoch)
         return None if df is None else self._latest_state_rows(df)
-
-    def _n_buckets(self) -> int:
-        """The COMMITTED host-bucket fan-out (manifest meta; splits take
-        effect at their epoch's commit)."""
-        return int(self.store.meta("n_buckets", urltools.N_HOST_BUCKETS))
 
     @contextmanager
     def _epoch(self, first: bool = False):

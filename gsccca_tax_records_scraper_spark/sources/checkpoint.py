@@ -33,14 +33,17 @@ as nullable — and refuse a drifted frame with a ValueError before any file
 is written. The check is what makes the declared read safe: a column a
 file lacks would otherwise read back as nulls instead of failing.
 
-Filesystem abstraction: plain paths use the local POSIX fast path; URI
-workdirs (hdfs://, s3a://, file://, ...) route the manifest/_SUCCESS/rename
-operations through the Hadoop FileSystem API reached over the session's JVM
-gateway (`spark._jvm`) — the same FileSystem the parquet reads/writes
-already use, so a 100-TB deployment points the store at its object store
-with no code change. Note on S3: rename is copy+delete there, so the
-manifest swap is last-writer-wins rather than atomic — single-writer (one
-driver per workdir) is the store's documented contract on object stores.
+Filesystem: every manifest, _SUCCESS and table-dir operation goes through
+`pyarrow.fs`, resolved once from the workdir (`resolve_root`: a URI as
+given, a plain path made absolute), the same resolution the segment store
+(operators/segstore.py) uses on the Python workers; parquet reads and
+writes go through Spark's own filesystem. A workdir whose scheme
+`pyarrow.fs` cannot open is refused at construction (`ValueError`): the
+workers could not reach its segment files either. Both stores write
+through `write_atomic` (tmp file, then `move` onto the final name). On
+object stores a move is copy+delete, so the manifest swap is
+last-writer-wins rather than atomic: one driver per workdir is the
+store's contract there.
 """
 
 from __future__ import annotations
@@ -51,6 +54,7 @@ import re
 from itertools import zip_longest
 from pathlib import Path
 
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, StructType
 
@@ -137,122 +141,47 @@ def _write_checked(table: str, df: DataFrame, path: str) -> None:
 _MANIFEST_RE = re.compile(r"^MANIFEST-(\d+)\.json$")
 
 
-class _PosixFS:
-    """Local-path operations (the fast path: no JVM round-trips)."""
-
-    def mkdirs(self, path: str) -> None:
-        Path(path).mkdir(parents=True, exist_ok=True)
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-    def read_text(self, path: str) -> str:
-        return Path(path).read_text()
-
-    def write_text_atomic(self, path: str, text: str) -> None:
-        tmp = Path(path + ".tmp")
-        tmp.write_text(text)
-        os.replace(tmp, path)
-
-    def listdir(self, path: str) -> list[str]:
-        try:
-            return os.listdir(path)
-        except FileNotFoundError:
-            return []
-
-    def delete(self, path: str) -> None:
-        try:
-            os.remove(path)
-        except FileNotFoundError:
-            pass
-
-    def delete_dir(self, path: str) -> None:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+def resolve_root(root: str | Path) -> tuple[pafs.FileSystem, str]:
+    """(filesystem, path on it) for a store root: a URI as given, a plain
+    path made absolute. Raises ValueError (pyarrow's ArrowInvalid) naming
+    a URI whose scheme pyarrow.fs cannot open."""
+    root = str(root)
+    return pafs.FileSystem.from_uri(root if "://" in root else os.path.abspath(root))
 
 
-class _HadoopFS:
-    """The same operations through org.apache.hadoop.fs.FileSystem — resolved
-    from the workdir URI's scheme via the session's Hadoop configuration, so
-    whatever connectors the cluster ships (hdfs, s3a, abfs, file) work."""
-
-    def __init__(self, spark: SparkSession, uri: str):
-        jvm = spark._jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path
-        self._fs = self._jpath(uri).getFileSystem(spark._jsc.hadoopConfiguration())
-        self._jvm = jvm
-
-    def mkdirs(self, path: str) -> None:
-        self._fs.mkdirs(self._jpath(path))
-
-    def exists(self, path: str) -> bool:
-        return bool(self._fs.exists(self._jpath(path)))
-
-    def read_text(self, path: str) -> str:
-        stream = self._fs.open(self._jpath(path))
-        try:
-            # readAllBytes avoids a per-byte py4j crawl; manifests are tiny
-            data = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        return data.decode("utf-8")
-
-    def write_text_atomic(self, path: str, text: str) -> None:
-        # the versioned-manifest protocol only ever renames onto FRESH
-        # names, so this is a plain create+rename — atomic on HDFS — with
-        # no delete-then-rename window (r3 ADVICE: delete+rename left a
-        # crash window with no manifest at all)
-        tmp = self._jpath(path + ".tmp")
-        out = self._fs.create(tmp, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-        dst = self._jpath(path)
-        if self._fs.exists(dst):
-            self._fs.delete(dst, False)
-        if not self._fs.rename(tmp, dst):
-            raise IOError(f"rename {path}.tmp -> {path} failed")
-
-    def listdir(self, path: str) -> list[str]:
-        p = self._jpath(path)
-        if not self._fs.exists(p):
-            return []
-        return [st.getPath().getName() for st in self._fs.listStatus(p)]
-
-    def delete(self, path: str) -> None:
-        self._fs.delete(self._jpath(path), False)
-
-    def delete_dir(self, path: str) -> None:
-        self._fs.delete(self._jpath(path), True)
+def write_atomic(fs: pafs.FileSystem, path: str, data: bytes, tmp: str) -> None:
+    """Write `data` to `tmp`, then move it onto `path`: readers see the old
+    file or the whole new one, never a partial write."""
+    with fs.open_output_stream(tmp, compression=None) as f:
+        f.write(data)
+    fs.move(tmp, path)
 
 
 class CheckpointStore:
-    def __init__(self, workdir: str | Path, spark: SparkSession | None = None):
-        self._is_uri = "://" in str(workdir)
-        if self._is_uri:
-            if spark is None:
-                raise ValueError(
-                    f"URI workdir {workdir!r} needs a SparkSession to reach the"
-                    " Hadoop FileSystem API: CheckpointStore(workdir, spark)"
-                )
-            self.workdir = str(workdir).rstrip("/")
-            self.fs: _PosixFS | _HadoopFS = _HadoopFS(spark, self.workdir)
-        else:
-            # keep a Path here: local callers (and tests) join with `/`
-            self.workdir = Path(workdir)
-            self.fs = _PosixFS()
-        self.fs.mkdirs(str(self.workdir))
+    def __init__(self, workdir: str | Path):
+        # a Path for plain workdirs (local callers and tests join with `/`),
+        # the URI string otherwise
+        self.workdir = str(workdir).rstrip("/") if "://" in str(workdir) else Path(workdir)
+        self._fs, self._base = resolve_root(self.workdir)
+        self._fs.create_dir(self._base, recursive=True)
+
+    def _file(self, rel: str) -> str:
+        """A workdir-relative path on the store's filesystem."""
+        return f"{self._base}/{rel}"
 
     def manifest_path(self, version: int) -> str:
-        return f"{self.workdir}/MANIFEST-{version}.json"
+        return self._file(f"MANIFEST-{version}.json")
+
+    def _exists(self, rels: list[str]) -> list[bool]:
+        infos = self._fs.get_file_info([self._file(r) for r in rels])
+        return [i.type != pafs.FileType.NotFound for i in infos]
 
     def _manifest_versions(self) -> list[int]:
         """Committed manifest versions, newest first."""
         out = []
-        for name in self.fs.listdir(str(self.workdir)):
-            m = _MANIFEST_RE.match(name)
+        sel = pafs.FileSelector(self._base, allow_not_found=True)
+        for info in self._fs.get_file_info(sel):
+            m = _MANIFEST_RE.match(info.base_name)
             if m:
                 out.append(int(m.group(1)))
         return sorted(out, reverse=True)
@@ -262,7 +191,8 @@ class CheckpointStore:
         shared read path, so every caller sees identical fallback and
         default-key semantics)."""
         try:
-            m = json.loads(self.fs.read_text(path))
+            with self._fs.open_input_file(path) as f:
+                m = json.loads(f.read())
         except (ValueError, OSError):
             return None
         m.setdefault("compacted", {})
@@ -280,7 +210,7 @@ class CheckpointStore:
             m = self._read_manifest_file(self.manifest_path(v))
             if m is not None:
                 return m
-        if self.fs.exists(f"{self.workdir}/MANIFEST.json"):
+        if self._exists(["MANIFEST.json"])[0]:
             raise ValueError(
                 f"{self.workdir} has only a pre-versioning MANIFEST.json; this"
                 " store reads MANIFEST-<v>.json manifests only — start a fresh"
@@ -327,10 +257,10 @@ class CheckpointStore:
         commits the epoch. Called when an epoch transaction opens, before
         its first write; parquet 'overwrite' mode only protects the tables
         the op itself writes."""
-        for table in TABLES:
-            p = self.table_path(table, epoch)
-            if self.fs.exists(p):
-                self.fs.delete_dir(p)
+        rels = [f"{table}/epoch={epoch}" for table in TABLES]
+        for rel, found in zip(rels, self._exists(rels)):
+            if found:
+                self._fs.delete_dir(self._file(rel))
 
     def write(self, table: str, epoch: int, df: DataFrame) -> None:
         _write_checked(table, df, self.table_path(table, epoch))
@@ -366,11 +296,9 @@ class CheckpointStore:
         if comp is not None and comp <= upto_epoch:
             paths.append(self.compacted_path(table, comp))
             start = comp + 1
-        paths += [
-            self.table_path(table, e)
-            for e in range(start, upto_epoch + 1)
-            if self.fs.exists(self.table_path(table, e) + "/_SUCCESS")
-        ]
+        epochs = range(start, upto_epoch + 1)
+        done = self._exists([f"{table}/epoch={e}/_SUCCESS" for e in epochs])
+        paths += [self.table_path(table, e) for e, ok in zip(epochs, done) if ok]
         if not paths:
             return None
         return spark.read.schema(schema).parquet(*paths)
@@ -415,13 +343,19 @@ class CheckpointStore:
         # commit = create the NEXT version under a fresh name (no moment
         # without a readable manifest), then prune superseded versions
         # best-effort, keeping one predecessor for torn-write fallback
-        self.fs.write_text_atomic(
-            self.manifest_path(v_new),
+        path = self.manifest_path(v_new)
+        write_atomic(
+            self._fs,
+            path,
             json.dumps(
                 {"epochs": sorted(epochs), "compacted": m["compacted"],
                  "meta": m["meta"]}
-            ),
+            ).encode(),
+            tmp=f"{path}.tmp",
         )
         for v in versions:
             if v <= v_new - 2:
-                self.fs.delete(self.manifest_path(v))
+                try:
+                    self._fs.delete_file(self.manifest_path(v))
+                except FileNotFoundError:
+                    pass

@@ -45,7 +45,7 @@ def run_streaming_crawl(
     query = (
         ticks.writeStream.foreachBatch(one_epoch)
         .trigger(processingTime=f"{tick_seconds} seconds")
-        .option("checkpointLocation", str(engine.store.workdir / "_stream_ckpt"))
+        .option("checkpointLocation", f"{engine.store.workdir}/_stream_ckpt")
         .start()
     )
     try:

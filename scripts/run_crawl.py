@@ -9,10 +9,12 @@ Cluster usage (north_star: multi-executor via --py-files):
         scripts/run_crawl.py --workdir /shared/crawl --seeds 0-158 \
         --epoch-seconds 400
 
-The workdir may be a driver-visible POSIX path (local or shared mount) or
-a Hadoop-FileSystem URI (hdfs://, s3a://, file://): CheckpointStore routes
-URI workdirs through the JVM Hadoop FileSystem API, with versioned
-MANIFEST.<n>.json files so the commit point is never absent mid-swap
+The workdir may be a path visible to the driver and the executors (local
+disk or a shared mount) or a URI that both pyarrow.fs and Spark open
+(file://, hdfs://): the checkpoint manifests and the segment files go
+through pyarrow.fs, the parquet tables through Spark. Hadoop's s3a:// is
+not a pyarrow.fs scheme and is refused at start. Manifests are versioned
+MANIFEST-<v>.json files, so the commit point is never absent mid-swap
 (see sources/checkpoint.py; exercised end-to-end by test_checkpoint_uri).
 
 Local sandbox usage:

@@ -82,7 +82,7 @@ def test_compaction_relabels_seen_exact_after_split(spark, tmp_path):
         spark, tmp_path / "rl", epoch_seconds=60.0, compact_every=2, split_threshold=2
     )
     eng.run(SEEDS)
-    n_new = eng._n_buckets()
+    n_new = eng.store.meta("n_buckets", urltools.N_HOST_BUCKETS)
     assert n_new > urltools.N_HOST_BUCKETS  # at least one split happened
     comp_epoch = eng.store.compacted_epoch("seen_exact")
     assert comp_epoch is not None

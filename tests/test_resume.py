@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from gsccca_tax_records_scraper_spark.functions import urltools
 from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
 
 SEEDS = [7]
@@ -131,7 +132,7 @@ def test_failed_split_commit_leaks_no_fanout(spark, tmp_path):
 
     eng = CrawlEngine(spark, tmp_path / "s", epoch_seconds=60.0, split_threshold=1)
     eng.bootstrap([1])
-    n_buckets = eng._n_buckets()
+    n_buckets = eng.store.meta("n_buckets", urltools.N_HOST_BUCKETS)
     commit = eng.store.commit
 
     def failing_commit(*args, **kwargs):
@@ -147,7 +148,7 @@ def test_failed_split_commit_leaks_no_fanout(spark, tmp_path):
     )
     assert staged.agg(F.max("host_bucket")).first()[0] >= n_buckets
     eng.fold_segments()
-    assert eng._n_buckets() == n_buckets
+    assert eng.store.meta("n_buckets", urltools.N_HOST_BUCKETS) == n_buckets
     state = eng._read_seen_state(eng.store.last_epoch()).collect()
     assert state
     for r in state:

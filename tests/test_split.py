@@ -129,7 +129,7 @@ def test_split_engine_grants_identical_schedule(spark, tmp_path):
     ea.run([3, 4])
     eb = CrawlEngine(spark, tmp_path / "split", epoch_seconds=60.0, split_threshold=2)
     eb.run([3, 4])
-    assert eb._n_buckets() > urltools.N_HOST_BUCKETS
+    assert eb.store.meta("n_buckets", urltools.N_HOST_BUCKETS) > urltools.N_HOST_BUCKETS
 
     def schedule(e):
         return [
@@ -149,10 +149,11 @@ def test_engine_split_e2e_seen_set_equality(spark, tmp_path):
     simulator's exactly; a fresh engine resumes under the new fan-out."""
     eng = CrawlEngine(spark, tmp_path / "c", epoch_seconds=60.0, split_threshold=2)
     eng.run([1, 2])
-    assert eng._n_buckets() > urltools.N_HOST_BUCKETS  # at least one split
+    n_buckets = eng.store.meta("n_buckets", urltools.N_HOST_BUCKETS)
+    assert n_buckets > urltools.N_HOST_BUCKETS  # at least one split
     sim = simulator.simulate_crawl([1, 2], epoch_seconds=60.0)
     assert {r.url for r in eng.seen().collect()} == sim.seen_urls
     # resume: fresh engine reads the committed fan-out, crawl is drained
     eng2 = CrawlEngine(spark, tmp_path / "c", epoch_seconds=60.0, split_threshold=2)
-    assert eng2._n_buckets() == eng._n_buckets()
+    assert eng2.store.meta("n_buckets", urltools.N_HOST_BUCKETS) == n_buckets
     assert eng2.run() == 0

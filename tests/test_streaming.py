@@ -3,6 +3,8 @@ metrics with watermark (T7)."""
 
 from __future__ import annotations
 
+import pytest
+
 from gsccca_tax_records_scraper_spark import simulator
 from gsccca_tax_records_scraper_spark.plans.epoch import CrawlEngine
 from gsccca_tax_records_scraper_spark.streaming.epoch_stream import run_streaming_crawl
@@ -12,9 +14,11 @@ from gsccca_tax_records_scraper_spark.streaming.windows import (
 )
 
 
-def test_streaming_crawl_matches_batch(spark, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+def test_streaming_crawl_matches_batch(spark, tmp_path, uri):
     seeds = [4]
-    eng = CrawlEngine(spark, tmp_path / "stream", epoch_seconds=60.0)
+    wd = f"file://{tmp_path}/stream" if uri else tmp_path / "stream"
+    eng = CrawlEngine(spark, wd, epoch_seconds=60.0)
     n = run_streaming_crawl(eng, seeds, tick_seconds=0.5)
     assert n >= 1
     sim = simulator.simulate_crawl(seeds, epoch_seconds=60.0)
