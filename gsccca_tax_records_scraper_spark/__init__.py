@@ -9,7 +9,7 @@ pyspark.sql DataFrames + vectorized pandas/Arrow UDFs over partitioned parquet
 Layout:
   sitegen      — deterministic synthetic GSCCCA site (serp + detail pages)
   functions/   — URL canonicalization + field-extraction library (SURVEY §2.8)
-  operators/   — dedup (exact + blocked-Bloom/cuckoo), politeness, scoring,
+  operators/   — dedup (exact + blocked-Bloom prefilter), politeness, scoring,
                  text dedup (minhash/simhash), similarity search (SURVEY §2)
   plans/       — epoch crawl driver with checkpoint/resume (SURVEY §3, T1-T6)
   sources/     — table readers/writers and checkpoint manifest

@@ -31,9 +31,8 @@ from pyspark.sql import functions as F
 # rides in the checkpoint manifest), so this is a starting point, not a cap.
 N_HOST_BUCKETS = 64
 
-# JS wrapper: fnSubmitThisForm('<href>')  (lien_index_scraper.py:455-467)
-JS_WRAPPER_RE = re.compile(r"fnSubmitThisForm\('([^']+)'\)")
-# anchors of both pipelines: JS-wrapped and plain hrefs
+# anchors of both pipelines: JS-wrapped (fnSubmitThisForm('<href>'),
+# lien_index_scraper.py:455-467) and plain hrefs
 HREF_RE = re.compile(
     r"""href=["'](?:javascript:fnSubmitThisForm\('([^']+)'\);?|([^"']+))["']"""
 )

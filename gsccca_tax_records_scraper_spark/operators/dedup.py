@@ -11,8 +11,8 @@ order (ordered-dict dedup realestate_index_scraper.py:474; drop_duplicates
                 host_bucket is a pure function of url_id, so every duplicate
                 of a url lands in the same group. A bucket's seen set is the
                 UNION of its live segments; each segment is an IMMUTABLE
-                sorted run — blocked-Bloom + cuckoo filter bytes (sized to
-                the run) PLUS the run's sorted exact key arrays (60-bit sha1
+                sorted run — blocked-Bloom filter bytes (32 bits/key, sized
+                to the run) PLUS the run's sorted exact key arrays (60-bit sha1
                 url_id + independent 64-bit xxhash64, packed int64 binary —
                 16 bytes/url, no row materialization). Inside (numpy over
                 Arrow, vectorized):
@@ -61,10 +61,10 @@ the worker that built it — so per-epoch Arrow/shuffle traffic is O(batch
 rows + touched-bucket metadata) in, O(admitted rows + one metadata row per
 changed bucket) out, regardless of the seen set's size (bench.py --growth
 evidences the near-flat epoch time as the seen set grows). Payload I/O is
-lazy at PART granularity: a probe loads only a segment's FILTERS (bloom +
-cuckoo, ~0.6 B/key — ~3% of a run's bytes) on first touch; the packed key
-arrays (16 B/key) load only when a bloom positive needs exact resolve or a
-tier merge absorbs the run — so a fresh-heavy epoch's read cost tracks the
+lazy at PART granularity: a probe loads only a segment's BLOOM (4 B/key —
+a fifth of a run's bytes) on first touch; the packed key arrays (16 B/key)
+load only when a bloom positive needs exact resolve or a tier merge
+absorbs the run — so a fresh-heavy epoch's read cost tracks the
 batch's hit count, not the history's size. New-run writes are O(new keys),
 LSM-amortized.
 
@@ -99,12 +99,12 @@ delta dirs have constant epoch stats), so an epoch's state I/O — Arrow,
 shuffle AND parquet — tracks the touched set on the way in and the NEW
 KEYS (amortized) on the way out.
 
-The decision remains exact w.r.t. the seen SET; the filters only skip work
-(a candidate must be bloom-positive AND cuckoo-positive before a segment's
-key arrays are pulled for the exact resolve), never claim "seen" on their
-own. The cuckoo additionally carries the deletion / recrawl-revocation
-capability (north_star): removing a url from a bloom is impossible, from
-the cuckoo it is an O(1) fingerprint delete.
+The decision remains exact w.r.t. the seen SET; the bloom only skips work
+(a candidate must be bloom-positive before a segment's key arrays are
+pulled for the exact resolve), never claims "seen" on its own. Deletion
+(recrawl revocation, north_star) needs no deletable filter: revoke_seen
+rewrites each touched segment from its remaining keys, with a bloom built
+for them.
 
 The `seen_exact` checkpoint table is still WRITTEN per epoch (export,
 lineage, and disaster rebuild all read it) but the hot dedup path no longer
@@ -130,7 +130,6 @@ _ORDER_COLS = [
     "crawl_order.link_order",
     "url_id",
 ]
-_FLAT_ORDER = ["co_depth", "co_seed_id", "co_page", "co_link_order", "url_id"]
 # the Arrow-crossing payload is SLIM: host, status and the three
 # derivable lineage fields (seed_id/depth always equal crawl_order's for a
 # freshly-discovered candidate, discovered_epoch is the admitting epoch) are
@@ -268,15 +267,15 @@ def _live_segments(right: pa.Table, store_root: str) -> list[dict]:
         if covered:
             continue  # superseded: same seg at an older epoch, or inside
             #           a newer row's (transitive) [lo, seg) coverage
-        # LAZY keys: only the probe prefilters (bloom + cuckoo, ~3% of a
-        # run's bytes) load here; the packed key arrays load through
+        # LAZY keys: only the probe prefilter (the bloom, a fifth of a
+        # run's bytes) loads here; the packed key arrays load through
         # seg_keys() the first time something actually needs them — exact
         # resolve of a bloom positive, a tier merge, revocation. A
         # fresh-heavy epoch therefore reads O(filters), not O(|seen|).
-        bloom_b, cuckoo_b, _ = segstore.read_segment_filters(store_root, files[i])
+        bloom_b, _ = segstore.read_segment_filters(store_root, files[i])
         segs.append(
-            {"seg": seg, "lo": lo, "bloom_b": bloom_b, "cuckoo_b": cuckoo_b,
-             "n": int(n_a[i]), "_keys_from": (store_root, files[i])}
+            {"seg": seg, "lo": lo, "bloom_b": bloom_b, "n": int(n_a[i]),
+             "_keys_from": (store_root, files[i])}
         )
     segs.reverse()  # seg-ascending (oldest first)
     return segs
@@ -293,19 +292,15 @@ def seg_keys(s: dict) -> tuple[np.ndarray, np.ndarray]:
 def probe_segments(segs: list[dict], q_ids: np.ndarray, q_hs: np.ndarray) -> np.ndarray:
     """Exact membership of (q_ids, q_hs) in the union of the segments:
     per-segment bloom prefilter (largest run first — most hits resolve
-    there and drop out of the later probes), cuckoo CONFIRM of the bloom
-    positives, then exact resolve against the segment's sorted key arrays.
+    there and drop out of the later probes), then exact resolve of the
+    bloom positives against the segment's sorted key arrays.
 
-    The cuckoo confirm is what makes the lazy key loading pay off on
-    fresh-heavy epochs: a bloom false positive alone would pull the
-    segment's full key arrays (16 B/key — ~97% of its bytes) off the
-    store; requiring both filters to agree drops the false-pull rate from
-    the bloom's ~1% to the product of the two. Sound because segments
-    have no cuckoo false negatives by construction: _build_run places
-    EVERY fingerprint (rebuild-doubled until none fail) and revocation
-    only deletes keys verified present in the exact arrays — same-
-    fingerprint copies within a bucket pair are interchangeable, so a
-    surviving key always keeps a findable copy."""
+    The bloom's width is what makes the lazy key loading pay off on
+    fresh-heavy epochs: a false positive pulls the segment's full key
+    arrays (16 B/key, four fifths of its bytes) off the store, and at
+    32 bits/key that happens about once in 60k (candidate, segment)
+    probes. Sound because a bloom has no false negatives: every segment's
+    bloom is built from exactly its keys (_write_run)."""
     seen = np.zeros(len(q_ids), dtype=bool)
     if not len(q_ids):
         return seen
@@ -317,11 +312,7 @@ def probe_segments(segs: list[dict], q_ids: np.ndarray, q_hs: np.ndarray) -> np.
         if not len(idx):
             break
         bloom = seenset.BlockedBloom.from_bytes(s["bloom_b"], mutable=False)
-        maybe = bloom.contains(q_ids[idx].view(np.uint64))
-        mi = idx[maybe]
-        if len(mi):
-            cuckoo = seenset.CuckooFilter.from_bytes(s["cuckoo_b"], mutable=False)
-            mi = mi[cuckoo.contains(q_ids[mi].view(np.uint64))]
+        mi = idx[bloom.contains(q_ids[idx].view(np.uint64))]
         if len(mi):
             seen_ids, seen_hs = seg_keys(s)
             fi = mi[find_sorted_keys(seen_ids, seen_hs, q_ids[mi], q_hs[mi]) >= 0]
@@ -371,35 +362,25 @@ def tier_absorb(sizes: list[int], n_new: int) -> int:
     return j
 
 
-def _build_run(ids: np.ndarray, hs: np.ndarray) -> tuple[bytes, bytes]:
-    """Bloom + cuckoo bytes for an immutable run, sized to exactly its keys
-    (segments are never inserted into after creation, so no overflow path).
-    The cuckoo must place EVERY fingerprint (revocation deletes depend on
-    them) — rebuild doubled until none fail."""
-    cap = max(len(ids), 64)
-    bloom = seenset.BlockedBloom.for_capacity(cap)
-    cuckoo = seenset.CuckooFilter.for_capacity(cap)
-    if len(ids):
-        bloom.insert(ids.view(np.uint64))
-        while cuckoo.insert(ids.view(np.uint64)):
-            cuckoo = seenset.CuckooFilter.for_capacity(
-                cuckoo.n_buckets * seenset.CuckooFilter.SLOTS * 2
-            )
-    bloom.n_items = len(ids)
-    return bloom.to_bytes(), cuckoo.to_bytes()
+def _build_run(ids: np.ndarray) -> bytes:
+    """Bloom bytes for an immutable run, sized to exactly its keys at
+    BITS_PER_KEY (segments are never inserted into after creation, so no
+    overflow path; the 64-key floor keeps tiny runs' FPR at the bound)."""
+    bloom = seenset.BlockedBloom.for_capacity(max(len(ids), 64))
+    bloom.insert(ids.view(np.uint64))
+    return bloom.to_bytes()
 
 
 def _write_run(
     store_root: str, bucket: int, seg: int, lo: int, epoch: int,
     ids: np.ndarray, hs: np.ndarray,
 ) -> tuple:
-    """Build a (canonically ordered) run's filters, write it to the store
+    """Build a (canonically ordered) run's bloom, write it to the store
     and return its _META_COLS metadata row. Write-once, content-addressed:
     retries and replays converge on the same file name. Every seen-set
-    writer except revocation (which keeps a segment's bloom capacity)
-    goes through here."""
-    bloom_b, cuckoo_b = _build_run(ids, hs)
-    fname = segstore.write_segment(store_root, bucket, seg, bloom_b, cuckoo_b, ids, hs)
+    writer goes through here: admission, the fold, the split and
+    revocation."""
+    fname = segstore.write_segment(store_root, bucket, seg, _build_run(ids), ids, hs)
     return (bucket, seg, lo, len(ids), epoch, fname)
 
 
@@ -554,12 +535,11 @@ def revoke_seen(
     re-scraping after clearing resume state (lien_index_scraper.py:114-128).
 
     `revoked` carries (host_bucket, url_id, url_h). Per matching SEGMENT,
-    the keys are deleted from its packed sorted arrays, the matching cuckoo
-    fingerprints take the O(1) delete the table is maintained for, and the
-    bloom — which cannot delete — is rebuilt from the segment's remaining
-    keys at the same capacity (deterministic bytes). Only segments that
-    actually lost a key re-serialize: the replacement row keeps its seg and
-    lo, so it supersedes per (bucket, seg) without disturbing the coverage
+    the keys are deleted from its packed sorted arrays and the segment is
+    rewritten from the remaining keys through _write_run, with a bloom
+    sized to them (deterministic bytes). Only segments that actually lost
+    a key re-serialize: the replacement row keeps its seg and lo, so it
+    supersedes per (bucket, seg) without disturbing the coverage
     intervals; untouched segments and buckets are carried JVM-side.
     Returns (full_snapshot, persisted) — callers unpersist `persisted`
     after consuming the snapshot; the engine's delta write (filter
@@ -597,28 +577,14 @@ def revoke_seen(
             del_idx = np.unique(pos[pos >= 0])
             if not len(del_idx):
                 continue  # segment untouched: prior row carried JVM-side
-            removed_ids = seen_ids[del_idx]
             keep = np.ones(len(seen_ids), dtype=bool)
             keep[del_idx] = False
-            seen_ids2, seen_hs2 = seen_ids[keep], seen_hs[keep]
-            # header-only peek: from_bytes would copy the whole filter
-            # buffer just to read its block count
-            old_n_blocks = int(
-                seenset.BlockedBloom.HEADER.unpack_from(s["bloom_b"])[0]
-            )
-            bloom = seenset.BlockedBloom(old_n_blocks)
-            if len(seen_ids2):
-                bloom.insert(seen_ids2.view(np.uint64))
-            bloom.n_items = len(seen_ids2)
-            cuckoo = seenset.CuckooFilter.from_bytes(s["cuckoo_b"])
-            cuckoo.delete(removed_ids.view(np.uint64))
             # new content -> new name; the row supersedes per (bucket, seg)
             # and the old file becomes a GC orphan
-            fname = segstore.write_segment(
-                store_root, bucket, s["seg"], bloom.to_bytes(),
-                cuckoo.to_bytes(), seen_ids2, seen_hs2,
-            )
-            outs.append((bucket, s["seg"], s["lo"], len(seen_ids2), epoch, fname))
+            outs.append(_write_run(
+                store_root, bucket, s["seg"], s["lo"], epoch,
+                seen_ids[keep], seen_hs[keep],
+            ))
         return _meta_table(outs)
 
     out = (
@@ -693,7 +659,7 @@ def split_seen_state(
         for batch in batches:
             outs = []
             for row in batch.to_pylist():
-                _bb, _cb, ids, hs = segstore.read_segment(store_root, row["file"])
+                _bloom_b, ids, hs = segstore.read_segment(store_root, row["file"])
                 for nb in range(row["host_bucket"], n_new, n_old):
                     sel = (ids % n_new) == nb
                     # seg and lo pass through: sibling buckets inherit the

@@ -5,7 +5,7 @@ state-store files on executor storage (HDFSBackedStateStore / RocksDB),
 checkpointed to a DFS — state never rides through the query's shuffles.
 This module gives the frontier dedup (operators/dedup.py) the same shape:
 
-  - segment PAYLOADS (bloom + cuckoo filter bytes and the packed sorted
+  - segment PAYLOADS (blocked-Bloom filter bytes and the packed sorted
     key arrays) live in CONTENT-ADDRESSED, WRITE-ONCE files under
     ``<workdir>/segments`` — written by the Python worker that built the
     run, read by the workers that probe it;
@@ -64,8 +64,10 @@ import pyarrow.fs as pafs
 
 from ..sources.checkpoint import resolve_root, write_atomic
 
-_MAGIC = b"GSEG1\n"
-_HEADER = struct.Struct("<6sQQQQ")  # magic + 4 payload lengths
+# Segment file layout: header, then the bloom bytes, the ids array and the
+# hs array (read_segment_filters checks the header against the file).
+_MAGIC = b"GSEG2\n"
+_HEADER = struct.Struct("<6sQQQ")  # magic + 3 payload lengths
 
 # ----------------------------------------------------------------- caching
 # One cache per Python WORKER PROCESS (module-level: survives across tasks
@@ -159,7 +161,6 @@ def write_segment(
     bucket: int,
     seg: int,
     bloom_b: bytes,
-    cuckoo_b: bytes,
     ids: np.ndarray,
     hs: np.ndarray,
 ) -> str:
@@ -168,13 +169,8 @@ def write_segment(
     speculative duplicates, and resume replays converge on the same name
     with identical bytes."""
     ids_b, hs_b = ids.tobytes(), hs.tobytes()
-    payload = (
-        _HEADER.pack(_MAGIC, len(bloom_b), len(cuckoo_b), len(ids_b), len(hs_b))
-        + bloom_b
-        + cuckoo_b
-        + ids_b
-        + hs_b
-    )
+    header = _HEADER.pack(_MAGIC, len(bloom_b), len(ids_b), len(hs_b))
+    payload = header + bloom_b + ids_b + hs_b
     digest = hashlib.sha256(payload).hexdigest()[:16]
     filename = f"b{bucket:05d}-s{seg:06d}-{digest}.seg"
     _write_bytes_once(root, filename, payload)
@@ -182,8 +178,8 @@ def write_segment(
     # prober of it next epoch (write-through keeps the first probe local)
     _cache_put(
         (root, filename, "filters"),
-        len(bloom_b) + len(cuckoo_b),
-        (bloom_b, cuckoo_b, (len(bloom_b), len(cuckoo_b), len(ids_b), len(hs_b))),
+        len(bloom_b),
+        (bloom_b, (len(bloom_b), len(ids_b), len(hs_b))),
         count_miss=False,
     )
     _cache_put(
@@ -224,24 +220,35 @@ def _open_reader(root: str, filename: str):
 
 
 def read_segment_filters(root: str, filename: str):
-    """(bloom_bytes, cuckoo_bytes, (n_bloom, n_cuckoo, n_ids, n_hs)) — the
-    probe prefilters plus the payload layout, WITHOUT the key arrays. The
-    dedup probe loads filters for every live segment but key arrays only
-    for segments with bloom-positive candidates, so a fresh-heavy epoch
-    reads O(filters) bytes, not O(|seen|) (the filters are ~3% of a run's
-    bytes at 16 B/key vs ~0.6 B/key of bloom+cuckoo)."""
+    """(bloom_bytes, (n_bloom, n_ids, n_hs)) — the probe prefilter plus the
+    payload layout, WITHOUT the key arrays. The dedup probe loads the bloom
+    of every live segment but key arrays only for segments with
+    bloom-positive candidates, so a fresh-heavy epoch reads O(filters)
+    bytes, not O(|seen|) (the bloom is 4 B/key against the key arrays'
+    16 B/key: a fifth of a run's bytes).
+
+    Raises ValueError naming the file when its magic is not this format's,
+    when its size differs from the header's lengths plus the header, or
+    when the ids and hs arrays differ in length: a truncated or foreign
+    file is refused here, before any array is built from it."""
     key = (root, filename, "filters")
     v = _cache_get(key)
     if v is not None:
         return v
     with _open_reader(root, filename) as f:
         hdr = f.read(_HEADER.size)
-        magic, n_bloom, n_cuckoo, n_ids, n_hs = _HEADER.unpack(hdr)
-        if magic != _MAGIC:
-            raise ValueError(f"segment {filename}: bad magic {magic!r}")
-        fb = f.read(n_bloom + n_cuckoo)
-    value = (fb[:n_bloom], fb[n_bloom:], (n_bloom, n_cuckoo, n_ids, n_hs))
-    _cache_put(key, len(fb), value)
+        if len(hdr) < _HEADER.size or hdr[:len(_MAGIC)] != _MAGIC:
+            raise ValueError(f"segment {filename}: bad magic {hdr[:len(_MAGIC)]!r}")
+        _magic, n_bloom, n_ids, n_hs = _HEADER.unpack(hdr)
+        size = f.size()
+        if _HEADER.size + n_bloom + n_ids + n_hs != size or n_ids != n_hs or n_ids % 8:
+            raise ValueError(
+                f"segment {filename}: {size} bytes do not match its header "
+                f"(bloom {n_bloom}, ids {n_ids}, hs {n_hs})"
+            )
+        bloom_b = f.read(n_bloom)
+    value = (bloom_b, (n_bloom, n_ids, n_hs))
+    _cache_put(key, n_bloom, value)
     return value
 
 
@@ -252,8 +259,8 @@ def read_segment_keys(root: str, filename: str) -> tuple[np.ndarray, np.ndarray]
     v = _cache_get(key)
     if v is not None:
         return v
-    _, _, (n_bloom, n_cuckoo, n_ids, n_hs) = read_segment_filters(root, filename)
-    off = _HEADER.size + n_bloom + n_cuckoo
+    _, (n_bloom, n_ids, n_hs) = read_segment_filters(root, filename)
+    off = _HEADER.size + n_bloom
     with _open_reader(root, filename) as f:
         f.seek(off)
         data = f.read(n_ids + n_hs)
@@ -264,12 +271,12 @@ def read_segment_keys(root: str, filename: str) -> tuple[np.ndarray, np.ndarray]
     return value
 
 
-def read_segment(root: str, filename: str) -> tuple[bytes, bytes, np.ndarray, np.ndarray]:
-    """(bloom_bytes, cuckoo_bytes, ids, hs) for a stored run, through the
-    process-level LRU. Arrays are read-only views over the cached buffer."""
-    bloom_b, cuckoo_b, _ = read_segment_filters(root, filename)
+def read_segment(root: str, filename: str) -> tuple[bytes, np.ndarray, np.ndarray]:
+    """(bloom_bytes, ids, hs) for a stored run, through the process-level
+    LRU. Arrays are read-only views over the cached buffer."""
+    bloom_b, _ = read_segment_filters(root, filename)
     ids, hs = read_segment_keys(root, filename)
-    return bloom_b, cuckoo_b, ids, hs
+    return bloom_b, ids, hs
 
 
 def _tmp_grace_sec() -> float:

@@ -294,17 +294,23 @@ def _argmax_cell_col(vec: Column, cents: list[list[float]]) -> Column:
     """Index of the max-dot-product centroid for `vec` — the assignment
     expression shared by ivf_topk's cell column and the distributed Lloyd
     trainer. Centroids ride as broadcast literals (the table is tiny by
-    construction), so assignment is pure whole-stage-codegen arithmetic."""
-    best_id, best_val = None, None
-    for i, c in enumerate(cents):
-        d = dot_col(vec, F.array(*[F.lit(float(x)) for x in c]))
-        if best_id is None:
-            best_id, best_val = F.lit(i), d
-        else:
-            cond = d > best_val
-            best_id = F.when(cond, F.lit(i)).otherwise(best_id)
-            best_val = F.when(cond, d).otherwise(best_val)
-    return best_id.cast("int")
+    construction), so assignment is pure whole-stage-codegen arithmetic.
+
+    One array of (dot, -index) structs and its array_max: the expression
+    holds each dot product once, so it grows linearly in n_cells. The max
+    orders by dot, NaN above every number as in Spark's `>`, and a tie goes
+    to the larger -index, so the FIRST maximal cell wins. A null embedding
+    makes every dot null; nulls order first, so it gets cell 0."""
+    scored = F.array(
+        *[
+            F.struct(
+                dot_col(vec, F.array(*[F.lit(float(x)) for x in c])).alias("d"),
+                F.lit(-i).alias("neg_cell"),
+            )
+            for i, c in enumerate(cents)
+        ]
+    )
+    return (-F.array_max(scored).getField("neg_cell")).cast("int")
 
 
 def train_ivf_centroids_full(

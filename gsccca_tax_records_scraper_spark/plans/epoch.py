@@ -731,9 +731,9 @@ class CrawlEngine:
         """Recrawl revocation (north_star deletion capability; reference
         analog: re-scraping after clearing resume state,
         lien_index_scraper.py:114-128). Commits an epoch that removes `urls`
-        from the seen set — cuckoo fingerprint O(1) delete, bloom rebuilt
-        from the bucket's remaining keys, packed key arrays pruned — so the
-        NEXT discovery of any of them (outlink or reseed) is admitted again.
+        from the seen set — each touched segment is rewritten from its
+        remaining keys, with a bloom built for them — so the NEXT
+        discovery of any of them (outlink or reseed) is admitted again.
         Urls never seen are no-ops. The revocation is lineage-tracked in the
         `revoked` delta table (a seen_exact rebuild = seen_exact minus
         revoked, last-wins by epoch)."""

@@ -1,6 +1,6 @@
 """Streaming URL-seen dedup: applyInPandasWithState (SURVEY §2.9 T2/T3).
 
-The batch engine carries the blocked-Bloom + cuckoo seen set through epoch
+The batch engine carries the blocked-Bloom-filtered seen set through epoch
 checkpoint tables. This module is the same operator as a CUSTOM STATEFUL
 STREAMING operator (north_star asks for Structured Streaming equivalents):
 candidate URLs arrive on a stream, state is the per-host_bucket live

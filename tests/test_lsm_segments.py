@@ -134,8 +134,8 @@ def test_live_segments_transitive_coverage(store_root):
 
     def row(seg, lo, epoch, tag):
         ids = np.array([tag], dtype=np.int64)
-        bloom_b, cuckoo_b = dedup._build_run(ids, ids)
-        fname = segstore.write_segment(store_root, 0, seg, bloom_b, cuckoo_b, ids, ids)
+        bloom_b = dedup._build_run(ids)
+        fname = segstore.write_segment(store_root, 0, seg, bloom_b, ids, ids)
         return (0, seg, lo, 1, epoch, fname)
 
     rows = [

@@ -29,7 +29,8 @@ def _rev_df(spark, urls, n_buckets=urltools.N_HOST_BUCKETS):
 def test_revoke_seen_operator(spark, store_root):
     """Unit level: revoke N of M seen urls -> exactly those become
     re-admittable, all other urls stay seen, untouched buckets carry
-    verbatim, cuckoo fingerprints of the removed keys are gone."""
+    verbatim, and the rewritten segment's bloom covers its remaining
+    keys."""
     c1 = bench._synth_candidates(spark, 10_000)
     new1, state1, h1 = dedup.dedup_candidates(c1, None, 0, store_root=store_root)
     state1 = state1.localCheckpoint()
@@ -54,16 +55,17 @@ def test_revoke_seen_operator(spark, store_root):
     assert got == set(victims)
     for h in h3:
         h.unpersist()
-    # cuckoo fingerprints of removed keys are deleted (spot-check a bucket)
+    # the rewritten segment drops the victim, and its bloom is built for
+    # exactly its remaining keys (spot-check a bucket)
     vrow = rev.orderBy("url_id").first()
     st = {r.host_bucket: r for r in snap.collect()}
     row = st[int(vrow.host_bucket)]
-    _bloom_b, cuckoo_b, ids, _hs = segstore.read_segment(store_root, row.file)
-    cf = seenset.CuckooFilter.from_bytes(cuckoo_b)
+    bloom_b, ids, _hs = segstore.read_segment(store_root, row.file)
+    bloom = seenset.BlockedBloom.from_bytes(bloom_b)
     assert int(vrow.url_id) not in ids
-    # every REMAINING key is still in the cuckoo (no collateral deletes)
+    assert bloom.n_items == len(ids) == row.n_items
     if len(ids):
-        assert cf.contains(ids.view(np.uint64)).all()
+        assert bloom.contains(ids.view(np.uint64)).all()
     # revoking a never-seen url is a no-op (no bucket changes)
     rev2 = _rev_df(spark, ["https://search.gsccca.org/nope?id=999999999"])
     snap2, h4 = dedup.revoke_seen(snap, rev2, 3, store_root=store_root)

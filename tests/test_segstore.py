@@ -32,23 +32,23 @@ def _mk_arrays(n, seed):
 def test_roundtrip_idempotent_and_cached(tmp_path):
     root = str(tmp_path / "segs")
     ids, hs = _mk_arrays(1000, 1)
-    bloom_b, cuckoo_b = dedup._build_run(ids, hs)
+    bloom_b = dedup._build_run(ids)
     segstore.clear_cache()
-    name = segstore.write_segment(root, 7, 3, bloom_b, cuckoo_b, ids, hs)
+    name = segstore.write_segment(root, 7, 3, bloom_b, ids, hs)
     assert name.startswith("b00007-s000003-") and name.endswith(".seg")
     # rewrite converges on the same name and leaves one file (retry/replay
     # idempotency: content-addressed write-once)
-    assert segstore.write_segment(root, 7, 3, bloom_b, cuckoo_b, ids, hs) == name
+    assert segstore.write_segment(root, 7, 3, bloom_b, ids, hs) == name
     assert os.listdir(root) == [name]
-    b2, c2, i2, h2 = segstore.read_segment(root, name)
-    assert b2 == bloom_b and c2 == cuckoo_b
+    b2, i2, h2 = segstore.read_segment(root, name)
+    assert b2 == bloom_b
     assert (i2 == ids).all() and (h2 == hs).all()
     st = segstore.cache_stats()
     # write-through populated the cache: the read above was a hit
     assert st["hits"] >= 1 and st["entries"] >= 1
     # a cold process (cleared cache) reads the same bytes from disk
     segstore.clear_cache()
-    b3, _c3, i3, _h3 = segstore.read_segment(root, name)
+    b3, i3, _h3 = segstore.read_segment(root, name)
     assert b3 == bloom_b and (i3 == ids).all()
     # the cache is PART-granular (filters / keys load independently so
     # probes can skip key bytes): a cold whole read = two misses
@@ -62,8 +62,8 @@ def test_lru_byte_budget_evicts(tmp_path, monkeypatch):
     names = []
     for b in range(12):  # ~200 KB payload each -> ~2.4 MB total
         ids, hs = _mk_arrays(12_000, b)
-        bloom_b, cuckoo_b = dedup._build_run(ids, hs)
-        names.append(segstore.write_segment(root, b, 0, bloom_b, cuckoo_b, ids, hs))
+        bloom_b = dedup._build_run(ids)
+        names.append(segstore.write_segment(root, b, 0, bloom_b, ids, hs))
     st = segstore.cache_stats()
     assert st["bytes"] <= 1 << 20
     assert st["entries"] < 12  # oldest evicted
@@ -71,6 +71,55 @@ def test_lru_byte_budget_evicts(tmp_path, monkeypatch):
     for name in names:
         segstore.read_segment(root, name)
     segstore.clear_cache()
+
+
+def test_truncated_segment_refused(tmp_path):
+    """A segment file whose size disagrees with its header's lengths (cut
+    short by one byte) or whose ids and hs lengths differ is refused, read
+    cold, with an error naming the file, not a numpy reshape error."""
+    root = str(tmp_path / "segs")
+    ids, hs = _mk_arrays(300, 5)
+    name = segstore.write_segment(root, 3, 0, dedup._build_run(ids), ids, hs)
+    path = os.path.join(root, name)
+    with open(path, "rb") as f:
+        data = f.read()
+    with open(path, "wb") as f:
+        f.write(data[:-1])
+    segstore.clear_cache()  # write_segment pre-fills the cache
+    with pytest.raises(ValueError, match=name):
+        segstore.read_segment(root, name)
+    segstore.clear_cache()
+    with pytest.raises(ValueError, match=name):
+        segstore.read_segment_keys(root, name)
+    # same total size, but the header moves 8 bytes from hs to ids
+    magic, n_bloom, n_ids, n_hs = segstore._HEADER.unpack_from(data)
+    skewed = segstore._HEADER.pack(magic, n_bloom, n_ids + 8, n_hs - 8)
+    with open(path, "wb") as f:
+        f.write(skewed + data[segstore._HEADER.size:])
+    segstore.clear_cache()
+    with pytest.raises(ValueError, match=name):
+        segstore.read_segment(root, name)
+    segstore.clear_cache()
+
+
+def test_gseg1_segment_refused(tmp_path):
+    """A segment in the previous format (magic GSEG1, a second filter
+    section) is refused by its magic, naming the file."""
+    import struct
+
+    root = tmp_path / "segs"
+    root.mkdir()
+    ids, hs = _mk_arrays(100, 6)
+    bloom_b, second_b = dedup._build_run(ids), bytes(512)
+    ids_b, hs_b = ids.tobytes(), hs.tobytes()
+    header = struct.pack(
+        "<6sQQQQ", b"GSEG1\n", len(bloom_b), len(second_b), len(ids_b), len(hs_b)
+    )
+    name = "b00001-s000000-0123456789abcdef.seg"
+    (root / name).write_bytes(header + bloom_b + second_b + ids_b + hs_b)
+    segstore.clear_cache()
+    with pytest.raises(ValueError, match=name):
+        segstore.read_segment(str(root), name)
 
 
 def test_store_matches_keep_first_reference(spark, store_root):
@@ -188,10 +237,10 @@ def test_uri_root_via_pyarrow(tmp_path):
     """file:// URI roots route through pyarrow.fs (the cluster DFS path)."""
     root = f"file://{tmp_path}/segs"
     ids, hs = _mk_arrays(500, 9)
-    bloom_b, cuckoo_b = dedup._build_run(ids, hs)
-    name = segstore.write_segment(root, 1, 0, bloom_b, cuckoo_b, ids, hs)
+    bloom_b = dedup._build_run(ids)
+    name = segstore.write_segment(root, 1, 0, bloom_b, ids, hs)
     segstore.clear_cache()
-    b2, _c2, i2, _h2 = segstore.read_segment(root, name)
+    b2, i2, _h2 = segstore.read_segment(root, name)
     assert b2 == bloom_b and (i2 == ids).all()
     # GC over the URI listing
     removed = segstore.gc_segments(root, set())
@@ -248,8 +297,8 @@ def test_gc_reclaims_dead_pid_tmp_files(tmp_path):
 
     root = str(tmp_path / "segs")
     ids, hs = _mk_arrays(200, 3)
-    bloom_b, cuckoo_b = dedup._build_run(ids, hs)
-    name = segstore.write_segment(root, 2, 0, bloom_b, cuckoo_b, ids, hs)
+    bloom_b = dedup._build_run(ids)
+    name = segstore.write_segment(root, 2, 0, bloom_b, ids, hs)
 
     dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
                           capture_output=True, text=True, check=True)
@@ -323,12 +372,12 @@ def test_uri_write_recreates_removed_root(tmp_path):
 
     root = f"file://{tmp_path}/segs"
     ids, hs = _mk_arrays(100, 11)
-    bloom_b, cuckoo_b = dedup._build_run(ids, hs)
-    segstore.write_segment(root, 1, 0, bloom_b, cuckoo_b, ids, hs)
+    bloom_b = dedup._build_run(ids)
+    segstore.write_segment(root, 1, 0, bloom_b, ids, hs)
     shutil.rmtree(tmp_path / "segs")
     ids2, hs2 = _mk_arrays(100, 12)
-    bloom2, cuckoo2 = dedup._build_run(ids2, hs2)
-    name2 = segstore.write_segment(root, 1, 1, bloom2, cuckoo2, ids2, hs2)
+    bloom2 = dedup._build_run(ids2)
+    name2 = segstore.write_segment(root, 1, 1, bloom2, ids2, hs2)
     segstore.clear_cache()
-    _b, _c, i2, _h = segstore.read_segment(root, name2)
+    _b, i2, _h = segstore.read_segment(root, name2)
     assert (i2 == ids2).all()

@@ -131,6 +131,70 @@ def test_distributed_lloyd_refinement(spark):
     assert all(np.isfinite(c).all() for c in np.array(wide))
 
 
+def _chained_argmax_cell_col(vec, cents):
+    """The former cell assignment, kept as the reference: a `when` chain
+    that copies the running best dot into both branches at every cell."""
+    best_id, best_val = None, None
+    for i, c in enumerate(cents):
+        d = similarity.dot_col(vec, F.array(*[F.lit(float(x)) for x in c]))
+        if best_id is None:
+            best_id, best_val = F.lit(i), d
+        else:
+            cond = d > best_val
+            best_id = F.when(cond, F.lit(i)).otherwise(best_id)
+            best_val = F.when(cond, d).otherwise(best_val)
+    return best_id.cast("int")
+
+
+def test_argmax_cell_matches_chained_form(spark):
+    """The array_max cell assignment picks the same cell as the chained
+    `when` form on ties (first cell wins), NaN and infinite components,
+    a zero vector, a null component and a null embedding (cell 0)."""
+    import numpy as np
+
+    rs = np.random.RandomState(5)
+    cents = rs.normal(size=(6, 4))
+    cents[4] = cents[1]  # exact duplicate: every tie on cell 1 vs 4
+    cents = cents.tolist()
+    nan, inf = float("nan"), float("inf")
+    vecs = [[float(x) for x in v] for v in rs.normal(size=(40, 4))] + [
+        cents[1],                    # tie between cells 1 and 4
+        [0.0, 0.0, 0.0, 0.0],        # every dot 0.0
+        [-0.0, 0.0, -0.0, 0.0],
+        [nan, 1.0, 0.0, 0.0],        # every dot NaN
+        [inf, 0.0, 0.0, 0.0],        # +inf / -inf dots
+        [inf, -inf, 0.0, 0.0],       # NaN and infinite dots mixed
+        [1.0, None, 0.0, 0.0],       # null component: every dot null
+        None,                        # null embedding
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "i int, v array<double>"
+    )
+    got = df.select(
+        "i",
+        similarity._argmax_cell_col(F.col("v"), cents).alias("new"),
+        _chained_argmax_cell_col(F.col("v"), cents).alias("old"),
+    ).collect()
+    assert len(got) == len(vecs)
+    for r in got:
+        assert r.new == r.old, (r.i, vecs[r.i], r.new, r.old)
+    by_i = {r.i: r.new for r in got}
+    assert by_i[40] == 1 and by_i[41] == 0 and by_i[len(vecs) - 1] == 0
+
+
+def test_argmax_cell_expression_linear_in_cells(spark):
+    """Expression size grows linearly with n_cells: 4x the cells, about 4x
+    the expression text (the chained form doubled it per cell). The slack
+    over 4x covers the cell-index literals growing a digit."""
+
+    def size(n):
+        cents = [[0.5] * 8] * n
+        return len(str(similarity._argmax_cell_col(F.col("v"), cents)))
+
+    s8, s32 = size(8), size(32)
+    assert s32 <= 4.2 * s8, (s8, s32)
+
+
 def test_neardup_pairs_properties(emb):
     """Every reported pair is ordered, unique, and truly >= threshold;
     the candidate pruning never invents a pair that brute force (same

@@ -30,7 +30,7 @@ def test_split_preserves_membership_and_halves_buckets(spark, store_root):
     # rebuilt filters contain exactly the bucket's keys
     total = 0
     for r in rows:
-        bloom_b, _cuckoo_b, ids, _hs = segstore.read_segment(store_root, r.file)
+        bloom_b, ids, _hs = segstore.read_segment(store_root, r.file)
         total += len(ids)
         assert (ids % (n_old * 2) == r.host_bucket).all()
         assert (np.diff(ids) >= 0).all()
